@@ -38,16 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 SparkBuilder = Callable[[SparkSession, str], DataFrame]
 
-# The build round this working tree belongs to — bumped once per round,
-# in the same commit that rewrites _VERIFY_FIRST. The parity/robustness/
-# plan-sweep rotations key on THIS constant (ADVICE r12: the old key —
-# len(glob('CORRECTNESS_r*.json')) — counted untracked files, so the
-# driver writing the new round's file mid-round silently flipped which
-# suite half ran between two local runs of the same commit, making
-# "value-matched before every commit" run-order-dependent).
-ROUND = 14
-
-
 @dataclass(frozen=True)
 class QuerySpec:
     name: str
@@ -282,11 +272,8 @@ def headline_names() -> list[str]:
 # sweep. The verify queue is therefore the whole catalog again: the
 # prioritized head above (the driver's time-budgeted correctness run
 # samples the FRONT of the queue), followed by every remaining
-# registered query in name order. Locally validated with the FULL
-# parity sweep (SPARK_GRAFT_FULL_PARITY=1) plus a hostile-session
-# driver replay of all 308 queries; queue membership here makes the
-# in-suite parity and scale rotations sweep everything too for the
-# rest of the round.
+# registered query in name order. Locally validated with the full
+# parity sweep plus a hostile-session replay of all 308 queries.
 _VERIFY_FIRST: tuple[str, ...] = _VERIFY_HEAD + tuple(
     n for n in sorted(all_specs()) if n not in set(_VERIFY_HEAD)
 )

@@ -14,6 +14,14 @@ NotImplementedError for containers that need external codec libs (video,
 other image/audio codecs), with a deterministic fake featurizer
 standing in for those paths; the Spark-side contract — schema, batch
 iteration, fan-out shape, partitioning — is real and tested either way.
+Every pandas stage is a per-row function run through ``tables.map_rows``.
+
+Corpus contract: the document-text stages (m7-m14) build their media from
+each document's ``text.encode()`` bytes, while their oracles count code
+points (``ascii``/``substring``). The two agree only on ASCII text, so
+:func:`_map_documents`, the one adapter those stages share, asserts it
+per document: a multi-byte corpus fails loudly in the stage, not as a
+confusing value mismatch against the oracle.
 
 Scale notes (100 TB of media): binary columns ride normal parquet row
 groups, so filters on the *metadata* columns prune scans without touching
@@ -25,7 +33,7 @@ rows executor-side, before any shuffle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +41,7 @@ from pyspark.sql import functions as F
 
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.llm.text import CHUNK_ORACLE as _CHUNK_ORACLE_REF
-from mric_bak_etl_spark.tables import load_table, spread
+from mric_bak_etl_spark.tables import load_table, map_rows, spread
 
 _MEDIA_TYPES = ["image", "audio", "video"]
 
@@ -741,21 +749,11 @@ def _fake_features(payload: bytes) -> list[float]:
     return out
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {k: [] for k in ("media_id", "media_type", "n_bytes", "mean_byte", "features")}
-        for mid, content, mtype in zip(pdf["media_id"], pdf["content"], pdf["media_type"]):
-            payload = bytes(content)
-            rows["media_id"].append(mid)
-            rows["media_type"].append(mtype)
-            rows["n_bytes"].append(len(payload))
-            # Raw double; F.round quantizes in the projection (see
-            # _fake_features on why Python round() must not run here).
-            rows["mean_byte"].append(
-                sum(payload) / max(len(payload), 1) / 255.0
-            )
-            rows["features"].append(_fake_features(payload))
-        yield pd.DataFrame(rows)
+def _extract_row(mid: int, payload: bytes, mtype: str) -> Iterator[tuple]:
+    # Raw double; F.round quantizes in the projection (see
+    # _fake_features on why Python round() must not run here).
+    mean = sum(payload) / max(len(payload), 1) / 255.0
+    yield mid, mtype, len(payload), mean, _fake_features(payload)
 
 
 @register(
@@ -779,7 +777,7 @@ def feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread before the Python stage: repartitioning ahead of an expensive
     # UDF is the canonical cluster idiom, and the single-row-group input
     # would otherwise featurize in one task (tables.spread).
-    feats = spread(m).mapInPandas(_extract_batches, schema=FEATURE_SCHEMA)
+    feats = map_rows(spread(m), _extract_row, FEATURE_SCHEMA)
     # feature_sum rounds at the SAME 6dp scale as the addends: a sum of
     # 6dp multiples re-rounded at a coarser scale lands exactly on
     # .xxxx5 decimal boundaries, where Spark (shortest-repr HALF_UP)
@@ -959,18 +957,11 @@ _FRAME_SIZE = 64  # bytes per fake "frame"
 _FRAME_STRIDE = 4  # sample every 4th frame
 
 
-def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"media_id": [], "frame_no": [], "frame_bytes": []}
-        for mid, content in zip(pdf["media_id"], pdf["content"]):
-            payload = bytes(content)
-            n_frames = max(len(payload) // _FRAME_SIZE, 1)
-            for frame_no in range(0, n_frames, _FRAME_STRIDE):
-                chunk = payload[frame_no * _FRAME_SIZE : (frame_no + 1) * _FRAME_SIZE]
-                out["media_id"].append(mid)
-                out["frame_no"].append(frame_no)
-                out["frame_bytes"].append(len(chunk))
-        yield pd.DataFrame(out)
+def _sample_row(mid: int, payload: bytes) -> Iterator[tuple]:
+    n_frames = max(len(payload) // _FRAME_SIZE, 1)
+    for frame_no in range(0, n_frames, _FRAME_STRIDE):
+        chunk = payload[frame_no * _FRAME_SIZE : (frame_no + 1) * _FRAME_SIZE]
+        yield mid, frame_no, len(chunk)
 
 
 @register(
@@ -991,12 +982,30 @@ def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = media_table(spark, sf_dir).select("media_id", "content")
     # spread: same rationale as m2 — parallelize the Python fan-out stage.
-    frames = spread(m, "media_id").mapInPandas(_sample_frames, schema=_FRAME_SCHEMA)
+    frames = map_rows(spread(m, "media_id"), _sample_row, _FRAME_SCHEMA)
     return (
         frames.groupBy("media_id")
         .agg(F.count(F.lit(1)).alias("n_sampled_frames"))
         .orderBy("media_id")
     )
+
+
+def _map_documents(
+    spark: SparkSession,
+    sf_dir: str,
+    fn: Callable[[int, bytes], Iterable[tuple]],
+    schema: str,
+) -> DataFrame:
+    """A document-text stage: ``fn(doc_id, text bytes)`` over the spread
+    ``documents`` table, with the ASCII corpus contract (module docstring)
+    asserted here, for every such stage."""
+
+    def row(doc_id: int, text: str) -> Iterable[tuple]:
+        assert text.isascii(), f"the oracle assumes ASCII text; doc {doc_id} is not"
+        return fn(doc_id, text.encode())
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return map_rows(spread(d), row, schema)
 
 
 _M7_SCHEMA = (
@@ -1005,20 +1014,9 @@ _M7_SCHEMA = (
 )
 
 
-def _bmp_roundtrip_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    cols = ("media_id", "width", "height", "bpp", "image_size", "file_size")
-    for pdf in batches:
-        out = {k: [] for k in cols}
-        for mid, text in zip(pdf["doc_id"], pdf["text"]):
-            w = int(mid) % 16 + 1
-            h = int(mid) % 8 + 1
-            decoded = decode_media(make_bmp(text.encode(), w, h), "image")
-            out["media_id"].append(mid)
-            for k in cols[1:]:
-                out[k].append(decoded[k])
-        yield pd.DataFrame(out)
+def _bmp_roundtrip_row(mid: int, data: bytes) -> Iterator[tuple]:
+    dec = decode_media(make_bmp(data, mid % 16 + 1, mid % 8 + 1), "image")
+    yield mid, *(dec[k] for k in ("width", "height", "bpp", "image_size", "file_size"))
 
 
 @register(
@@ -1051,11 +1049,7 @@ def _bmp_roundtrip_batches(
     tags=("llm", "multimodal", "udf"),
 )
 def bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        spread(d)
-        .mapInPandas(_bmp_roundtrip_batches, schema=_M7_SCHEMA)
-    )
+    return _map_documents(spark, sf_dir, _bmp_roundtrip_row, _M7_SCHEMA)
 
 
 _M8_SCHEMA = (
@@ -1088,29 +1082,8 @@ def bmp_channel_sums(blob: bytes) -> tuple[int, int, int, int]:
     )
 
 
-def _bmp_channel_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    cols = ("media_id", "n_pixels", "b_sum", "g_sum", "r_sum")
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for mid, text in zip(pdf["doc_id"], pdf["text"]):
-            # The oracle counts code points (ascii/substring); the builder
-            # cycles encode() BYTES. They agree only on ASCII corpora —
-            # assert it so a future non-ASCII corpus fails loudly here,
-            # not as a confusing driver value-hash divergence (ADVICE r9).
-            assert text.isascii(), (
-                f"m8 oracle assumes ASCII text; doc {mid} is not"
-            )
-            w = int(mid) % 16 + 1
-            h = int(mid) % 8 + 1
-            n_px, b, g, r = bmp_channel_sums(make_bmp(text.encode(), w, h))
-            out["media_id"].append(mid)
-            out["n_pixels"].append(n_px)
-            out["b_sum"].append(b)
-            out["g_sum"].append(g)
-            out["r_sum"].append(r)
-        yield pd.DataFrame(out)
+def _bmp_channel_row(mid: int, data: bytes) -> Iterator[tuple]:
+    yield mid, *bmp_channel_sums(make_bmp(data, mid % 16 + 1, mid % 8 + 1))
 
 
 def _m8_chan_oracle(c: int) -> str:
@@ -1157,11 +1130,7 @@ def _m8_chan_oracle(c: int) -> str:
     tags=("llm", "multimodal", "udf"),
 )
 def bmp_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        spread(d)
-        .mapInPandas(_bmp_channel_batches, schema=_M8_SCHEMA)
-    )
+    return _map_documents(spark, sf_dir, _bmp_channel_row, _M8_SCHEMA)
 
 
 _M9_SCHEMA = (
@@ -1170,28 +1139,11 @@ _M9_SCHEMA = (
 )
 
 
-def _wav_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ("media_id", "channel", "sample_rate", "n_frames", "sample_sum")
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for mid, text in zip(pdf["doc_id"], pdf["text"]):
-            # Same corpus contract as m8: the oracle counts code points,
-            # the builder cycles encode() bytes — ASCII-only, asserted.
-            assert text.isascii(), (
-                f"m9 oracle assumes ASCII text; doc {mid} is not"
-            )
-            nch = int(mid) % 2 + 1
-            nfr = int(mid) % 12 + 1
-            rate = 8000 + int(mid) % 3 * 4000
-            blob = make_wav(text.encode(), nch, nfr, rate)
-            dec = decode_media(blob, "audio")
-            for ch, s in enumerate(wav_channel_sums(blob, dec)):
-                out["media_id"].append(mid)
-                out["channel"].append(ch)
-                out["sample_rate"].append(dec["sample_rate"])
-                out["n_frames"].append(dec["n_frames"])
-                out["sample_sum"].append(s)
-        yield pd.DataFrame(out)
+def _wav_row(mid: int, data: bytes) -> Iterator[tuple]:
+    blob = make_wav(data, mid % 2 + 1, mid % 12 + 1, 8000 + mid % 3 * 4000)
+    dec = decode_media(blob, "audio")
+    for ch, s in enumerate(wav_channel_sums(blob, dec)):
+        yield mid, ch, dec["sample_rate"], dec["n_frames"], s
 
 
 def _m9_byte_oracle(p: str) -> str:
@@ -1247,11 +1199,7 @@ def _m9_byte_oracle(p: str) -> str:
     tags=("llm", "multimodal", "udf"),
 )
 def wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        spread(d)
-        .mapInPandas(_wav_batches, schema=_M9_SCHEMA)
-    )
+    return _map_documents(spark, sf_dir, _wav_row, _M9_SCHEMA)
 
 
 _M10_SCHEMA = (
@@ -1294,31 +1242,10 @@ def wav_window_stats(
     return out
 
 
-def _wav_window_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    cols = ("media_id", "channel", "win_no", "n_win_frames", "win_sum", "win_peak")
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for mid, text in zip(pdf["doc_id"], pdf["text"]):
-            # Same corpus contract as m8/m9: the oracle counts code
-            # points, the builder cycles encode() bytes — ASCII-only.
-            assert text.isascii(), (
-                f"m10 oracle assumes ASCII text; doc {mid} is not"
-            )
-            nch = int(mid) % 2 + 1
-            nfr = int(mid) % 24 + 1
-            rate = 8000 + int(mid) % 3 * 4000
-            blob = make_wav(text.encode(), nch, nfr, rate)
-            dec = decode_media(blob, "audio")
-            for ch, w, n, s, peak in wav_window_stats(blob, dec):
-                out["media_id"].append(mid)
-                out["channel"].append(ch)
-                out["win_no"].append(w)
-                out["n_win_frames"].append(n)
-                out["win_sum"].append(s)
-                out["win_peak"].append(peak)
-        yield pd.DataFrame(out)
+def _wav_window_row(mid: int, data: bytes) -> Iterator[tuple]:
+    blob = make_wav(data, mid % 2 + 1, mid % 24 + 1, 8000 + mid % 3 * 4000)
+    for stats in wav_window_stats(blob, decode_media(blob, "audio")):
+        yield mid, *stats
 
 
 def _m10_sample_oracle() -> str:
@@ -1397,11 +1324,7 @@ def _m10_oracle() -> str:
     tags=("llm", "multimodal", "udf"),
 )
 def wav_window_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        spread(d)
-        .mapInPandas(_wav_window_batches, schema=_M10_SCHEMA)
-    )
+    return _map_documents(spark, sf_dir, _wav_window_row, _M10_SCHEMA)
 
 
 # m10b: the sample value as one Spark-SQL fragment — signed 16-bit
@@ -1511,39 +1434,15 @@ _M11_SCHEMA = (
 )
 
 
-def _ppm_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = (
-        "media_id", "width", "height", "maxval", "n_pixels",
-        "r_sum", "g_sum", "b_sum",
-    )
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for mid, text in zip(pdf["doc_id"], pdf["text"]):
-            # Same corpus contract as m8/m9: the oracle counts code
-            # points, the builder cycles encode() bytes — ASCII-only.
-            assert text.isascii(), (
-                f"m11 oracle assumes ASCII text; doc {mid} is not"
-            )
-            w = int(mid) % 16 + 1
-            h = int(mid) % 8 + 1
-            # Odd ids carry a spec-legal header comment — a layout the
-            # oracle never models, so the sums stay right only if they
-            # slice at the decoder's offset (the WAV JUNK-gap idiom).
-            blob = make_ppm(
-                text.encode(), w, h,
-                comment=f"synthetic {mid}" if mid % 2 else None,
-            )
-            dec = decode_media(blob, "image")
-            n_px, r, g, b = ppm_channel_sums(blob, dec)
-            out["media_id"].append(mid)
-            out["width"].append(dec["width"])
-            out["height"].append(dec["height"])
-            out["maxval"].append(dec["maxval"])
-            out["n_pixels"].append(n_px)
-            out["r_sum"].append(r)
-            out["g_sum"].append(g)
-            out["b_sum"].append(b)
-        yield pd.DataFrame(out)
+def _ppm_row(mid: int, data: bytes) -> Iterator[tuple]:
+    # Odd ids carry a spec-legal header comment — a layout the oracle
+    # never models, so the sums stay right only if they slice at the
+    # decoder's offset (the WAV JUNK-gap idiom).
+    comment = f"synthetic {mid}" if mid % 2 else None
+    blob = make_ppm(data, mid % 16 + 1, mid % 8 + 1, comment=comment)
+    dec = decode_media(blob, "image")
+    dims = dec["width"], dec["height"], dec["maxval"]
+    yield mid, *dims, *ppm_channel_sums(blob, dec)
 
 
 @register(
@@ -1580,11 +1479,7 @@ def _ppm_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     tags=("llm", "multimodal", "udf"),
 )
 def ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        spread(d)
-        .mapInPandas(_ppm_batches, schema=_M11_SCHEMA)
-    )
+    return _map_documents(spark, sf_dir, _ppm_row, _M11_SCHEMA)
 
 
 _M12_SCHEMA = (
@@ -1592,39 +1487,26 @@ _M12_SCHEMA = (
 )
 
 
-def _zip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ("media_id", "entry_no", "name", "n_bytes", "byte_sum")
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for mid, text in zip(pdf["doc_id"], pdf["text"]):
-            # Same corpus contract as m8/m9/m10/m11: the oracle counts
-            # code points, the builder cycles encode() bytes — ASCII-only.
-            assert text.isascii(), (
-                f"m12 oracle assumes ASCII text; doc {mid} is not"
-            )
-            mid_i = int(mid)
-            ne = mid_i % 3 + 1
-            lens = [mid_i % 13 + 1 + 7 * i for i in range(ne)]
-            blob = make_zip(
-                text.encode(),
-                lens,
-                # Self-extracting junk prefix (odd ids) and EOCD comment
-                # (ids ≡ 1 mod 3): layout the oracle never models —
-                # correctness REQUIRES slicing at the decoder's shifted
-                # offsets.
-                prefix=b"\xfe" * (mid_i % 5 + 1) if mid_i % 2 else b"",
-                comment=(
-                    f"synthetic {mid_i}".encode() if mid_i % 3 == 1 else b""
-                ),
-            )
-            dec = decode_media(blob, "archive")
-            for i, (sz, s) in enumerate(zip_entry_byte_sums(blob, dec)):
-                out["media_id"].append(mid)
-                out["entry_no"].append(i)
-                out["name"].append(dec["entries"][i]["name"])
-                out["n_bytes"].append(sz)
-                out["byte_sum"].append(s)
-        yield pd.DataFrame(out)
+def _zip_manifest_rows(mid: int, blob: bytes, field: str) -> Iterator[tuple]:
+    """m12-m14's manifest: one (media_id, entry_no, entry ``field``,
+    n_bytes, byte_sum) row per entry, sliced where the decoder says."""
+    dec = decode_media(blob, "archive")
+    for i, (sz, s) in enumerate(zip_entry_byte_sums(blob, dec)):
+        yield mid, i, dec["entries"][i][field], sz, s
+
+
+def _zip_row(mid: int, data: bytes) -> Iterator[tuple]:
+    lens = [mid % 13 + 1 + 7 * i for i in range(mid % 3 + 1)]
+    blob = make_zip(
+        data,
+        lens,
+        # Self-extracting junk prefix (odd ids) and EOCD comment
+        # (ids ≡ 1 mod 3): layout the oracle never models —
+        # correctness REQUIRES slicing at the decoder's shifted offsets.
+        prefix=b"\xfe" * (mid % 5 + 1) if mid % 2 else b"",
+        comment=f"synthetic {mid}".encode() if mid % 3 == 1 else b"",
+    )
+    return _zip_manifest_rows(mid, blob, "name")
 
 
 @register(
@@ -1672,11 +1554,7 @@ def _zip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     tags=("llm", "multimodal", "udf", "reference-fidelity"),
 )
 def zip_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return (
-        spread(d)
-        .mapInPandas(_zip_batches, schema=_M12_SCHEMA)
-    )
+    return _map_documents(spark, sf_dir, _zip_row, _M12_SCHEMA)
 
 
 _M13_SCHEMA = (
@@ -1684,35 +1562,15 @@ _M13_SCHEMA = (
 )
 
 
-def _zip_deflate_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    cols = ("media_id", "entry_no", "method", "n_bytes", "byte_sum")
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for mid, text in zip(pdf["doc_id"], pdf["text"]):
-            # Same ASCII corpus contract as the rest of the m-family.
-            assert text.isascii(), (
-                f"m13 oracle assumes ASCII text; doc {mid} is not"
-            )
-            mid_i = int(mid)
-            ne = mid_i % 4 + 1
-            lens = [mid_i % 11 + 1 + 5 * i for i in range(ne)]
-            methods = [((mid_i + i) % 2) * 8 for i in range(ne)]
-            blob = make_zip(
-                text.encode(),
-                lens,
-                prefix=b"\xfd" * (mid_i % 3) if mid_i % 2 else b"",
-                methods=methods,
-            )
-            dec = decode_media(blob, "archive")
-            for i, (sz, s) in enumerate(zip_entry_byte_sums(blob, dec)):
-                out["media_id"].append(mid)
-                out["entry_no"].append(i)
-                out["method"].append(dec["entries"][i]["method"])
-                out["n_bytes"].append(sz)
-                out["byte_sum"].append(s)
-        yield pd.DataFrame(out)
+def _zip_deflate_row(mid: int, data: bytes) -> Iterator[tuple]:
+    ne = mid % 4 + 1
+    blob = make_zip(
+        data,
+        [mid % 11 + 1 + 5 * i for i in range(ne)],
+        prefix=b"\xfd" * (mid % 3) if mid % 2 else b"",
+        methods=[(mid + i) % 2 * 8 for i in range(ne)],
+    )
+    return _zip_manifest_rows(mid, blob, "method")
 
 
 @register(
@@ -1755,8 +1613,7 @@ def _zip_deflate_batches(
     tags=("llm", "multimodal", "udf", "reference-fidelity"),
 )
 def zip_deflate_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return spread(d).mapInPandas(_zip_deflate_batches, schema=_M13_SCHEMA)
+    return _map_documents(spark, sf_dir, _zip_deflate_row, _M13_SCHEMA)
 
 
 def _m14_geometry(mid: int) -> tuple[list[int], list[int]]:
@@ -1769,57 +1626,27 @@ def _m14_geometry(mid: int) -> tuple[list[int], list[int]]:
     return lens, methods
 
 
-def _pack_archive_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _pack_archive_row(mid: int, data: bytes) -> Iterator[tuple]:
     """The SYNTHESIS stage — runs only inside publish_archive_column,
     never on the m14 apply path (pinned by test: make_zip monkeypatched
     to raise once the artifact exists)."""
-    for pdf in batches:
-        ids: list[int] = []
-        blobs: list[bytes] = []
-        for mid, text in zip(pdf["doc_id"], pdf["text"]):
-            assert text.isascii(), (
-                f"m14 oracle assumes ASCII text; doc {mid} is not"
-            )
-            mid_i = int(mid)
-            lens, methods = _m14_geometry(mid_i)
-            blobs.append(
-                make_zip(
-                    text.encode(),
-                    lens,
-                    # Same layout variety as m12: junk prefix (odd ids)
-                    # and EOCD comment (ids ≡ 2 mod 3) the oracle never
-                    # models — decode must slice at shifted offsets.
-                    prefix=b"\xfc" * (mid_i % 4) if mid_i % 2 else b"",
-                    comment=(
-                        f"m14 {mid_i}".encode() if mid_i % 3 == 2 else b""
-                    ),
-                    methods=methods,
-                )
-            )
-            ids.append(mid)
-        yield pd.DataFrame({"media_id": ids, "content": blobs})
+    lens, methods = _m14_geometry(mid)
+    yield mid, make_zip(
+        data,
+        lens,
+        # Same layout variety as m12: junk prefix (odd ids) and EOCD
+        # comment (ids ≡ 2 mod 3) the oracle never models — decode must
+        # slice at shifted offsets.
+        prefix=b"\xfc" * (mid % 4) if mid % 2 else b"",
+        comment=f"m14 {mid}".encode() if mid % 3 == 2 else b"",
+        methods=methods,
+    )
 
 
-def _decode_persisted_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
+def _decode_persisted_row(mid: int, blob: bytes) -> Iterator[tuple]:
     """The APPLY stage: decode + manifest only. No synthesis anywhere —
     this function must never reference make_zip."""
-    cols = ("media_id", "entry_no", "method", "n_bytes", "byte_sum")
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for mid, content in zip(pdf["media_id"], pdf["content"]):
-            blob = bytes(content)
-            dec = decode_media(blob, "archive")
-            for i, (sz, s) in enumerate(zip_entry_byte_sums(blob, dec)):
-                out["media_id"].append(mid)
-                out["entry_no"].append(i)
-                out["method"].append(dec["entries"][i]["method"])
-                out["n_bytes"].append(sz)
-                out["byte_sum"].append(s)
-        yield pd.DataFrame(out)
+    return _zip_manifest_rows(mid, blob, "method")
 
 
 def _archive_artifact_base(sf_dir: str) -> str:
@@ -1864,15 +1691,13 @@ def publish_archive_column(spark: SparkSession, sf_dir: str) -> str:
         return published
     os.makedirs(base, exist_ok=True)
     staging = tempfile.mkdtemp(prefix="_staging_", dir=base)
-    d = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    d.mapInPandas(
-        _pack_archive_batches, schema="media_id long, content binary"
+    _map_documents(
+        spark, sf_dir, _pack_archive_row, "media_id long, content binary"
     ).write.mode("overwrite").parquet(staging)
     # Audit what was written: decode every blob, aggregate, compare to
     # the closed-form expectation. One distributed pass; 1 row collected.
     got = (
-        spark.read.parquet(staging)
-        .mapInPandas(_decode_persisted_batches, schema=_M13_SCHEMA)
+        map_rows(spark.read.parquet(staging), _decode_persisted_row, _M13_SCHEMA)
         .agg(
             F.countDistinct("media_id").alias("n_blobs"),
             F.count(F.lit(1)).alias("n_entries"),
@@ -1953,10 +1778,7 @@ def publish_archive_column(spark: SparkSession, sf_dir: str) -> str:
 def zip_persisted_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = publish_archive_column(spark, sf_dir)
     m = spark.read.parquet(path)
-    return (
-        spread(m)
-        .mapInPandas(_decode_persisted_batches, schema=_M13_SCHEMA)
-    )
+    return map_rows(spread(m), _decode_persisted_row, _M13_SCHEMA)
 
 
 @register(
@@ -2087,28 +1909,15 @@ _RESIZE_SCHEMA = (
 )
 
 
-def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in (
-            "media_id", "media_type", "orig_bytes", "resized_bytes",
-            "new_width", "new_height",
-        )}
-        for mid, content, mtype, width, height in zip(
-            pdf["media_id"], pdf["content"], pdf["media_type"],
-            pdf["width"], pdf["height"],
-        ):
-            payload = bytes(content)
-            # Real path: decode_media() → spatial resample → re-encode.
-            # Deterministic stand-in: stride-subsample the payload bytes and
-            # halve the nominal dimensions, so sizes are closed-form.
-            resized = payload[:: _RESIZE_FACTOR]
-            out["media_id"].append(mid)
-            out["media_type"].append(mtype)
-            out["orig_bytes"].append(len(payload))
-            out["resized_bytes"].append(len(resized))
-            out["new_width"].append(max(int(width) // 2, 1))
-            out["new_height"].append(max(int(height) // 2, 1))
-        yield pd.DataFrame(out)
+def _resize_row(
+    mid: int, payload: bytes, mtype: str, width: int, height: int
+) -> Iterator[tuple]:
+    # Real path: decode_media() → spatial resample → re-encode.
+    # Deterministic stand-in: stride-subsample the payload bytes and
+    # halve the nominal dimensions, so sizes are closed-form.
+    resized = payload[::_RESIZE_FACTOR]
+    new_w, new_h = max(width // 2, 1), max(height // 2, 1)
+    yield mid, mtype, len(payload), len(resized), new_w, new_h
 
 
 @register(
@@ -2144,8 +1953,7 @@ def resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("meta.height").alias("height"),
     )
     return (
-        spread(m, "media_id")
-        .mapInPandas(_resize_batches, schema=_RESIZE_SCHEMA)
+        map_rows(spread(m, "media_id"), _resize_row, _RESIZE_SCHEMA)
         .orderBy("media_id")
     )
 

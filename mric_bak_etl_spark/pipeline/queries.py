@@ -227,7 +227,7 @@ def _fixture_zip_bytes() -> list[tuple[str, bytes]]:
            'BAK-PAYLOAD-2024-07-01'       AS payload_text
     """,
     doc="X1/R9+R10: the zip-decompression pandas stage end-to-end — fixed "
-    "in-memory archives → mapInPandas unzip → payload pick (.bak, "
+    "in-memory archives → mapInPandas unzip + payload pick (.bak, "
     "last-match-wins like src/bak_unload.ps1:81-87); oracle is the known "
     "fixture payload.",
     tags=("pipeline", "udf"),
@@ -236,7 +236,7 @@ def unzip_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     archives = spark.createDataFrame(
         _fixture_zip_bytes(), "path string, content binary"
     )
-    payload = unzip.pick_payload(unzip.unzip_entries(archives), ".bak")
+    payload = unzip.unzip_entries(archives, ".bak")
     return payload.select(
         "archive_path",
         "entry_name",

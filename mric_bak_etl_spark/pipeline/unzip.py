@@ -1,11 +1,13 @@
 """In-cluster zip decompression — the one genuinely custom operator.
 
 Reference behavior (SURVEY.md §2A R9/R10): shell out to ``7z e`` on a
-downloaded archive, then scan the temp folder for the entry whose name
-contains ``.bak`` (`src/bak_unload.ps1:73-87`). Spark has no codec for
-arbitrary zip archives, so this is the engine's only Python stage: a
-``mapInPandas`` over the ``binaryFile`` source — each executor decompresses
-the archives in its own partition; nothing round-trips through the driver.
+downloaded archive, then keep the last entry whose name contains ``.bak``
+(`src/bak_unload.ps1:73-87`). Spark has no codec for arbitrary zip
+archives, so this is the engine's only Python stage: a per-row
+``mapInPandas`` over the ``binaryFile`` source (``tables.map_rows``). Each
+archive's central directory is read, the payload entry is picked there and
+only that entry is inflated — decompress and pick are one pass, executor-
+side; nothing round-trips through the driver.
 
 Scale notes (100 TB): one archive = one task input row, so archives
 parallelize across executors naturally. Entry bytes are materialized per
@@ -22,56 +24,33 @@ import io
 import zipfile
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from mric_bak_etl_spark.tables import map_rows
 
 ENTRY_SCHEMA = (
     "archive_path string, entry_name string, entry_size long, entry_bytes binary"
 )
 
 
-def _explode_archives(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out: dict[str, list] = {
-            "archive_path": [],
-            "entry_name": [],
-            "entry_size": [],
-            "entry_bytes": [],
-        }
-        for path, content in zip(pdf["path"], pdf["content"]):
-            with zipfile.ZipFile(io.BytesIO(content)) as zf:
-                for info in zf.infolist():
-                    if info.is_dir():
-                        continue
-                    out["archive_path"].append(path)
-                    out["entry_name"].append(info.filename)
-                    out["entry_size"].append(info.file_size)
-                    out["entry_bytes"].append(zf.read(info))
-        yield pd.DataFrame(out)
-
-
-def unzip_entries(archives: DataFrame) -> DataFrame:
-    """R9: archive rows (``path``, ``content``) → one row per zip entry.
-
-    Arrow-batched ``mapInPandas`` (not a row-at-a-time UDF); runs where the
-    data lives.
-    """
-    return archives.select("path", "content").mapInPandas(
-        _explode_archives, schema=ENTRY_SCHEMA
-    )
-
-
-def pick_payload(entries: DataFrame, pattern: str = ".bak") -> DataFrame:
-    """R10: select the payload entry — name contains ``pattern``.
+def unzip_entries(archives: DataFrame, pattern: str = ".bak") -> DataFrame:
+    """R9+R10: archive rows (``path``, ``content``) → each archive's payload
+    entry, the one whose name contains ``pattern``.
 
     The reference's loop keeps the LAST match (`src/bak_unload.ps1:81-87`,
-    last-writer-wins); with names sorted that is the lexicographic max, which
-    is how we make the choice deterministic and distributed.
+    last-writer-wins); with names sorted that is the lexicographic max,
+    which makes the choice deterministic. An archive with no match yields
+    no row; of duplicate names the last copy wins, as ``7z e`` overwrites.
     """
-    from pyspark.sql import functions as F
 
-    matches = entries.filter(F.col("entry_name").contains(pattern))
-    last_name = matches.groupBy("archive_path").agg(
-        F.max("entry_name").alias("entry_name")
-    )
-    return matches.join(last_name, on=["archive_path", "entry_name"], how="left_semi")
+    def payload(path: str, content: bytes) -> Iterator[tuple]:
+        with zipfile.ZipFile(io.BytesIO(content)) as zf:
+            names = [
+                i.filename for i in zf.infolist()
+                if pattern in i.filename and not i.is_dir()
+            ]
+            if names:
+                info = zf.getinfo(max(names))
+                yield path, info.filename, info.file_size, zf.read(info)
+
+    return map_rows(archives.select("path", "content"), payload, ENTRY_SCHEMA)

@@ -690,11 +690,8 @@ def streaming_register_maintenance(
     # THIS query's planning and restored after; checkpoint dirs are
     # fresh per call, so no cross-count state reuse exists.
     shuffle_conf = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(shuffle_conf, None)
-    spark.conf.set(
-        shuffle_conf,
-        os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"),
-    )
+    prev_parts = spark.conf.get(shuffle_conf)
+    spark.conf.set(shuffle_conf, 4)
     try:
         q = (
             daily.writeStream.foreachBatch(
@@ -707,8 +704,7 @@ def streaming_register_maintenance(
         )
         q.awaitTermination()
     finally:
-        if prev_parts is not None:
-            spark.conf.set(shuffle_conf, prev_parts)
+        spark.conf.set(shuffle_conf, prev_parts)
     from mric_bak_etl_spark.streaming.stateful import read_committed_version
 
     final = read_committed_version(spark, base, state, "t13b")

@@ -19,9 +19,12 @@ nothing assumes a single file.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterable, Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mric_bak_etl_spark.session import default_parallelism, ensure_runtime_confs
 
@@ -79,11 +82,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Input bytes one CPU-dense task should own (spread): much smaller than a
 # scan split (128 MB+) because per-byte work downstream of a spread —
 # shingling, minhash folds, binary decodes in pandas — runs 10-100x a
-# plain scan. Parameterized for clusters; the default is A/B-measured at
-# the bench's measurement point (OPTIMIZATION_r14.md).
-SPREAD_DENSE_PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES", str(256 << 10))
-)
+# plain scan. A/B-measured at the bench's measurement point
+# (OPTIMIZATION_r14.md).
+SPREAD_DENSE_PARTITION_BYTES = 256 << 10
 
 
 def _plan_bytes(df: DataFrame) -> int | None:
@@ -134,6 +135,29 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
             ),
         )
     return df.repartition(n, *[F.col(c) for c in cols]) if cols else df.repartition(n)
+
+
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """Per-row Python work as one Arrow-batched ``mapInPandas`` stage.
+
+    ``fn(*row)`` receives one input row's values in ``df``'s column order
+    and yields zero or more output tuples in ``schema`` order (a filter, a
+    1:1 map or a fan-out alike); the batch ↔ row conversion lives here
+    once, so a stage is just its row function.
+    """
+    names = StructType.fromDDL(schema).names
+
+    def batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            rows = [
+                out for row in pdf.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.mapInPandas(batches, schema=schema)
 
 
 CPU_DENSE_PARTITION_BYTES = 32 << 20  # ~32 MB of input per compute task

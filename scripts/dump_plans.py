@@ -2,8 +2,8 @@
 """Dump .explain('formatted') for named catalog queries to plans/<round>/.
 
 Usage: python scripts/dump_plans.py <suffix> <name> [<name> ...]
-Writes plans/r{catalog.ROUND}/<name>_<suffix>.txt (override the directory
-leaf with $SPARK_GRAFT_PLAN_DIR). Measurement aid for the optimization
+Writes plans/$SPARK_GRAFT_PLAN_DIR/<name>_<suffix>.txt (the directory leaf
+defaults to ``current``). Measurement aid for the optimization
 rounds (guide §1: capture the plan before and after). Pass ``all`` as the
 only name to dump every headline query.
 """
@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mric_bak_etl_spark.catalog import ROUND, all_specs, headline_names  # noqa: E402
+from mric_bak_etl_spark.catalog import all_specs, headline_names  # noqa: E402
 from mric_bak_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -29,7 +29,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", f"r{ROUND}"),
+        "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", "current"),
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("mric-bak-etl-spark-plans")

@@ -168,9 +168,7 @@ def test_bmp_channel_sums_match_source_bytes(spark):
     (cycling), text longer (truncation), empty text (zero pixels), and a
     width whose row stride carries real padding bytes that must NOT be
     counted."""
-    import pandas as pd
-
-    from mric_bak_etl_spark.llm.multimodal import _bmp_channel_batches
+    from mric_bak_etl_spark.llm.multimodal import _bmp_channel_row
 
     # doc_id picks geometry: w = id%16+1, h = id%8+1.
     cases = [
@@ -179,18 +177,15 @@ def test_bmp_channel_sums_match_source_bytes(spark):
         (33, ""),            # w=2,h=2: empty -> zero-filled pixels
         (0, "hello world"),  # w=1,h=1: stride 4 carries 1 padding byte
     ]
-    pdf = pd.DataFrame(
-        {"doc_id": [c[0] for c in cases], "text": [c[1] for c in cases]}
-    )
-    out = next(_bmp_channel_batches(iter([pdf])))
     for mid, text in cases:
         w, h = mid % 16 + 1, mid % 8 + 1
         need = 3 * w * h
         raw = text.encode()
         src = (raw * (need // max(len(raw), 1) + 1))[:need] if raw else bytes(need)
-        row = out[out["media_id"] == mid].iloc[0]
-        assert row["n_pixels"] == w * h
-        assert (row["b_sum"], row["g_sum"], row["r_sum"]) == (
+        [(media_id, n_pixels, *sums)] = _bmp_channel_row(mid, raw)
+        assert media_id == mid
+        assert n_pixels == w * h
+        assert tuple(sums) == (
             sum(src[0::3]), sum(src[1::3]), sum(src[2::3])
         ), (mid, text[:10])
 
@@ -1092,13 +1087,13 @@ def test_m14_publish_audit_blocks_lossy_packer(
     monkeypatch.setattr(
         M, "_archive_artifact_base", lambda _sf: str(tmp_path / "art")
     )
-    real = M._pack_archive_batches
+    real = M._pack_archive_row
 
-    def lossy(batches):
-        for pdf in real(batches):
-            yield pdf.iloc[:-1]
+    def lossy(mid, data):
+        if mid % 2:  # every even doc's blob is silently dropped
+            yield from real(mid, data)
 
-    monkeypatch.setattr(M, "_pack_archive_batches", lossy)
+    monkeypatch.setattr(M, "_pack_archive_row", lossy)
     with pytest.raises(ValueError, match="audit failed"):
         M.publish_archive_column(spark, sf_dir)
     assert not os.path.isdir(str(tmp_path / "art" / "published"))

@@ -13,39 +13,11 @@ import math
 import pandas as pd
 import pytest
 
-from mric_bak_etl_spark.catalog import _VERIFY_FIRST, all_specs
+from mric_bak_etl_spark.catalog import all_specs
 
 SPECS = all_specs()
 ORACLE_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is not None)
 ROWS_ONLY_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is None)
-
-
-def _parity_selected(name: str) -> bool:
-    """Suite-wall trim rung 2 (r11 verdict task 1, the declared parity
-    rotation): each round runs the FULL driver verification head (this
-    round's new + changed + vintage-sweep queries — exactly the rows
-    whose semantics moved) plus HALF of the remaining oracle set,
-    alternating halves per round, so every query is locally
-    value-checked at least every other round and the skipped half is
-    visible as skips, never silently absent. Rotation key = the
-    explicit catalog.ROUND constant (ADVICE r12: the old key — a
-    CORRECTNESS_r*.json file COUNT — included untracked files, so the
-    driver writing the new round's file mid-round flipped which half
-    ran between two runs of the same commit). SPARK_GRAFT_FULL_PARITY=1
-    restores the full sweep (use for release-grade runs)."""
-    import os
-    import zlib
-
-    from mric_bak_etl_spark.catalog import ROUND
-
-    if os.environ.get("SPARK_GRAFT_FULL_PARITY"):
-        return True
-    if name in _VERIFY_FIRST:
-        return True
-    # Phase: == 1 keeps the alternation unbroken across the key change
-    # (the r12 closing runs used the old key at k=11 ≡ crc-odd half, so
-    # round 13 must run the crc-even half; ROUND=13 + phase 1 does).
-    return (zlib.crc32(name.encode()) + ROUND) % 2 == 1
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -90,11 +62,6 @@ def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: s
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_parity(spark, duck, sf_dir, name):
-    if not _parity_selected(name):
-        pytest.skip(
-            "rotated out this round (driver-head + half-set rotation; "
-            "set SPARK_GRAFT_FULL_PARITY=1 for the full sweep)"
-        )
     spec = SPECS[name]
     spark_pdf = spec.builder(spark, sf_dir).toPandas()
     duck_pdf = duck.execute(spec.oracle).df()

@@ -76,6 +76,13 @@ def test_latest_pick_skip_and_new_arrival(spark, dirs):
     assert third.snapshot == "backup_2024_07_02.zip"
     assert payload_texts(spark, dirs["out"]) == ["fresh"]  # full replace
 
+    # Glob metacharacters in the winning name: the archive read is a
+    # glob over the file listing, so they must match only themselves.
+    make_zip(os.path.join(dirs["blob"], "backup_2024_07_02[1].zip"), {"g.bak": b"rerun"})
+    fourth = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
+    assert fourth.snapshot == "backup_2024_07_02[1].zip"
+    assert payload_texts(spark, dirs["out"]) == ["rerun"]
+
 
 def test_payload_pick_last_match_wins(spark, dirs):
     # Reference's foreach keeps the LAST .bak match (src/bak_unload.ps1:81-87).
@@ -103,9 +110,15 @@ def test_crash_replay_between_load_and_commit(spark, dirs):
     assert payload_texts(spark, dirs["out"]) == ["payload"]  # still correct
 
 
+def snapshot(stem: str, payload: bytes) -> dict[str, bytes]:
+    """Two .bak entries (the later name is the payload) and a decoy."""
+    return {f"{stem}_1.bak": b"stale", f"{stem}_2.bak": payload, "notes.txt": b"x"}
+
+
 def test_streaming_exactly_once(spark, dirs):
-    make_zip(os.path.join(dirs["blob"], "backup_a.zip"), {"a.bak": b"alpha"})
-    make_zip(os.path.join(dirs["blob"], "backup_b.zip"), {"b.bak": b"beta"})
+    # One micro-batch holds both archives: the payload pick is per archive.
+    make_zip(os.path.join(dirs["blob"], "backup_a.zip"), snapshot("a", b"alpha"))
+    make_zip(os.path.join(dirs["blob"], "backup_b.zip"), snapshot("b", b"beta"))
 
     run_streaming(spark, dirs["blob"], dirs["ckpt"], dirs["out"])
     assert payload_texts(spark, dirs["out"]) == ["alpha", "beta"]
@@ -115,7 +128,7 @@ def test_streaming_exactly_once(spark, dirs):
     assert payload_texts(spark, dirs["out"]) == ["alpha", "beta"]
 
     # New arrival → only the new file flows through.
-    make_zip(os.path.join(dirs["blob"], "backup_c.zip"), {"c.bak": b"gamma"})
+    make_zip(os.path.join(dirs["blob"], "backup_c.zip"), snapshot("c", b"gamma"))
     run_streaming(spark, dirs["blob"], dirs["ckpt"], dirs["out"])
     assert payload_texts(spark, dirs["out"]) == ["alpha", "beta", "gamma"]
 

@@ -170,45 +170,13 @@ def test_no_python_udfs_outside_declared_pandas_stages(spark, sf_dir, catalog_pl
                  "x6_grouped_pandas_map", "x7_polymorphic_udtf",
                  "x8_arrow_python_udf", "x9_iter_pandas_udf",
                  "x10_grouped_arrow_apply", "x11_arrow_udtf"}
-    # Suite-wall trim rung 2 (r12): building all 300+ plans is the
-    # suite's single most expensive test (~200 s — iterative builders
-    # localCheckpoint, artifact builders publish). Sweep the driver
-    # verification head (new + changed queries — the only plans that
-    # can have MOVED) every round plus half of the rest, alternating
-    # halves with the same rotation key as the parity/robustness trims;
-    # an unchanged query's plan cannot regress between rounds, so
-    # every-other-round coverage loses nothing. Skipped names are
-    # counted loudly below; SPARK_GRAFT_FULL_PARITY=1 sweeps all.
-    # ADVICE r12: a shared-helper edit changes plans of consumers that
-    # are NOT in this round's _VERIFY_FIRST head, so the introspect
-    # sweep's changed-consumer set is always swept too — the guard no
-    # longer depends on the head being hand-updated before this runs.
-    from test_oracle_parity import _parity_selected
-
-    from mric_bak_etl_spark.introspect import (
-        consumers_of_changed,
-        round_base_commit,
-    )
-
-    changed = set()
-    if round_base_commit() is not None:
-        changed = set(consumers_of_changed())
-
     offenders = []
-    swept = skipped = 0
-    for name in sorted(all_specs()):
-        if name in pandas_ok:
-            continue
-        if name not in changed and not _parity_selected(name):
-            skipped += 1
-            continue
-        swept += 1
+    for name in sorted(set(all_specs()) - pandas_ok):
         plan = catalog_plan(name)
         if ("EvalPython" in plan or "MapInPandas" in plan
                 or "FlatMapGroupsInPandas" in plan or "MapInArrow" in plan):
             offenders.append(name)
     assert not offenders, f"Python crept into JVM-only queries: {offenders}"
-    assert swept > 0 and swept + skipped > 0
 
 
 def test_dynamic_partition_pruning_in_plan(spark, sf_dir):

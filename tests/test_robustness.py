@@ -166,38 +166,10 @@ def test_results_survive_arrow_disabled(spark, duck, sf_dir):
         spark.conf.set(key, saved)
 
 
-def _rotation_selected(scenario: str) -> bool:
-    """The r11-declared suite-wall trim rung: run 2 of the 4 scenarios
-    per round, rotating so every scenario runs at least every other
-    round (~110 s saved per run). The rotation key is the explicit
-    catalog.ROUND constant — bumped exactly once per round in a
-    committed file, so the selection is reproducible for the whole
-    round regardless of what untracked driver files exist on disk
-    (ADVICE r12: the old CORRECTNESS-file COUNT flipped mid-round).
-    SPARK_GRAFT_FULL_ROBUSTNESS=1 restores full coverage (use for
-    release-grade local runs)."""
-    import os
-
-    from mric_bak_etl_spark.catalog import ROUND
-
-    if os.environ.get("SPARK_GRAFT_FULL_ROBUSTNESS"):
-        return True
-    # ROUND - 1 keeps the pre-key-change cadence: round 12's closing
-    # runs selected with k=11, so round 13 must select with 12.
-    k = ROUND - 1
-    names = sorted(SCENARIOS)
-    return scenario in {names[k % len(names)], names[(k + 1) % len(names)]}
-
-
 @pytest.mark.parametrize("scenario", sorted(SCENARIOS))
 def test_results_survive_physical_strategy_changes(spark, duck, sf_dir, scenario):
     from test_oracle_parity import assert_frames_match
 
-    if not _rotation_selected(scenario):
-        pytest.skip(
-            f"rotated out this round (2-of-{len(SCENARIOS)} rotation; "
-            f"set SPARK_GRAFT_FULL_ROBUSTNESS=1 for full coverage)"
-        )
     confs = SCENARIOS[scenario]
     saved = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():

@@ -83,33 +83,10 @@ def duck01():
     con.close()
 
 
-def _scale_selected(name: str) -> bool:
-    """Suite-wall trim rung 4 (declared round 13): the sf0.1 slice
-    rotates HALVES per round like the parity suite — every member runs
-    at least every other round, queries added THIS round (per the
-    module docstring, the slice's newest entries) always run in their
-    first round via the parity head, and the skipped half is visible
-    as skips. Same explicit catalog.ROUND key as the other rotations;
-    SPARK_GRAFT_FULL_SCALE=1 restores the full slice."""
-    import os
-    import zlib
-
-    from mric_bak_etl_spark.catalog import ROUND, _VERIFY_FIRST
-
-    if os.environ.get("SPARK_GRAFT_FULL_SCALE"):
-        return True
-    if name in _VERIFY_FIRST:
-        return True  # new/changed this round — always scale-checked
-    return (zlib.crc32(name.encode()) + ROUND) % 2 == 1
-
-
 @pytest.mark.parametrize("name", SCALE_SLICE)
 def test_scale_parity_sf01(spark, duck01, name):
     from test_oracle_parity import assert_frames_match
 
-    if not _scale_selected(name):
-        pytest.skip("scale-slice rotation: runs next round "
-                    "(SPARK_GRAFT_FULL_SCALE=1 for the full slice)")
     spec = all_specs()[name]
     got = spec.builder(spark, SF01_DIR).toPandas()
     want = duck01.execute(spec.oracle).df()
