@@ -210,19 +210,8 @@ def main() -> None:
     }
 
     # Full detail (per-query DuckDB seconds, all ratios) goes to a side
-    # file; stdout gets ONE compact machine line, printed LAST. The
-    # driver tail-captures only ~2000 chars of stdout — BENCH_r05's line
-    # grew past that and parsed as null — so the stdout line carries
-    # per-query Spark seconds plus ratios only for queries where BOTH
-    # engines are out of the fixed-overhead regime (Spark wall >= 1 s
-    # AND DuckDB wall >= 0.2 s; a ratio against a sub-0.2 s DuckDB plan
-    # measures Spark's constant stage/scheduling cost, not the operator
-    # — on a slow co-tenant hour, fixed-overhead queries drift past the
-    # 1 s Spark gate and would otherwise inject meaningless 5-10x
-    # artifacts into the judged line; the smallest real heavy-query
-    # DuckDB wall is ~0.33 s, so 0.2 s separates the regimes with
-    # margin on both sides), ratios at 1 dp.
-    # The full unfiltered ratio map is in bench_detail.json.
+    # file; stdout gets ONE compact machine line, printed LAST (the
+    # driver tail-captures only ~2000 chars of stdout).
     detail = {
         "metric": "headline_queries_total_runtime",
         "value": total,
@@ -241,12 +230,7 @@ def main() -> None:
             json.dump(detail, fh, indent=1)
     except Exception:
         pass  # side file is informational only
-    heavy_ratios = {
-        n: round(r, 1)
-        for n, r in ratios.items()
-        if timings.get(n, 0.0) >= 1.0 and duck_timings.get(n, 0.0) >= 0.2
-    }
-    print(compose_line(total, timings, sf, heavy_ratios, duck_timings))
+    print(compose_line(total, timings, sf, duck_timings))
     spark.stop()
 
 
@@ -254,30 +238,28 @@ def compose_line(
     total: float,
     timings: dict[str, float],
     sf,
-    heavy_ratios: dict[str, float],
     duck_timings: dict[str, float],
-    budget: int = 1800,
+    budget: int = 1950,
 ) -> str:
     """Compose the ONE stdout JSON line under the driver's tail-capture
-    budget (~2000 chars; we use 1800). Pure function so the shed ladder
-    is unit-testable (tests/test_catalog.py) — the r11 draft silently
-    dropped the per-query map because the old in-line decrement
-    `k -= 3 if k else 1` parsed as `k -= (3 if k else 1)` (5 → 2 → -1),
-    skipping the k=1/k=0 rungs (r11 ADVICE).
+    budget (~2000 chars; we use 1950). Pure function, unit-tested in
+    tests/test_catalog.py.
 
-    Shed priority: queries map > c23 gate > heavy-ratio map. The ladder
-    walks the ratio map down (all → 5 → 2 → 1 → 0; full map always in
-    bench_detail.json) and drops duck_total after the first rung, before
-    EVER touching the queries map.
+    One form: every query's Spark seconds at 2 dp with ``queries_shed``
+    0, plus the c23 gate. The c23 pair is the cross-round
+    weather/regression gate (SCALE.md r11: a regression is a c23_ratio
+    excursion above the ~7.7 historical envelope on a FLAT duck wall),
+    so the driver record is self-adjudicating. duck_common23 is
+    structurally a 21-of-23 sum (l2/m2 carry no oracle); duck_c23_n
+    makes any FURTHER shortfall — a transient per-query DuckDB failure
+    silently zero-filled by .get() — visible instead of skewing the
+    ratio.
 
-    The c23 pair is the cross-round weather/regression gate (SCALE.md
-    r11: absolute-seconds bands are retired; a regression is a c23_ratio
-    excursion above the ~7.7 historical envelope on a FLAT duck wall) —
-    printed in EVERY line form, down to the last resort, so the driver
-    record is self-adjudicating. duck_common23 is structurally a
-    21-of-23 sum (l2/m2 carry no oracle); duck_c23_n makes any FURTHER
-    shortfall — a transient per-query DuckDB failure silently
-    zero-filled by .get() — visible instead of skewing the ratio.
+    One fallback, for a headline that outgrows the budget: every
+    COMMON23 member (the frozen comparable set must stay readable from
+    the line itself) plus the slowest other queries that fit, with the
+    shed count visible. The full map and every DuckDB ratio are always
+    in bench_detail.json.
     """
     duck_c23 = sum(duck_timings.get(n, 0.0) for n in COMMON23)
     spark_c23 = sum(timings.get(n, 0.0) for n in COMMON23)
@@ -287,80 +269,32 @@ def compose_line(
         "spark_common23": round(spark_c23, 2),
         "c23_ratio": round(spark_c23 / duck_c23, 2) if duck_c23 > 0 else None,
     }
-    line = json.dumps(
-        {
-            "metric": "headline_queries_total_runtime",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "sf": sf,
-            "spark_over_duck_heavy": heavy_ratios,
-            "duck_total": round(sum(duck_timings.values()), 3),
-            **c23,
-        },
-        separators=(",", ":"),
-    )
-    for k in (5, 2, 1, 0):
-        if len(line) <= budget:
-            break
-        kept = dict(sorted(heavy_ratios.items(), key=lambda kv: -kv[1])[:k])
-        compact = {
-            "metric": "headline_queries_total_runtime",
-            "value": total,
-            "unit": "sec",
-            "queries": {n: round(t, 2) for n, t in timings.items()},
-            "sf": sf,
-            "spark_over_duck_heavy": kept,
-            "heavy_shed": max(len(heavy_ratios) - len(kept), 0),
-            **c23,
-        }
-        if k == 5:  # only the roomiest compact form keeps duck_total
-            compact["duck_total"] = round(sum(duck_timings.values()), 2)
-        line = json.dumps(compact, separators=(",", ":"))
-    # Rung 3: the queries map ITSELF no longer fits (the headline set
-    # crossed 60 entries in r12 — the k=0 form overflowed and the old
-    # chain fell to the headline-only last resort, dropping the map the
-    # whole ladder exists to protect). The COMMON23 members are
-    # UNSHEDDABLE (r13 PERF lesson: slowest-only shedding made improved
-    # fast queries read as "dropped_from_bench" in the cross-round
-    # comparison — the frozen comparable set must always be readable
-    # from the line itself); the remaining slots keep the SLOWEST
-    # non-c23 entries — the ones a reader adjudicates by — and the shed
-    # count stays visible; the full map is always in bench_detail.json.
-    for q in (50, 40, 30, 20):
-        if len(line) <= budget:
-            break
-        protected = {n: t for n, t in timings.items() if n in COMMON23}
-        rest = sorted(
-            (kv for kv in timings.items() if kv[0] not in protected),
-            key=lambda kv: -kv[1],
-        )
-        slowest = dict(rest[: max(q - len(protected), 0)])
-        slowest.update(protected)
-        line = json.dumps(
+    queries = {n: round(t, 2) for n, t in timings.items()}
+
+    def line(keep) -> str:
+        kept = {n: t for n, t in queries.items() if n in keep}
+        return json.dumps(
             {
                 "metric": "headline_queries_total_runtime",
                 "value": total,
                 "unit": "sec",
-                "queries": {n: round(t, 2) for n, t in slowest.items()},
-                "queries_shed": len(timings) - len(slowest),
+                "queries": kept,
+                "queries_shed": len(queries) - len(kept),
                 "sf": sf,
                 **c23,
             },
             separators=(",", ":"),
         )
-    if len(line) > budget:  # last resort; headline + gate, never expected
-        line = json.dumps(
-            {
-                "metric": "headline_queries_total_runtime",
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                **c23,
-            },
-            separators=(",", ":"),
-        )
-    return line
+
+    full = line(queries)
+    if len(full) <= budget:
+        return full
+    keep = {n for n in queries if n in COMMON23}
+    for n in sorted(set(queries) - keep, key=lambda n: -queries[n]):
+        if len(line(keep | {n})) > budget:
+            break
+        keep.add(n)
+    return line(keep)
 
 
 if __name__ == "__main__":

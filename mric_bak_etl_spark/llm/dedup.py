@@ -29,6 +29,8 @@ with > N members as boilerplate) is the standard mitigation.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -293,9 +295,33 @@ def band_hashes(signatures: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, n_bands: int = N_BANDS, max_bucket: int = 10_000
-) -> DataFrame:
+def bucket_sizes(bands: DataFrame) -> DataFrame:
+    """``bands`` plus ``n``: the posting count of each row's
+    (band, band_hash) bucket — the one gate every capped LSH path
+    (l2/l2f, l40/l40b, the l42 crawl index) filters on.
+
+    The count is a WINDOW over the bucket key, taken BEFORE anything is
+    collected (optimization r14, guide §2.5/§5): collecting a bucket's
+    postings first and size-filtering after materializes the very
+    mega-buckets a cap exists to drop as single unspillable aggregation
+    buffers (a viral band at 100 TB = one task's OOM). The window rides
+    one exchange on the bucket key, its row buffer spills, and the rows
+    pass through as-is, so callers cap on ``n`` with no collect, no
+    re-explode and no anti-join. (doc_id, band) rows are unique per doc,
+    so count(*) IS the posting count.
+    """
+    return bands.withColumn(
+        "n", F.count(F.lit(1)).over(Window.partitionBy("band", "band_hash"))
+    )
+
+
+# Batch pair expansion's bucket cap (l2/l2f): drops degenerate buckets
+# (boilerplate colliding everywhere) and bounds the per-bucket O(b²)
+# expansion; sized far above anything in testdata.
+L2_MAX_BUCKET = 10_000
+
+
+def lsh_candidate_pairs(signatures: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     """Band the signature, hash each band, pair up docs within each
     (band, hash) bucket.
 
@@ -304,31 +330,20 @@ def lsh_candidate_pairs(
     and expanding i<j combinations JVM-side (collect_list + nested
     transform), not by self-joining the banded table: a self-join would
     evaluate the whole signature DAG twice, and its shuffle carries the
-    banded rows two times. ``max_bucket`` drops degenerate buckets
-    (boilerplate text colliding everywhere) — the standard cap that bounds
-    the per-bucket O(b²) expansion; sized far above anything in testdata.
+    banded rows two times. Buckets over ``L2_MAX_BUCKET`` are dropped.
     """
-    return _pairs_from_bands(band_hashes(signatures, n_bands), max_bucket)
+    return _pairs_from_bands(band_hashes(signatures, n_bands))
 
 
-def _pairs_from_bands(bands: DataFrame, max_bucket: int) -> DataFrame:
+def _pairs_from_bands(bands: DataFrame) -> DataFrame:
     """(band, band_hash)-bucketed pair expansion shared by the xxhash64 LSH
     (l2) and the portable md5 LSH (l2f) — band_hash may be int64 or string;
-    the grouping and i<j expansion are type-agnostic.
-
-    The bucket-size gate runs as a WINDOW count over the same partitioning
-    BEFORE collect_list (optimization r14, guide §2.5/§5): collecting a
-    bucket's postings first and size-filtering after materializes the very
-    mega-buckets the cap exists to drop as single unspillable aggregation
-    buffers (a viral band at 100 TB = one task's OOM). The window count
-    rides the identical exchange (same key), its row buffer spills, and
-    only under-cap rows ever reach the collect. (doc_id, band) rows are
-    unique per doc, so count(*) IS the posting count.
+    the grouping and i<j expansion are type-agnostic. Only buckets of
+    2..L2_MAX_BUCKET postings (:func:`bucket_sizes`) reach the collect.
     """
-    wb = Window.partitionBy("band", "band_hash")
     buckets = (
-        bands.withColumn("n", F.count(F.lit(1)).over(wb))
-        .filter((F.col("n") > 1) & (F.col("n") <= max_bucket))
+        bucket_sizes(bands)
+        .filter((F.col("n") > 1) & (F.col("n") <= L2_MAX_BUCKET))
         .groupBy("band", "band_hash")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
     )
@@ -631,8 +646,7 @@ def portable_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle text, as l2b's oracle does) serves signatures AND verify.
     sh_tbl = materialize(corpus.select("doc_id", shingles().alias("sh")))
     pairs = _pairs_from_bands(
-        portable_band_hashes(portable_minhash_signatures(sh_tbl)),
-        max_bucket=10_000,
+        portable_band_hashes(portable_minhash_signatures(sh_tbl))
     )
     return (
         exact_jaccard(sh_tbl, pairs)
@@ -1725,44 +1739,24 @@ _L40_BOILER_TEXT = (
 )
 
 
-@register(
-    "l40_incremental_banded_neardup",
-    oracle=None,  # MinHash banding depends on engine hash functions → no
-    # SQL oracle (same class as l2); recall on the planted revision class
-    # and the boilerplate cap are asserted in tests/test_llm.py.
-    doc="L40: the composition l39's doc promises — incremental near-dup "
-    "where the new batch probes the corpus' persisted MinHash BAND "
-    "index first and exact Jaccard verifies ONLY band survivors. "
-    "Index build: corpus → shingle hashes → narrow minhash signatures "
-    "→ (doc_id, band, band_hash) via band_hashes(); posting lists "
-    "longer than L40_MAX_POSTING are dropped AT INDEX BUILD as "
-    "boilerplate via a broadcast ANTI join against the (tiny) "
-    "hot-bucket list, so the index never shuffles for the cap "
-    "(planted here as L40_BOILER_COPIES identical disclaimer docs "
-    "whose bands exceed the cap at every SF). Probe: the new-batch "
-    "bands BROADCAST onto the capped index (increment is small vs the "
-    "corpus by contract; drop the hint if an increment outgrows "
-    "broadcast range) — candidate volume is bounded by cap × |new "
-    "bands|, never |new| × |corpus|; the corpus never self-joins and "
-    "is only scanned, not shuffled. "
-    "Verify: candidates (small — LSH survivors) broadcast "
-    "against the two shingle tables; exact set-overlap Jaccard ≥ 0.5 "
-    "is the emitted truth. Fixture probe batch: truncated revisions of "
-    "doc_id%10==4 docs (must match their source), synthetic fresh docs "
-    "(must match nothing), and ONE boilerplate probe doc that would "
-    "fan out to all 40 planted copies without the cap and generates "
-    "zero candidates with it (drop-as-boilerplate, l29_STOP_CAP "
-    "semantics). At 100 TB: the index is the persisted artifact, the "
-    "per-crawl cost is O(|new| + capped probe) — l38's incremental "
-    "shape applied to the LSH path end-to-end. Form selection: l40 is "
-    "what l41's profile picks at a heavy clone tail — the posting cap "
-    "bounds per-bucket fan-out, so a k-clone cluster costs O(cap), not "
-    "l41's Θ(k²) pair_volume (measured: 33 s vs 445 s on the k=100 "
-    "decade, SCALE.md); on a thin tail the batch pair forms (l2/l29) "
-    "skip the index build and are cheaper.",
-    tags=("llm", "dedup"),
-)
-def incremental_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _banded_probe(
+    spark: SparkSession,
+    sf_dir: str,
+    shingle: Callable[[], Column],
+    bands: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The l40/l40b incremental near-dup body, shared by both hash
+    families: ``shingle()`` is the shingle-set column and ``bands(sh)``
+    turns a (doc_id, sh) table into its (doc_id, band, band_hash) rows.
+
+    Index: corpus (+ the planted boilerplate block) banded once, buckets
+    over L40_MAX_POSTING dropped by :func:`bucket_sizes` — at scale this
+    runs once at index-BUILD time and the capped index is what persists.
+    Probe: the new batch's bands broadcast onto it. Verify: exact
+    set-overlap Jaccard >= 0.5 on band survivors only. Index once, probe
+    per batch: the shape of incremental top-k similarity search (EDBT
+    2020, PAPERS.md).
+    """
     from mric_bak_etl_spark.tables import materialize
 
     d = spread(
@@ -1775,24 +1769,9 @@ def incremental_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = d.unionByName(boiler)
     # ONE tokenize+shingle pass per side serves signatures AND the verify.
-    corpus_sh = materialize(
-        corpus.select("doc_id", shingle_hashes().alias("sh"))
-    )
-    index = band_hashes(minhash_signatures(corpus_sh))
-    # Document-frequency cap via ONE window count over the bucket key
-    # (optimization r14, guide §2.5/§5 — r13's one-groupBy shape kept the
-    # single signature pass but collect_list'd a bucket's FULL posting
-    # array before the size filter, so the boilerplate mega-buckets the
-    # cap exists to drop became single unspillable aggregation buffers —
-    # at 100 TB a viral band = one task's OOM). The window count rides
-    # the same single exchange, its row buffer spills, no posting array
-    # is ever materialized, and the under-cap rows pass through as-is
-    # (no collect + re-explode). Still one signature pass, one shuffle,
-    # no anti-join. At scale this runs once at index-BUILD time and the
-    # capped index is what persists.
-    wb = Window.partitionBy("band", "band_hash")
+    corpus_sh = materialize(corpus.select("doc_id", shingle().alias("sh")))
     capped_index = (
-        index.withColumn("n", F.count(F.lit(1)).over(wb))
+        bucket_sizes(bands(corpus_sh))
         .filter(F.col("n") <= L40_MAX_POSTING)
         .select(F.col("doc_id").alias("match_doc"), "band", "band_hash")
     )
@@ -1825,16 +1804,14 @@ def incremental_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    nb_sh = materialize(nb.select("doc_id", shingle_hashes().alias("sh")))
-    probe = band_hashes(minhash_signatures(nb_sh)).withColumnRenamed(
-        "doc_id", "new_id"
-    )
+    nb_sh = materialize(nb.select("doc_id", shingle().alias("sh")))
+    probe = bands(nb_sh).withColumnRenamed("doc_id", "new_id")
 
     # The probe side is the NEW BATCH — small relative to the corpus by
     # the operator's contract (a daily increment vs the accumulated
-    # index) — so broadcast it: the corpus index is never shuffled, only
-    # scanned. If an increment outgrows broadcast range, drop the hint
-    # and this degrades to a shuffled hash join on (band, band_hash).
+    # index) — so broadcast it: the capped index is never shuffled again,
+    # only scanned. If an increment outgrows broadcast range, drop the
+    # hint and this degrades to a shuffled hash join on (band, band_hash).
     candidates = (
         F.broadcast(probe)
         .join(capped_index, ["band", "band_hash"])
@@ -1866,6 +1843,48 @@ def incremental_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= 0.5)
+    )
+
+
+@register(
+    "l40_incremental_banded_neardup",
+    oracle=None,  # MinHash banding depends on engine hash functions → no
+    # SQL oracle (same class as l2); recall on the planted revision class
+    # and the boilerplate cap are asserted in tests/test_llm.py.
+    doc="L40: the composition l39's doc promises — incremental near-dup "
+    "where the new batch probes the corpus' persisted MinHash BAND "
+    "index first and exact Jaccard verifies ONLY band survivors. "
+    "Index build: corpus → shingle hashes → narrow minhash signatures "
+    "→ (doc_id, band, band_hash) via band_hashes(); posting lists "
+    "longer than L40_MAX_POSTING are dropped AT INDEX BUILD as "
+    "boilerplate by the bucket_sizes() window count — one exchange on "
+    "the bucket key whose row buffer spills, no posting list collected "
+    "(planted here as L40_BOILER_COPIES identical disclaimer docs "
+    "whose bands exceed the cap at every SF). Probe: the new-batch "
+    "bands BROADCAST onto the capped index (increment is small vs the "
+    "corpus by contract; drop the hint if an increment outgrows "
+    "broadcast range) — candidate volume is bounded by cap × |new "
+    "bands|, never |new| × |corpus|; the corpus never self-joins. "
+    "Verify: candidates (small — LSH survivors) broadcast "
+    "against the two shingle tables; exact set-overlap Jaccard ≥ 0.5 "
+    "is the emitted truth. Fixture probe batch: truncated revisions of "
+    "doc_id%10==4 docs (must match their source), synthetic fresh docs "
+    "(must match nothing), and ONE boilerplate probe doc that would "
+    "fan out to all 40 planted copies without the cap and generates "
+    "zero candidates with it (drop-as-boilerplate, l29_STOP_CAP "
+    "semantics). At 100 TB: the index is the persisted artifact, the "
+    "per-crawl cost is O(|new| + capped probe) — l38's incremental "
+    "shape applied to the LSH path end-to-end. Form selection: l40 is "
+    "what l41's profile picks at a heavy clone tail — the posting cap "
+    "bounds per-bucket fan-out, so a k-clone cluster costs O(cap), not "
+    "l41's Θ(k²) pair_volume (measured: 33 s vs 445 s on the k=100 "
+    "decade, SCALE.md); on a thin tail the batch pair forms (l2/l29) "
+    "skip the index build and are cheaper.",
+    tags=("llm", "dedup"),
+)
+def incremental_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _banded_probe(
+        spark, sf_dir, shingle_hashes, lambda sh: band_hashes(minhash_signatures(sh))
     )
 
 
@@ -1945,8 +1964,8 @@ _L40B_BANDS_SQL = """SELECT doc_id, b.band,
     doc="L40b: l40's incremental banded near-dup on the PORTABLE hash "
     "family (l2f's md5 signatures and band keys) — identical plan shape "
     "to l40: capped band index built once from the corpus (+ the planted "
-    "boilerplate block, whose over-cap postings the build drops via the "
-    "broadcast ANTI join), the new batch's bands broadcast onto the "
+    "boilerplate block, whose over-cap postings the build drops by the "
+    "bucket_sizes() window count), the new batch's bands broadcast onto the "
     "capped index, exact string-shingle Jaccard >= 0.5 on band survivors "
     "only. Because every intermediate is engine-neutral md5, this twin "
     "carries a FULL value oracle: DuckDB rebuilds the same index, drops "
@@ -1957,100 +1976,19 @@ _L40B_BANDS_SQL = """SELECT doc_id, b.band,
     "sketch index persisted by one engine be probed by another). "
     "LSH recall < 1 applies identically on both sides: a revision whose "
     "bands all miss is absent from BOTH engines' output by the same "
-    "deterministic arithmetic. At 100 TB the plan is l40's: zero "
-    "hashpartitioning exchanges, corpus scanned never shuffled, "
-    "per-crawl cost O(|new| + capped probe) at ~2x the xxhash wall.",
+    "deterministic arithmetic. At 100 TB the plan is l40's (one "
+    "_banded_probe body, the hash family passed in): one bucket-key "
+    "exchange for the cap, the probe broadcast, per-crawl cost "
+    "O(|new| + capped probe) at ~2x the xxhash wall.",
     tags=("llm", "dedup"),
 )
 def portable_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mric_bak_etl_spark.tables import materialize
-
-    d = spread(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        "doc_id",
-    )
-    boiler = spark.range(L40_BOILER_COPIES).select(
-        (F.col("id") + 8_000_000).alias("doc_id"),
-        F.lit(_L40_BOILER_TEXT).alias("text"),
-    )
-    corpus = d.unionByName(boiler)
-    # STRING shingles (the portable hash needs shingle text); one
-    # tokenize+shingle pass per side serves signatures AND the verify.
-    corpus_sh = materialize(corpus.select("doc_id", shingles().alias("sh")))
-    index = portable_band_hashes(portable_minhash_signatures(corpus_sh))
-    # Same window-count capped-index shape as l40/build_crawl_index
-    # (optimization r14, guide §2.5/§5): one signature pass, one shuffle,
-    # no anti-join, and no per-bucket posting array is ever collected —
-    # the size gate runs before any aggregation state builds up;
-    # identical posting set, so the DuckDB rebuild oracle is unchanged.
-    wb = Window.partitionBy("band", "band_hash")
-    capped_index = (
-        index.withColumn("n", F.count(F.lit(1)).over(wb))
-        .filter(F.col("n") <= L40_MAX_POSTING)
-        .select(F.col("doc_id").alias("match_doc"), "band", "band_hash")
-    )
-
-    nb = (
-        d.filter(F.col("doc_id") % 10 == 4)
-        .select(
-            (F.col("doc_id") + 9_000_000).alias("doc_id"),
-            F.array_join(
-                F.slice(
-                    tokens(), 1, F.greatest(F.size(tokens()) - 5, F.lit(1))
-                ),
-                " ",
-            ).alias("text"),
-        )
-        .unionByName(
-            d.filter(F.col("doc_id") % 10 == 6).select(
-                (F.col("doc_id") + 9_500_000).alias("doc_id"),
-                F.concat(
-                    F.lit("fresh content "),
-                    F.col("doc_id").cast("string"),
-                    F.lit(" entirely new tokens"),
-                ).alias("text"),
-            )
-        )
-        .unionByName(
-            spark.range(1).select(
-                F.lit(9_999_999).cast("long").alias("doc_id"),
-                F.lit(_L40_BOILER_TEXT).alias("text"),
-            )
-        )
-    )
-    nb_sh = materialize(nb.select("doc_id", shingles().alias("sh")))
-    probe = portable_band_hashes(
-        portable_minhash_signatures(nb_sh)
-    ).withColumnRenamed("doc_id", "new_id")
-
-    candidates = (
-        F.broadcast(probe)
-        .join(capped_index, ["band", "band_hash"])
-        .select("new_id", "match_doc")
-        .distinct()
-    )
-    return (
-        F.broadcast(candidates)
-        .join(
-            nb_sh.select(F.col("doc_id").alias("new_id"), F.col("sh").alias("sh_a")),
-            "new_id",
-        )
-        .join(
-            corpus_sh.select(
-                F.col("doc_id").alias("match_doc"), F.col("sh").alias("sh_b")
-            ),
-            "match_doc",
-        )
-        .select(
-            "new_id",
-            "match_doc",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
+    # STRING shingles: the portable hash needs shingle text.
+    return _banded_probe(
+        spark,
+        sf_dir,
+        shingles,
+        lambda sh: portable_band_hashes(portable_minhash_signatures(sh)),
     )
 
 
@@ -2196,9 +2134,8 @@ def build_crawl_index(
     production pipeline PERSISTS (l42b) and l42 computes inline as its
     self-contained oracle face: the distinct content-hash set (l38's
     index), the CAPPED portable band table (l40's index on l2f's md5
-    family; buckets holding more than ``cap`` docs dropped at build —
-    the hot list is tiny, so one narrow count aggregate and a broadcast
-    ANTI join; the index never shuffles for the cap), and the full
+    family; buckets holding more than ``cap`` docs dropped at build by
+    the :func:`bucket_sizes` window count), and the full
     per-bucket COUNT table (band, band_hash, n) over ALL buckets
     including hot ones. The counts are one row per distinct bucket —
     tiny next to the postings — and are what make the cap INCREMENTALLY
@@ -2212,22 +2149,11 @@ def build_crawl_index(
         portable_minhash_signatures(corpus_sh, n_hashes=n_hashes),
         n_bands=n_bands,
     )
-    # Optimization r13 kept ONE signature pass (the pre-r13 anti-join
-    # form evaluated the 16-md5 pass twice) but collect_list'd every
-    # bucket's full posting array before the cap filter; r14 replaces
-    # the collect with a WINDOW count over the same (band, band_hash)
-    # partitioning (guide §2.5/§5): a boilerplate mega-bucket at 100 TB
-    # would materialize as one unspillable aggregation buffer on one
-    # task, while the window's row buffer spills and the cap drops its
-    # rows before anything is collected. Both artifacts still ride ONE
-    # exchange of ONE signature pass: the capped table is the under-cap
-    # rows passed through (no collect + re-explode), the count table a
+    # Both artifacts ride ONE exchange of ONE signature pass: the capped
+    # table is the under-cap rows passed through, the count table a
     # distinct over the same windowed rows (already partitioned by the
     # bucket key — no further exchange), covering hot buckets too.
-    wb = Window.partitionBy("band", "band_hash")
-    gated = index_bands.withColumn(
-        "n", F.count(F.lit(1)).over(wb).cast("bigint")
-    )
+    gated = bucket_sizes(index_bands)
     counts = gated.select("band", "band_hash", "n").distinct()
     # Column order (band, band_hash, doc_id) matches the r12 artifact
     # layout (the pre-r13 USING-join put keys first); the l42c fold's

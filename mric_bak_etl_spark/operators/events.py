@@ -24,21 +24,6 @@ from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.tables import load_table, materialize
 
 
-def _step_min(ev: DataFrame, etype: str, after: DataFrame | None, ts_col: str) -> DataFrame:
-    """Per-user min(ts) of `etype` events at-or-after the prior step.
-
-    (Kept as the composable step API; e1_funnel itself uses the fused
-    single-pass form below — chaining these recomputes each step's
-    lineage once per downstream consumer.)
-    """
-    e = ev.filter(F.col("event_type") == etype)
-    if after is not None:
-        e = e.join(F.broadcast(after), "user_id").filter(
-            F.col("ts") >= F.col(after.columns[1])
-        )
-    return e.groupBy("user_id").agg(F.min("ts").alias(ts_col))
-
-
 @register(
     "e1_funnel",
     oracle="""

@@ -68,17 +68,14 @@ def filter_snapshots(names: DataFrame, pattern: str = ".zip") -> DataFrame:
     return names.filter(F.col("name").contains(pattern))
 
 
-def is_empty(names: DataFrame) -> bool:
-    """R4: empty guard — lazy limit-1 probe, not a full count."""
-    return names.isEmpty()
-
-
 def latest_snapshot(names: DataFrame) -> DataFrame:
     """R5+R6: the "latest" snapshot = lexicographic max of the name.
 
-    One-row DataFrame. ``agg(max)`` == ``orderBy(desc).limit(1)`` (the
-    latter fuses to TakeOrderedAndProject); max is cheaper still — partial
-    max per partition, single-row combine, no heap.
+    One-row DataFrame whose name is NULL when ``names`` is empty — the R4
+    empty guard rides the same action. ``agg(max)`` ==
+    ``orderBy(desc).limit(1)`` (the latter fuses to TakeOrderedAndProject);
+    max is cheaper still — partial max per partition, single-row combine,
+    no heap.
 
     Fidelity note: lexicographic order of the *filename*, NOT modification
     time — exactly the reference's semantics (`src/bak_unload.ps1:44-52`),

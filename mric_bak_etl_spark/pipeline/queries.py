@@ -18,7 +18,10 @@ from pyspark.sql import functions as F
 
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.pipeline import manifest, state, unzip
-from mric_bak_etl_spark.pipeline.snapshot import overwrite_snapshot
+from mric_bak_etl_spark.pipeline.snapshot import (
+    overwrite_snapshot,
+    overwrite_snapshot_jdbc,
+)
 from mric_bak_etl_spark.tables import load_table
 
 
@@ -287,14 +290,7 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # output partition).
         .coalesce(4)
     )
-    (
-        slice_df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "orders_snap")
-        .option("driver", JDBC_DRIVER)
-        .mode("overwrite")
-        .save()
-    )
+    overwrite_snapshot_jdbc(slice_df, url, "orders_snap", {"driver": JDBC_DRIVER})
     back = (
         spark.read.format("jdbc")
         .option("url", url)

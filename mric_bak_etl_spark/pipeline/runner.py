@@ -7,7 +7,7 @@ The reference's full control flow (`src/bak_unload.ps1:21-126`):
     full-refresh load → commit state → cleanup
 
 A traced benchmark run (``perfbench/run.py --workload ingest --trace 1``)
-counts 9 Spark jobs for a scheduled run that loads a snapshot and 4 for
+counts 8 Spark jobs for a scheduled run that loads a snapshot and 3 for
 one that stops at the already-imported check.
 
 Batch :func:`run_batch` reproduces exactly that decision structure
@@ -28,6 +28,7 @@ import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from mric_bak_etl_spark.pipeline import manifest, state, unzip
 from mric_bak_etl_spark.pipeline.snapshot import overwrite_snapshot
@@ -59,17 +60,15 @@ def run_batch(
     listing = manifest.manifest_from_directory(spark, blob_dir)
     candidates = manifest.filter_snapshots(listing.select("name"), snapshot_pattern)
 
-    if manifest.is_empty(candidates):  # R4, `src/bak_unload.ps1:38-42`
+    # R5+R6 as one 1-row action; the max over no names is NULL, which is
+    # R4's empty guard (`src/bak_unload.ps1:38-42`).
+    snapshot_name = manifest.latest_snapshot(candidates).first()["name"]
+    if snapshot_name is None:
         return RunResult(status="empty")
 
-    latest = manifest.latest_snapshot(candidates)  # R5+R6
-
-    seen = state.read_state(spark, state_dir)
-    fresh = state.filter_unprocessed(latest, seen)  # R7
-    picked = fresh.collect()  # 1-row driver decision, like the reference's if
-    if not picked:  # `src/bak_unload.ps1:57-65`
+    seen = state.read_state(spark, state_dir)  # R7, `src/bak_unload.ps1:57-65`
+    if not seen.filter(F.col("name") == snapshot_name).isEmpty():
         return RunResult(status="already_imported")
-    snapshot_name = picked[0]["name"]
 
     # R8 is free: executors read the winning blob directly — no copy step.
     # The name goes to the file listing as a glob, so no other archive in

@@ -9,8 +9,8 @@ Spark-first: ``write.mode("overwrite")`` IS drop-and-replace, but staged —
 the new data is written before the swap, so readers never observe the
 in-between state. We deliberately do NOT reproduce the reference's
 non-atomicity (SURVEY §4.2). The JDBC variant targets the same SQL Server
-shape the reference loads into; it is config-gated because no JDBC driver
-jar ships in this environment.
+shape the reference loads into; ``s13_jdbc_roundtrip`` runs it against the
+embedded Derby driver that ships with the Spark distribution.
 
 Scale notes (100 TB): ``partition_by`` columns turn the snapshot into a
 partition-pruned table for downstream readers; writer parallelism is the
@@ -27,11 +27,8 @@ def overwrite_snapshot(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    target_files: int | None = None,
 ) -> None:
     """R11 as an atomic staged replace: parquet ``mode("overwrite")``."""
-    if target_files:
-        df = df.repartition(target_files)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -50,8 +47,8 @@ def overwrite_snapshot_jdbc(
     restore only because DROP DATABASE destroys users; a truncate-load
     preserves them, so the grant step becomes a no-op by design.
 
-    Requires the JDBC driver jar on the classpath (not shipped here; the
-    parquet path above is the tested sink).
+    Requires the target's JDBC driver jar on the classpath; embedded Derby
+    ships with Spark and is what ``s13_jdbc_roundtrip`` writes through.
     """
     writer = (
         df.write.format("jdbc")

@@ -79,30 +79,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Input bytes one CPU-dense task should own (spread): much smaller than a
-# scan split (128 MB+) because per-byte work downstream of a spread —
-# shingling, minhash folds, binary decodes in pandas — runs 10-100x a
-# plain scan. A/B-measured at the bench's measurement point
-# (OPTIMIZATION_r14.md).
-SPREAD_DENSE_PARTITION_BYTES = 256 << 10
-
-
-def _plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst's own size estimate for an UNEXECUTED plan (file sizes
-    propagated through projections) — the local analogue of the catalog
-    statistics a cluster engine sizes operators with. None on any
-    failure: sizing must never break a query."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().toString()
-        )
-    except Exception:
-        return None
-
-
 def spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition ahead of CPU-dense per-row work, sized to INPUT BYTES
-    and capped at engine parallelism.
+    """Repartition to ``default_parallelism()`` ahead of CPU-dense per-row
+    work.
 
     Parquet map-side parallelism is bounded by row-group count; a file
     written as one row group scans as ONE task no matter how many cores
@@ -114,26 +93,10 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     exchange hash-partitioned (reusable by a downstream groupBy/join on
     the same keys); otherwise round-robin.
 
-    Sizing (optimization r14, guide §2.2): an unconditional fan-out to
-    core count schedules cores-many tasks and Python workers for inputs
-    of a few hundred KB — pure per-task overhead at fixture scale, and
-    the reason the engine's scaling curve bent at low core counts. The
-    partition count is bytes/SPREAD_DENSE_PARTITION_BYTES clamped to
-    [1, default_parallelism()]: small inputs stay on few tasks, and the
-    count grows with data until the core cap — at cluster scale the cap
-    binds and this is exactly the old full fan-out.
+    The count is the core count at every input size: it is not sized to
+    input bytes (``sized_parallelism`` is the byte-sized rule).
     """
-    size = _plan_bytes(df)
-    if size is None:
-        n = default_parallelism()
-    else:
-        n = max(
-            1,
-            min(
-                default_parallelism(),
-                -(-size // SPREAD_DENSE_PARTITION_BYTES),
-            ),
-        )
+    n = default_parallelism()
     return df.repartition(n, *[F.col(c) for c in cols]) if cols else df.repartition(n)
 
 
@@ -194,10 +157,6 @@ def sized_parallelism(
         return default_parallelism()
     n_by_bytes = max(1, -(-size // per_partition_bytes))
     return int(max(n_by_bytes, min(8, default_parallelism())))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def register_views(

@@ -44,115 +44,70 @@ def test_headline_names_resolve_and_cover_common23():
     )
 
 
-def _ladder_inputs(n_queries: int, n_heavy: int):
-    """Synthetic bench results sized to force specific ladder rungs."""
-    timings = {f"q{i:03d}_some_operator_name": 1.234 for i in range(n_queries)}
+def _line_inputs(n_queries: int):
+    """Synthetic bench results: n long-named queries plus COMMON23."""
+    sys.path.insert(0, _ROOT)
+    import bench
+
+    timings = {f"q{i:03d}_some_operator_name": 1.0 + i / 100 for i in range(n_queries)}
     duck = {n: 0.345 for n in timings}
-    heavy = {n: 3.6 for n in list(timings)[:n_heavy]}
-    return timings, heavy, duck
-
-
-def test_bench_line_ladder_keeps_queries_map_and_gate():
-    """The shed ladder must drop ratio entries — never the per-query map
-    — and the c23 weather gate must survive every rung (r11 ADVICE: the
-    old decrement skipped the k=1/k=0 rungs and fell through to the
-    headline-only form, losing the map)."""
-    sys.path.insert(0, _ROOT)
-    import bench
-
-    # A heavy map big enough that the roomy form overflows, over a
-    # descending budget sweep. Invariant at every budget down to the
-    # k=0 rung: the per-query map and the c23 gate survive — only ratio
-    # entries shed. The r11 bug (rung sequence 5 → 2 → -1) is caught by
-    # the tightest budgets: they need the k=1/k=0 rungs the old
-    # decrement skipped.
-    timings, heavy, duck = _ladder_inputs(60, 20)
-    # Find the minimal budget at which the queries map survives — that
-    # is by construction the k=0 compact form's exact length.
-    k0_len = None
-    for budget in range(2800, 300, -1):
-        parsed = json.loads(
-            bench.compose_line(74.0, timings, 0.1, heavy, duck, budget=budget)
-        )
-        if "queries" not in parsed:
-            break
-        if "queries_shed" in parsed:  # rung 3: partial map, shed visible
-            assert len(parsed["queries"]) + parsed["queries_shed"] == len(
-                timings
-            )
-            assert "c23_ratio" in parsed
-            continue
-        k0_len = budget
-        assert set(parsed["queries"]) == set(timings)
-        assert "c23_ratio" in parsed and "duck_common23" in parsed
-        if "heavy_shed" in parsed:  # compact rungs: trim is visible
-            assert parsed["heavy_shed"] == len(heavy) - len(
-                parsed["spark_over_duck_heavy"]
-            )
-    assert k0_len is not None, "queries map never survived any budget"
-    # One notch below the minimal full-map budget: rung 3 keeps the
-    # SLOWEST queries with the shed visible (r12: the 60-entry headline
-    # overflowed even the k=0 form — the map must degrade to its
-    # slowest members, never vanish wholesale).
-    parsed = json.loads(
-        bench.compose_line(74.0, timings, 0.1, heavy, duck, budget=k0_len - 1)
-    )
-    assert "queries" in parsed and parsed["queries_shed"] > 0
-    assert len(parsed["queries"]) + parsed["queries_shed"] == len(timings)
-    assert "c23_ratio" in parsed and "duck_common23" in parsed
-    # Only below every rung-3 form does the map finally drop — and the
-    # gate still survives in the last resort.
-    parsed = json.loads(
-        bench.compose_line(74.0, timings, 0.1, heavy, duck, budget=320)
-    )
-    assert "queries" not in parsed
-    assert "c23_ratio" in parsed and "duck_common23" in parsed
-
-
-def test_bench_line_gate_survives_last_resort():
-    """Even the headline-only last resort must carry the c23 gate, and
-    the roomy form must carry it too."""
-    sys.path.insert(0, _ROOT)
-    import bench
-
-    # Tiny headline: roomy form fits.
-    timings, heavy, duck = _ladder_inputs(5, 2)
-    # Make the COMMON23 members present so the ratio is real.
     for n in bench.COMMON23:
         timings[n] = 2.0
         duck[n] = 0.4
-    line = bench.compose_line(10.0, timings, 0.01, heavy, duck)
+    return bench, timings, duck
+
+
+def test_bench_line_full_form_keeps_every_query_and_gate():
+    """A headline of today's size prints in the one full form: every
+    query at 2 dp, ``queries_shed`` 0 and the c23 gate, under the
+    default budget."""
+    bench, timings, duck = _line_inputs(61 - 23)
+    line = bench.compose_line(74.0, timings, 0.1, duck)
+    assert len(line) <= 1950
     parsed = json.loads(line)
-    assert parsed["c23_ratio"] == round(
+    assert parsed["queries"] == {n: round(t, 2) for n, t in timings.items()}
+    assert parsed["queries_shed"] == 0
+    assert set(parsed) == {
+        "metric", "value", "unit", "queries", "queries_shed", "sf",
+        "duck_common23", "duck_c23_n", "spark_common23", "c23_ratio",
+    }
+
+
+def test_bench_line_fallback_never_sheds_common23():
+    """Over budget, the fallback keeps every COMMON23 member — even the
+    fastest — plus the slowest other queries that fit, and the shed
+    count stays visible."""
+    bench, timings, duck = _line_inputs(60)
+    for n in bench.COMMON23:
+        timings[n] = 0.05  # the rows slowest-only shedding would drop first
+    line = bench.compose_line(74.0, timings, 0.1, duck, budget=1800)
+    assert len(line) <= 1800
+    parsed = json.loads(line)
+    kept = parsed["queries"]
+    assert parsed["queries_shed"] > 0
+    assert len(kept) + parsed["queries_shed"] == len(timings)
+    missing = [n for n in bench.COMMON23 if n not in kept]
+    assert not missing, f"c23 members shed from the line: {missing}"
+    others = sorted(
+        (n for n in timings if n not in bench.COMMON23), key=lambda n: -timings[n]
+    )
+    n_others = len(kept) - len(bench.COMMON23)
+    assert set(kept) - set(bench.COMMON23) == set(others[:n_others])
+    # The next-slowest query would not have fit.
+    wider = dict(kept, **{others[n_others]: round(timings[others[n_others]], 2)})
+    assert len(json.dumps(dict(parsed, queries=wider), separators=(",", ":"))) > 1800
+
+
+def test_bench_line_gate_in_both_forms():
+    """The c23 gate is exact in the full form and survives the fallback."""
+    bench, timings, duck = _line_inputs(5)
+    want = round(
         sum(timings[n] for n in bench.COMMON23)
         / sum(duck[n] for n in bench.COMMON23),
         2,
     )
-    # Pathological budget: every rung overflows → last resort still
-    # carries the gate fields.
-    line = bench.compose_line(10.0, timings, 0.01, heavy, duck, budget=250)
-    parsed = json.loads(line)
-    assert "queries" not in parsed  # genuinely the last resort
-    assert "c23_ratio" in parsed and "duck_common23" in parsed
-
-
-def test_bench_rung3_never_sheds_common23():
-    """Rung-3 shedding must keep every COMMON23 member present in the
-    timings map (r14, judge item 5: slowest-only shedding made improved
-    fast queries unreadable in the cross-round comparison; the frozen
-    comparable set is unsheddable, the shed count stays visible)."""
-    sys.path.insert(0, _ROOT)
-    import bench
-
-    timings, heavy, duck = _ladder_inputs(60, 20)
-    # c23 members timed FAST — exactly the rows slowest-only shedding
-    # would drop first.
-    for n in bench.COMMON23:
-        timings[n] = 0.05
-        duck[n] = 0.4
-    line = bench.compose_line(74.0, timings, 0.1, heavy, duck, budget=1800)
-    parsed = json.loads(line)
-    assert "queries_shed" in parsed and parsed["queries_shed"] > 0
-    missing = [n for n in bench.COMMON23 if n not in parsed["queries"]]
-    assert not missing, f"c23 members shed from the line: {missing}"
-    assert len(parsed["queries"]) + parsed["queries_shed"] == len(timings)
+    full = json.loads(bench.compose_line(10.0, timings, 0.01, duck))
+    assert full["queries_shed"] == 0 and full["c23_ratio"] == want
+    short = json.loads(bench.compose_line(10.0, timings, 0.01, duck, budget=250))
+    assert short["queries_shed"] > 0 and short["c23_ratio"] == want
+    assert short["duck_c23_n"] == len(bench.COMMON23)

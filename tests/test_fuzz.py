@@ -1201,8 +1201,7 @@ def build_psketch_spark(spark, sf_dir: str, case: dict):
         portable_band_hashes(
             portable_minhash_signatures(sh_tbl, n_hashes=case["n_hashes"]),
             n_bands=case["n_bands"],
-        ),
-        max_bucket=10_000,
+        )
     )
     return (
         exact_jaccard(sh_tbl, pairs)

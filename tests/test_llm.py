@@ -790,9 +790,7 @@ def test_portable_band_index_auditable_by_duckdb(spark, sf_dir, tmp_path, duck):
 
     spark_pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in _pairs_from_bands(
-            spark.read.parquet(path), max_bucket=10_000
-        ).collect()
+        for r in _pairs_from_bands(spark.read.parquet(path)).collect()
     }
     duck_pairs = {
         tuple(r)
