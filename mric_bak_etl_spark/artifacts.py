@@ -1,0 +1,62 @@
+"""Persisted artifacts: one key recipe and one write-audit-publish path.
+
+An artifact (l26c merge table, m14 archive column, l43 model, l42b/l42c
+crawl indexes, l3f ANN index) lives in a dir keyed by the identity of
+the parquet it was built from (absolute path + size + mtime) and by the
+config that built it, so a regenerated corpus or a retuned builder
+invalidates it instead of serving stale state.
+
+The root is the user-owned XDG cache, NOT the world-shared tempdir: on
+a multi-user box a predictable /tmp path lets any local user plant a
+"published" dir that the apply face would trust (r11 ADVICE). Each
+artifact's load-time audit is the second line of defense.
+
+Publishing is s11's write-audit-publish, the atomic form of the
+reference's DROP-then-RESTORE swap: write to a staging dir beside the
+target, audit what was actually written, then one directory rename.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
+
+
+def artifact_dir(sf_dir: str, table: str, root: str, config: str) -> str:
+    """``$XDG_CACHE_HOME/<root>/<key>`` for the artifact built from
+    ``<sf_dir>/<table>.parquet`` under ``config``."""
+    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
+    key = hashlib.sha256(
+        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}|{config}"
+        .encode()
+    ).hexdigest()[:16]
+    cache_root = os.environ.get(
+        "XDG_CACHE_HOME", os.path.join(os.path.expanduser("~"), ".cache")
+    )
+    return os.path.join(cache_root, root, key)
+
+
+def publish(target: str, write: Callable[[str], None]) -> str:
+    """Return ``target``, publishing it first if it does not exist.
+
+    ``write(staging)`` writes into a fresh ``_staging_*`` dir beside
+    ``target`` and audits what it wrote; it raises to refuse the
+    publish. A crash or refusal leaves only that staging dir, which no
+    reader opens. Concurrent publishers race benignly: the loser's
+    rename fails against the winner's dir and it removes its staging."""
+    if os.path.isdir(target):
+        return target
+    parent = os.path.dirname(target)
+    os.makedirs(parent, exist_ok=True)
+    staging = tempfile.mkdtemp(prefix="_staging_", dir=parent)
+    write(staging)
+    try:
+        os.rename(staging, target)  # atomic on POSIX
+    except OSError:
+        if not os.path.isdir(target):
+            raise  # a real failure, not a lost publish race
+        shutil.rmtree(staging, ignore_errors=True)
+    return target

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mric_bak_etl_spark.catalog import register
+from mric_bak_etl_spark.session import scratch_dir
 from mric_bak_etl_spark.tables import load_table, register_views
 
 
@@ -1564,12 +1565,11 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "pipeline", "sink"),
 )
 def sql_ddl_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     register_views(spark, sf_dir, only=("orders",))
     tbl = f"q10_orders_{uuid.uuid4().hex[:8]}"
-    loc = tempfile.mkdtemp(prefix="q10_tbl_")
+    loc = scratch_dir("q10_tbl_")
     spark.sql(
         f"""
         CREATE TABLE {tbl} (o_orderkey BIGINT, o_totalprice DOUBLE,
@@ -1632,14 +1632,13 @@ def sql_ddl_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql",),
 )
 def catalog_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     import uuid
 
     register_views(spark, sf_dir, only=("events",))
     tag = uuid.uuid4().hex[:8]
     facts, lookup = f"q11_facts_{tag}", f"q11_lookup_{tag}"
-    loc1 = tempfile.mkdtemp(prefix="q11_facts_")
-    loc2 = tempfile.mkdtemp(prefix="q11_lookup_")
+    loc1 = scratch_dir("q11_facts_")
+    loc2 = scratch_dir("q11_lookup_")
     spark.sql(
         f"""
         CREATE TABLE {facts} USING PARQUET LOCATION '{loc1}' AS

@@ -34,6 +34,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mric_bak_etl_spark.artifacts import artifact_dir, publish
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.llm.text import tokens
 from mric_bak_etl_spark.tables import load_table, spread
@@ -2652,23 +2653,12 @@ def incremental_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _crawl_index_artifact_base(sf_dir: str) -> str:
-    """Versioned location of the persisted crawl indexes for ``sf_dir``
-    — corpus identity + index config (hash family, band geometry,
-    posting cap) in the key; user-owned XDG cache root (the l26c/m14/
-    l43 shape applied to the fourth artifact kind: INDEX state)."""
-    import hashlib
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}"
-        f"|crawlidx-v2-md5x{N_MINHASHES}-b{N_BANDS}-cap{L42_MAX_POSTING}"
-        .encode()
-    ).hexdigest()[:16]
-    cache_root = os.environ.get(
-        "XDG_CACHE_HOME", os.path.join(os.path.expanduser("~"), ".cache")
+    """Keyed by the index config: hash family, band geometry, posting
+    cap."""
+    config = f"crawlidx-v2-md5x{N_MINHASHES}-b{N_BANDS}-cap{L42_MAX_POSTING}"
+    return artifact_dir(
+        sf_dir, "documents", "mric_crawl_index_artifacts", config
     )
-    return os.path.join(cache_root, "mric_crawl_index_artifacts", key)
 
 
 L42_CAP_WARN_FRAC = 0.05  # annotate when > 5% of buckets are capped
@@ -2697,125 +2687,113 @@ def publish_crawl_index(spark: SparkSession, sf_dir: str) -> str:
     cluster-representative form (l32/l2e) instead of trusting the
     probe."""
     import os
-    import shutil
-    import tempfile
     import warnings
 
-    base = _crawl_index_artifact_base(sf_dir)
-    published = os.path.join(base, "published")
-    if os.path.isdir(published):
-        return published
-    os.makedirs(base, exist_ok=True)
-    staging = tempfile.mkdtemp(prefix="_staging_", dir=base)
-    d = spread(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        "doc_id",
-    )
-    corpus_h, capped_index, counts = build_crawl_index(d)
-    corpus_h.write.mode("overwrite").parquet(os.path.join(staging, "hashes"))
-    capped_index.write.mode("overwrite").parquet(
-        os.path.join(staging, "bands")
-    )
-    counts.write.mode("overwrite").parquet(os.path.join(staging, "counts"))
-    h = spark.read.parquet(os.path.join(staging, "hashes"))
-    h_row = h.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("h").alias("nd"),
-        F.sum(F.col("h").isNull().cast("int")).alias("nulls"),
-    ).collect()[0]
-    b = spark.read.parquet(os.path.join(staging, "bands"))
-    b_row = b.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("band").alias("max_band"),
-        F.min("band").alias("min_band"),
-        F.sum(
-            (F.col("band_hash").isNull() | F.col("doc_id").isNull()).cast(
-                "int"
+    def write(staging: str) -> None:
+        d = spread(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+            "doc_id",
+        )
+        index = build_crawl_index(d)
+        for name, df_ in zip(("hashes", "bands", "counts"), index):
+            df_.write.mode("overwrite").parquet(os.path.join(staging, name))
+        h = spark.read.parquet(os.path.join(staging, "hashes"))
+        h_row = h.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("h").alias("nd"),
+            F.sum(F.col("h").isNull().cast("int")).alias("nulls"),
+        ).collect()[0]
+        b = spark.read.parquet(os.path.join(staging, "bands"))
+        b_row = b.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max("band").alias("max_band"),
+            F.min("band").alias("min_band"),
+            F.sum(
+                (F.col("band_hash").isNull() | F.col("doc_id").isNull()).cast(
+                    "int"
+                )
+            ).alias("nulls"),
+        ).collect()[0]
+        cap_row = (
+            b.groupBy("band", "band_hash")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(F.max("n").alias("max_posting"))
+            .collect()[0]
+        )
+        # Cross-table invariant: the capped band table must hold EXACTLY
+        # the postings of the count table's under-cap buckets — a packer
+        # that dropped the wrong buckets (or a stale counts write) shows up
+        # as a mismatch row. Both sides are bucket-grain (tiny next to the
+        # postings); one join, one count.
+        c = spark.read.parquet(os.path.join(staging, "counts"))
+        staged_counts = b.groupBy("band", "band_hash").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_b")
+        )
+        mismatches = (
+            c.filter(F.col("n") <= L42_MAX_POSTING)
+            .join(staged_counts, ["band", "band_hash"], "full_outer")
+            .filter(
+                F.col("n").isNull()
+                | F.col("n_b").isNull()
+                | (F.col("n") != F.col("n_b"))
             )
-        ).alias("nulls"),
-    ).collect()[0]
-    cap_row = (
-        b.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("max_posting"))
-        .collect()[0]
-    )
-    # Cross-table invariant: the capped band table must hold EXACTLY
-    # the postings of the count table's under-cap buckets — a packer
-    # that dropped the wrong buckets (or a stale counts write) shows up
-    # as a mismatch row. Both sides are bucket-grain (tiny next to the
-    # postings); one join, one count.
-    c = spark.read.parquet(os.path.join(staging, "counts"))
-    staged_counts = b.groupBy("band", "band_hash").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_b")
-    )
-    mismatches = (
-        c.filter(F.col("n") <= L42_MAX_POSTING)
-        .join(staged_counts, ["band", "band_hash"], "full_outer")
-        .filter(
-            F.col("n").isNull()
-            | F.col("n_b").isNull()
-            | (F.col("n") != F.col("n_b"))
+            .count()
         )
-        .count()
-    )
-    # The duplication-regime annotation (counts over ALL buckets).
-    c_row = c.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum((F.col("n") > L42_MAX_POSTING).cast("int")).alias("n_capped"),
-    ).collect()[0]
-    n_buckets = c_row["n_buckets"] or 0
-    n_capped = c_row["n_capped"] or 0
-    capped_frac = (n_capped / n_buckets) if n_buckets else 1.0
-    dup_warning = capped_frac > L42_CAP_WARN_FRAC
-    # Empty-band-table note: a corpus that is wall-to-wall verbatim
-    # copies (the ×100 stress corpus: ~100 copies of every text) puts
-    # EVERY bucket over the posting cap, so an empty capped index is
-    # semantically correct — copies are the exact-hash index's job, and
-    # drop-as-boilerplate says the near-dup probe matches nothing. The
-    # aggregates over an empty frame come back NULL, hence the `or 0`
-    # coalesces (a real bug found by that corpus: `None == 0` failed a
-    # valid publish).
-    ok = (
-        h_row["n"] == h_row["nd"]
-        and (h_row["nulls"] or 0) == 0
-        and (b_row["nulls"] or 0) == 0
-        and (
-            b_row["n"] == 0
-            or (0 <= b_row["min_band"] and b_row["max_band"] < N_BANDS)
+        # The duplication-regime annotation (counts over ALL buckets).
+        c_row = c.agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.sum((F.col("n") > L42_MAX_POSTING).cast("int")).alias(
+                "n_capped"
+            ),
+        ).collect()[0]
+        n_buckets = c_row["n_buckets"] or 0
+        n_capped = c_row["n_capped"] or 0
+        capped_frac = (n_capped / n_buckets) if n_buckets else 1.0
+        dup_warning = capped_frac > L42_CAP_WARN_FRAC
+        # Empty-band-table note: a corpus that is wall-to-wall verbatim
+        # copies (the ×100 stress corpus: ~100 copies of every text) puts
+        # EVERY bucket over the posting cap, so an empty capped index is
+        # semantically correct — copies are the exact-hash index's job, and
+        # drop-as-boilerplate says the near-dup probe matches nothing. The
+        # aggregates over an empty frame come back NULL, hence the `or 0`
+        # coalesces (a real bug found by that corpus: `None == 0` failed a
+        # valid publish).
+        ok = (
+            h_row["n"] == h_row["nd"]
+            and (h_row["nulls"] or 0) == 0
+            and (b_row["nulls"] or 0) == 0
+            and (
+                b_row["n"] == 0
+                or (0 <= b_row["min_band"] and b_row["max_band"] < N_BANDS)
+            )
+            and (cap_row["max_posting"] or 0) <= L42_MAX_POSTING
+            and mismatches == 0
         )
-        and (cap_row["max_posting"] or 0) <= L42_MAX_POSTING
-        and mismatches == 0
-    )
-    if not ok:
-        raise ValueError(
-            f"crawl-index audit failed (hashes {tuple(h_row)}, bands "
-            f"{tuple(b_row)}, max_posting {tuple(cap_row)}, "
-            f"count mismatches {mismatches}) — NOT published"
+        if not ok:
+            raise ValueError(
+                f"crawl-index audit failed (hashes {tuple(h_row)}, bands "
+                f"{tuple(b_row)}, max_posting {tuple(cap_row)}, "
+                f"count mismatches {mismatches}) — NOT published"
+            )
+        spark.createDataFrame(
+            [(n_buckets, n_capped, float(capped_frac), dup_warning)],
+            "n_buckets bigint, n_capped bigint, capped_frac double, "
+            "duplication_warning boolean",
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(staging, "audit")
         )
-    spark.createDataFrame(
-        [(n_buckets, n_capped, float(capped_frac), dup_warning)],
-        "n_buckets bigint, n_capped bigint, capped_frac double, "
-        "duplication_warning boolean",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(staging, "audit")
-    )
-    if dup_warning:
-        warnings.warn(
-            f"crawl-index publish: {n_capped}/{n_buckets} band buckets "
-            f"({capped_frac:.1%}) exceed the posting cap "
-            f"({L42_MAX_POSTING}) — the near-dup gate is largely "
-            "neutralized in this duplication regime; run l41's profile "
-            "and consider a cluster-representative dedup form",
-            stacklevel=2,
-        )
-    try:
-        os.rename(staging, published)  # atomic on POSIX
-    except OSError:
-        if not os.path.isdir(published):
-            raise  # a real failure, not a lost publish race
-        shutil.rmtree(staging, ignore_errors=True)
-    return published
+        if dup_warning:
+            warnings.warn(
+                f"crawl-index publish: {n_capped}/{n_buckets} band buckets "
+                f"({capped_frac:.1%}) exceed the posting cap "
+                f"({L42_MAX_POSTING}) — the near-dup gate is largely "
+                "neutralized in this duplication regime; run l41's profile "
+                "and consider a cluster-representative dedup form",
+                stacklevel=4,  # the caller of publish_crawl_index
+            )
+
+    base = _crawl_index_artifact_base(sf_dir)
+    return publish(os.path.join(base, "published"), write)
 
 
 @register(
@@ -3134,23 +3112,14 @@ _L42C_ORACLE = f"""
 
 
 def _crawl_maint_artifact_base(sf_dir: str) -> str:
-    """Versioned location of the MAINTAINED crawl indexes — same key
-    recipe as the publish-once artifact (corpus identity + index
-    config) under its own root, because the maintained artifact's
-    content additionally depends on the fold history (v1, v2, ...)."""
-    import hashlib
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}"
-        f"|crawlmaint-v1-md5x{N_MINHASHES}-b{N_BANDS}-cap{L42_MAX_POSTING}"
-        .encode()
-    ).hexdigest()[:16]
-    cache_root = os.environ.get(
-        "XDG_CACHE_HOME", os.path.join(os.path.expanduser("~"), ".cache")
+    """Keyed by l42b's index config, under its own root: the maintained
+    artifact's content also depends on the fold history (v1, v2, ...)."""
+    config = (
+        f"crawlmaint-v1-md5x{N_MINHASHES}-b{N_BANDS}-cap{L42_MAX_POSTING}"
     )
-    return os.path.join(cache_root, "mric_crawl_maint_artifacts", key)
+    return artifact_dir(
+        sf_dir, "documents", "mric_crawl_maint_artifacts", config
+    )
 
 
 def make_crawl_index_append_sink(
@@ -3182,9 +3151,10 @@ def make_crawl_index_append_sink(
     vN+1 indexes equal `build_crawl_index` run from scratch on
     corpus ∪ all survivors — probe-after-append == inline-on-grown-
     corpus. Exactly-once: batch_id keys the version (idempotent skip
-    on replay); a crash mid-write leaves only an uncommitted staging
-    dir (versions commit by one atomic rename), which the replayed
-    batch overwrites.
+    on replay); versions commit through `artifacts.publish`, so a crash
+    mid-write leaves only an uncommitted staging dir, which
+    `recover_version` (it lists only ``vN`` dirs) and the replayed batch
+    ignore.
 
     At 100 TB: per-append cost is O(|batch|) signature work + a
     bucket-grain count merge + ONE index-sized union-anti-join write —
@@ -3192,7 +3162,6 @@ def make_crawl_index_append_sink(
     term, SCALE.md round-12, now amortizes across the corpus's whole
     life, not just until the next append)."""
     import os
-    import shutil
 
     from mric_bak_etl_spark.tables import materialize
 
@@ -3229,28 +3198,16 @@ def make_crawl_index_append_sink(
             # one-pass for the same fold (the SCALE.md materialize
             # lesson: parquet IS the materialization for corpus-sized
             # state; localCheckpoint pins poison repeated runs).
-            boot = os.path.join(base, "_bootstrap")
-            if not os.path.isdir(boot):
-                bstage = boot + ".staging"
-                shutil.rmtree(bstage, ignore_errors=True)
-                b_h, b_capped, b_counts = build_crawl_index(
+            def write_bootstrap(staging: str) -> None:
+                index = build_crawl_index(
                     docs, n_hashes=n_hashes, n_bands=n_bands, cap=cap
                 )
-                b_h.write.mode("overwrite").parquet(
-                    os.path.join(bstage, "hashes")
-                )
-                b_capped.write.mode("overwrite").parquet(
-                    os.path.join(bstage, "bands")
-                )
-                b_counts.write.mode("overwrite").parquet(
-                    os.path.join(bstage, "counts")
-                )
-                try:
-                    os.rename(bstage, boot)  # atomic on POSIX
-                except OSError:
-                    if not os.path.isdir(boot):
-                        raise
-                    shutil.rmtree(bstage, ignore_errors=True)
+                for name, df_ in zip(("hashes", "bands", "counts"), index):
+                    df_.write.mode("overwrite").parquet(
+                        os.path.join(staging, name)
+                    )
+
+            boot = publish(os.path.join(base, "_bootstrap"), write_bootstrap)
             corpus = docs
             corpus_h = spark.read.parquet(os.path.join(boot, "hashes"))
             capped = spark.read.parquet(os.path.join(boot, "bands"))
@@ -3307,23 +3264,20 @@ def make_crawl_index_append_sink(
         ).distinct()
         merged_newdocs = newdocs.unionByName(survivors)
         waterfall = _crawl_waterfall_from_flags(flags)
-        staging = os.path.join(base, f"_staging_v{batch_id + 1}")
-        shutil.rmtree(staging, ignore_errors=True)
-        for name, df_ in (
-            ("hashes", merged_hashes),
-            ("bands", merged_bands),
-            ("counts", merged_counts),
-            ("newdocs", merged_newdocs),
-            ("waterfall", waterfall),
-        ):
-            df_.write.mode("overwrite").parquet(os.path.join(staging, name))
-        committed = os.path.join(base, f"v{batch_id + 1}")
-        try:
-            os.rename(staging, committed)  # atomic on POSIX
-        except OSError:
-            if not os.path.isdir(committed):
-                raise  # a real failure, not a lost commit race
-            shutil.rmtree(staging, ignore_errors=True)
+
+        def write_version(staging: str) -> None:
+            for name, df_ in (
+                ("hashes", merged_hashes),
+                ("bands", merged_bands),
+                ("counts", merged_counts),
+                ("newdocs", merged_newdocs),
+                ("waterfall", waterfall),
+            ):
+                df_.write.mode("overwrite").parquet(
+                    os.path.join(staging, name)
+                )
+
+        publish(os.path.join(base, f"v{batch_id + 1}"), write_version)
         state["version"] = batch_id + 1
 
     return fold

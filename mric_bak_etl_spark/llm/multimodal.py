@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mric_bak_etl_spark.artifacts import artifact_dir, publish
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.llm.text import CHUNK_ORACLE as _CHUNK_ORACLE_REF
 from mric_bak_etl_spark.tables import load_table, map_rows, spread
@@ -1650,24 +1651,9 @@ def _decode_persisted_row(mid: int, blob: bytes) -> Iterator[tuple]:
 
 
 def _archive_artifact_base(sf_dir: str) -> str:
-    """Versioned location of the persisted archive column for ``sf_dir``
-    — keyed by the documents parquet's identity + packer config (the
-    l26c `_merge_artifact_base` shape): a regenerated corpus or a
-    re-tuned packer invalidates the artifact instead of silently serving
-    stale blobs. Rooted in the user-owned XDG cache, not the
-    world-shared tempdir (the r11 artifact-planting lesson)."""
-    import hashlib
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}"
-        f"|zipcol-v1-m14".encode()
-    ).hexdigest()[:16]
-    cache_root = os.environ.get(
-        "XDG_CACHE_HOME", os.path.join(os.path.expanduser("~"), ".cache")
-    )
-    return os.path.join(cache_root, "mric_media_artifacts", key)
+    """Keyed by the packer config (one version tag)."""
+    config = "zipcol-v1-m14"
+    return artifact_dir(sf_dir, "documents", "mric_media_artifacts", config)
 
 
 def publish_archive_column(spark: SparkSession, sf_dir: str) -> str:
@@ -1678,59 +1664,51 @@ def publish_archive_column(spark: SparkSession, sf_dir: str) -> str:
     full structural validation: EOCD walk, local-header cross-checks,
     inflate, CRC) and compares three aggregates — blob count, entry
     count, total payload bytes — against the closed-form geometry; only
-    then does the atomic rename publish. Concurrent packers race
-    benignly: the loser reads the winner's dir and removes its staging.
+    then does the atomic rename publish (`artifacts.publish`).
     """
     import os
-    import shutil
-    import tempfile
+
+    def write(staging: str) -> None:
+        _map_documents(
+            spark, sf_dir, _pack_archive_row, "media_id long, content binary"
+        ).write.mode("overwrite").parquet(staging)
+        # Audit what was written: decode every blob, aggregate, compare
+        # to the closed-form expectation. One distributed pass; 1 row
+        # collected.
+        staged = spark.read.parquet(staging)
+        got = (
+            map_rows(staged, _decode_persisted_row, _M13_SCHEMA)
+            .agg(
+                F.countDistinct("media_id").alias("n_blobs"),
+                F.count(F.lit(1)).alias("n_entries"),
+                F.sum("n_bytes").alias("n_payload_bytes"),
+            )
+            .collect()[0]
+        )
+        ne = F.col("doc_id") % 3 + 2
+        want = (
+            load_table(spark, sf_dir, "documents")
+            .select(
+                ne.alias("ne"),
+                (ne * (F.col("doc_id") % 9 + 2) + 3 * ne * (ne - 1)).alias(
+                    "pb"
+                ),
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_blobs"),
+                F.sum("ne").alias("n_entries"),
+                F.sum("pb").alias("n_payload_bytes"),
+            )
+            .collect()[0]
+        )
+        if tuple(got) != tuple(want):
+            raise ValueError(
+                f"archive-column audit failed (wrote {tuple(got)}, "
+                f"geometry says {tuple(want)}) — NOT published"
+            )
 
     base = _archive_artifact_base(sf_dir)
-    published = os.path.join(base, "published")
-    if os.path.isdir(published):
-        return published
-    os.makedirs(base, exist_ok=True)
-    staging = tempfile.mkdtemp(prefix="_staging_", dir=base)
-    _map_documents(
-        spark, sf_dir, _pack_archive_row, "media_id long, content binary"
-    ).write.mode("overwrite").parquet(staging)
-    # Audit what was written: decode every blob, aggregate, compare to
-    # the closed-form expectation. One distributed pass; 1 row collected.
-    got = (
-        map_rows(spark.read.parquet(staging), _decode_persisted_row, _M13_SCHEMA)
-        .agg(
-            F.countDistinct("media_id").alias("n_blobs"),
-            F.count(F.lit(1)).alias("n_entries"),
-            F.sum("n_bytes").alias("n_payload_bytes"),
-        )
-        .collect()[0]
-    )
-    ne = F.col("doc_id") % 3 + 2
-    want = (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            ne.alias("ne"),
-            (ne * (F.col("doc_id") % 9 + 2) + 3 * ne * (ne - 1)).alias("pb"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_blobs"),
-            F.sum("ne").alias("n_entries"),
-            F.sum("pb").alias("n_payload_bytes"),
-        )
-        .collect()[0]
-    )
-    if tuple(got) != tuple(want):
-        raise ValueError(
-            f"archive-column audit failed (wrote {tuple(got)}, geometry "
-            f"says {tuple(want)}) — NOT published"
-        )
-    try:
-        os.rename(staging, published)  # atomic on POSIX
-    except OSError:
-        if not os.path.isdir(published):
-            raise  # a real failure, not a lost publish race
-        shutil.rmtree(staging, ignore_errors=True)
-    return published
+    return publish(os.path.join(base, "published"), write)
 
 
 @register(

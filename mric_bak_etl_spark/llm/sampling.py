@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mric_bak_etl_spark.artifacts import artifact_dir, publish
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.tables import load_table
 
@@ -648,62 +649,44 @@ def logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _model_artifact_base(sf_dir: str) -> str:
-    """Versioned location of the persisted classifier weights for
-    ``sf_dir`` — corpus identity + trainer config in the key (the
-    l26c/m14 shape applied to MODEL state), rooted in the user-owned
-    XDG cache."""
-    import hashlib
-    import os
+    """Keyed by the trainer config: rounds, learning rate."""
+    config = f"logreg-v1-r{L33_ROUNDS}-lr{L33_LR}"
+    return artifact_dir(sf_dir, "documents", "mric_model_artifacts", config)
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}"
-        f"|logreg-v1-r{L33_ROUNDS}-lr{L33_LR}".encode()
-    ).hexdigest()[:16]
-    cache_root = os.environ.get(
-        "XDG_CACHE_HOME", os.path.join(os.path.expanduser("~"), ".cache")
+
+def _audit_model_rows(rows) -> bool:
+    """The weight-table contract: exactly one row, every weight non-null
+    and finite. Run at publish AND at every load."""
+    import math
+
+    return len(rows) == 1 and all(
+        rows[0][c] is not None and math.isfinite(rows[0][c])
+        for c in ("bias", "w_len", "w_aux")
     )
-    return os.path.join(cache_root, "mric_model_artifacts", key)
 
 
 def publish_model(spark: SparkSession, sf_dir: str) -> str:
     """Train-if-missing for the l33 classifier: write the 1-row weight
-    table to staging, AUDIT what was written (exactly one row, every
-    weight non-null and finite), one atomic rename — the s11
-    write-audit-publish shape on the third artifact kind (model state;
-    l26c = tokenizer, m14 = media). The stored weights keep the full
-    per-round-12dp trajectory values; consumers never re-round."""
-    import math
+    table to staging, AUDIT what was written (`_audit_model_rows`), one
+    atomic rename (`artifacts.publish`) — the s11 write-audit-publish
+    shape on the third artifact kind (model state; l26c = tokenizer,
+    m14 = media). The stored weights keep the full per-round-12dp
+    trajectory values; consumers never re-round."""
     import os
-    import shutil
-    import tempfile
+
+    def write(staging: str) -> None:
+        b, w1, w2 = _train_logreg(spark, sf_dir)
+        spark.createDataFrame(
+            [(b, w1, w2)], "bias double, w_len double, w_aux double"
+        ).coalesce(1).write.mode("overwrite").parquet(staging)
+        audited = spark.read.parquet(staging).collect()
+        if not _audit_model_rows(audited):
+            raise ValueError(
+                f"model audit failed (rows={len(audited)}) — NOT published"
+            )
 
     base = _model_artifact_base(sf_dir)
-    published = os.path.join(base, "published")
-    if os.path.isdir(published):
-        return published
-    os.makedirs(base, exist_ok=True)
-    staging = tempfile.mkdtemp(prefix="_staging_", dir=base)
-    b, w1, w2 = _train_logreg(spark, sf_dir)
-    spark.createDataFrame(
-        [(b, w1, w2)], "bias double, w_len double, w_aux double"
-    ).coalesce(1).write.mode("overwrite").parquet(staging)
-    audited = spark.read.parquet(staging).collect()
-    ok = len(audited) == 1 and all(
-        audited[0][c] is not None and math.isfinite(audited[0][c])
-        for c in ("bias", "w_len", "w_aux")
-    )
-    if not ok:
-        raise ValueError(
-            f"model audit failed (rows={len(audited)}) — NOT published"
-        )
-    try:
-        os.rename(staging, published)  # atomic on POSIX
-    except OSError:
-        if not os.path.isdir(published):
-            raise  # a real failure, not a lost publish race
-        shutil.rmtree(staging, ignore_errors=True)
-    return published
+    return publish(os.path.join(base, "published"), write)
 
 
 def load_model(spark: SparkSession, sf_dir: str) -> tuple[float, float, float]:
@@ -712,15 +695,9 @@ def load_model(spark: SparkSession, sf_dir: str) -> tuple[float, float, float]:
     audit re-runs here (the l26c load-audit lesson): a published dir
     that violates the one-finite-row contract was planted or tampered
     with and must be refused loudly."""
-    import math
-
     path = publish_model(spark, sf_dir)
     rows = spark.read.parquet(path).collect()
-    ok = len(rows) == 1 and all(
-        rows[0][c] is not None and math.isfinite(rows[0][c])
-        for c in ("bias", "w_len", "w_aux")
-    )
-    if not ok:
+    if not _audit_model_rows(rows):
         raise ValueError(
             f"published model at {path} violates its audit contract — "
             f"artifact tampered or stale; delete it to retrain"

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mric_bak_etl_spark.artifacts import artifact_dir, publish
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.tables import load_table, spread
 
@@ -789,23 +790,13 @@ ANN_SHORTLIST = 20  # ADC shortlist re-ranked with exact cosine
 
 
 def _ann_artifact_base(sf_dir: str) -> str:
-    """Versioned location of the persisted ANN index for ``sf_dir`` —
-    corpus identity + full index config in the key (the l26c/m14/l43/
-    l42b shape applied to the fifth artifact kind: ANN index state),
-    rooted in the user-owned XDG cache."""
-    import hashlib
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}"
-        f"|annidx-v1-km{KMEANS_K_MOD}r{KMEANS_ROUNDS}"
-        f"-pq{PQ_M}x{PQ_K}-np{ANN_NPROBE}".encode()
-    ).hexdigest()[:16]
-    cache_root = os.environ.get(
-        "XDG_CACHE_HOME", os.path.join(os.path.expanduser("~"), ".cache")
+    """Keyed by the full index config: k-means seeding and rounds, PQ
+    geometry, nprobe."""
+    config = (
+        f"annidx-v1-km{KMEANS_K_MOD}r{KMEANS_ROUNDS}"
+        f"-pq{PQ_M}x{PQ_K}-np{ANN_NPROBE}"
     )
-    return os.path.join(cache_root, "mric_ann_artifacts", key)
+    return artifact_dir(sf_dir, "embeddings", "mric_ann_artifacts", config)
 
 
 def publish_ann_index(spark: SparkSession, sf_dir: str) -> str:
@@ -827,7 +818,7 @@ def publish_ann_index(spark: SparkSession, sf_dir: str) -> str:
     64-dim vectors; codebook is exactly PQ_M x PQ_K rows of PQ_D-dim
     centroids; the code table covers every corpus vector exactly PQ_M
     times, codes in [0, PQ_K), and every cell id is a real centroid id.
-    Then one atomic rename.
+    Then one atomic rename (`artifacts.publish`).
 
     At 100 TB: train on a sample, assign + encode in one corpus scan at
     ingest; a query then costs a k-row centroid read, a partition-pruned
@@ -835,97 +826,88 @@ def publish_ann_index(spark: SparkSession, sf_dir: str) -> str:
     exact re-rank of ANN_SHORTLIST raw vectors — the corpus's float
     embeddings are never scanned at query time."""
     import os
-    import shutil
-    import tempfile
 
     from mric_bak_etl_spark.tables import sized_parallelism
 
-    base = _ann_artifact_base(sf_dir)
-    published = os.path.join(base, "published")
-    if os.path.isdir(published):
-        return published
-    os.makedirs(base, exist_ok=True)
-    staging = tempfile.mkdtemp(prefix="_staging_", dir=base)
-
-    e_raw = load_table(spark, sf_dir, "embeddings")
-    e = e_raw.select("vec_id", _as_double().alias("v")).repartition(
-        sized_parallelism(sf_dir, "embeddings")
-    )
-    cents_arr = fit_spherical_kmeans(e)
-    centroids = cents_arr.select(F.explode("cents").alias("c")).select(
-        F.col("c.cid").alias("cid"), F.col("c.cv").alias("cv")
-    )
-    centroids.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(staging, "centroids")
-    )
-    assignments = _km_assign(e, cents_arr).select("vec_id", "cid")
-    subcb = build_pq_codebook(spark, e_raw)
-    subcb.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(staging, "codebook")
-    )
-    codes = pq_encode(spark, e_raw, subcb)
-    # One ingest-time shuffle (codes x assignments on vec_id) buys every
-    # future query partition pruning on the cell column.
-    codes.join(assignments, "vec_id").select(
-        "cid", "vec_id", "s", "code"
-    ).write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(staging, "codes")
-    )
-
-    n_corpus = e_raw.count()
-    n_seeds = e_raw.filter(F.col("vec_id") % KMEANS_K_MOD == 0).count()
-    c = spark.read.parquet(os.path.join(staging, "centroids"))
-    c_row = c.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.size("cv")).alias("min_dim"),
-        F.max(F.size("cv")).alias("max_dim"),
-        F.sum(F.col("cid").isNull().cast("int")).alias("nulls"),
-    ).collect()[0]
-    cb = spark.read.parquet(os.path.join(staging, "codebook"))
-    cb_row = cb.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.size("cent")).alias("min_dim"),
-        F.max(F.size("cent")).alias("max_dim"),
-    ).collect()[0]
-    k = spark.read.parquet(os.path.join(staging, "codes"))
-    k_row = k.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("vec_id").alias("n_vecs"),
-        F.min("code").alias("min_code"),
-        F.max("code").alias("max_code"),
-    ).collect()[0]
-    bad_cells = (
-        k.select("cid").distinct().join(c.select("cid"), "cid", "left_anti")
-    ).count()
-    # Lloyd rounds legitimately DROP clusters that go empty (duplicate
-    # seed vectors collapse to one cid via the tiebreak — the x10
-    # verbatim-copy probe corpus found exactly this), so the centroid
-    # count is bounded by the seed count, not equal to it.
-    ok = (
-        1 <= c_row["n"] <= n_seeds
-        and (c_row["nulls"] or 0) == 0
-        and c_row["min_dim"] == c_row["max_dim"] == 64
-        and cb_row["n"] == PQ_M * PQ_K
-        and cb_row["min_dim"] == cb_row["max_dim"] == PQ_D
-        and k_row["n"] == n_corpus * PQ_M
-        and k_row["n_vecs"] == n_corpus
-        and (k_row["min_code"] or 0) >= 0
-        and (k_row["max_code"] or 0) < PQ_K
-        and bad_cells == 0
-    )
-    if not ok:
-        raise ValueError(
-            f"ANN-index audit failed (centroids {tuple(c_row)}, codebook "
-            f"{tuple(cb_row)}, codes {tuple(k_row)}, unknown cells "
-            f"{bad_cells}) — NOT published"
+    def write(staging: str) -> None:
+        e_raw = load_table(spark, sf_dir, "embeddings")
+        e = e_raw.select("vec_id", _as_double().alias("v")).repartition(
+            sized_parallelism(sf_dir, "embeddings")
         )
-    try:
-        os.rename(staging, published)  # atomic on POSIX
-    except OSError:
-        if not os.path.isdir(published):
-            raise  # a real failure, not a lost publish race
-        shutil.rmtree(staging, ignore_errors=True)
-    return published
+        cents_arr = fit_spherical_kmeans(e)
+        centroids = cents_arr.select(F.explode("cents").alias("c")).select(
+            F.col("c.cid").alias("cid"), F.col("c.cv").alias("cv")
+        )
+        centroids.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(staging, "centroids")
+        )
+        assignments = _km_assign(e, cents_arr).select("vec_id", "cid")
+        subcb = build_pq_codebook(spark, e_raw)
+        subcb.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(staging, "codebook")
+        )
+        codes = pq_encode(spark, e_raw, subcb)
+        # One ingest-time shuffle (codes x assignments on vec_id) buys
+        # every future query partition pruning on the cell column.
+        codes.join(assignments, "vec_id").select(
+            "cid", "vec_id", "s", "code"
+        ).write.mode("overwrite").partitionBy("cid").parquet(
+            os.path.join(staging, "codes")
+        )
+
+        n_corpus = e_raw.count()
+        n_seeds = e_raw.filter(F.col("vec_id") % KMEANS_K_MOD == 0).count()
+        c = spark.read.parquet(os.path.join(staging, "centroids"))
+        c_row = c.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.size("cv")).alias("min_dim"),
+            F.max(F.size("cv")).alias("max_dim"),
+            F.sum(F.col("cid").isNull().cast("int")).alias("nulls"),
+        ).collect()[0]
+        cb = spark.read.parquet(os.path.join(staging, "codebook"))
+        cb_row = cb.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.size("cent")).alias("min_dim"),
+            F.max(F.size("cent")).alias("max_dim"),
+        ).collect()[0]
+        k = spark.read.parquet(os.path.join(staging, "codes"))
+        k_row = k.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("vec_id").alias("n_vecs"),
+            F.min("code").alias("min_code"),
+            F.max("code").alias("max_code"),
+        ).collect()[0]
+        bad_cells = (
+            k.select("cid")
+            .distinct()
+            .join(c.select("cid"), "cid", "left_anti")
+            .count()
+        )
+        # Lloyd rounds legitimately DROP clusters that go empty
+        # (duplicate seed vectors collapse to one cid via the tiebreak —
+        # the x10 verbatim-copy probe corpus found exactly this), so the
+        # centroid count is bounded by the seed count, not equal to it.
+        ok = (
+            1 <= c_row["n"] <= n_seeds
+            and (c_row["nulls"] or 0) == 0
+            and c_row["min_dim"] == c_row["max_dim"] == 64
+            and cb_row["n"] == PQ_M * PQ_K
+            and cb_row["min_dim"] == cb_row["max_dim"] == PQ_D
+            and k_row["n"] == n_corpus * PQ_M
+            and k_row["n_vecs"] == n_corpus
+            and (k_row["min_code"] or 0) >= 0
+            and (k_row["max_code"] or 0) < PQ_K
+            and bad_cells == 0
+        )
+        if not ok:
+            raise ValueError(
+                f"ANN-index audit failed (centroids {tuple(c_row)}, "
+                f"codebook {tuple(cb_row)}, codes {tuple(k_row)}, unknown "
+                f"cells {bad_cells}) — NOT published"
+            )
+
+    base = _ann_artifact_base(sf_dir)
+    return publish(os.path.join(base, "published"), write)
 
 
 def load_ann_index(

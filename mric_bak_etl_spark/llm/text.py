@@ -16,12 +16,11 @@ token counts) are embarrassingly parallel projections: no shuffle at all.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mric_bak_etl_spark.artifacts import artifact_dir, publish
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.tables import load_table, spread
 
@@ -1516,55 +1515,28 @@ def _encode_corpus(
 
 
 def _merge_artifact_base(sf_dir: str) -> str:
-    """Versioned location of the persisted merge table for ``sf_dir`` —
-    keyed by the documents parquet's identity (absolute path + size +
-    mtime) and the trainer's config, so a regenerated corpus or a
-    retuned tokenizer invalidates the artifact instead of poisoning the
-    apply face with stale merges. The production analogue is a tokenizer
-    version pin in a model registry."""
-    import hashlib
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    key = hashlib.sha256(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}"
-        f"|bpe-v1-r{BPE_ROUNDS}-w{BPE_VOCAB_WORDS}".encode()
-    ).hexdigest()[:16]
-    # User-owned root (XDG cache), NOT the world-shared tempdir: on a
-    # multi-user box a predictable /tmp path lets any local user plant a
-    # "published" dir that the apply face would trust (r11 ADVICE). The
-    # load-time audit below is the second line of defense.
-    cache_root = os.environ.get(
-        "XDG_CACHE_HOME", os.path.join(os.path.expanduser("~"), ".cache")
-    )
-    return os.path.join(cache_root, "mric_bpe_artifacts", key)
+    """Keyed by the trainer config: merge rounds, vocab words."""
+    config = f"bpe-v1-r{BPE_ROUNDS}-w{BPE_VOCAB_WORDS}"
+    return artifact_dir(sf_dir, "documents", "mric_bpe_artifacts", config)
 
 
 def publish_merge_table(spark: SparkSession, sf_dir: str) -> str:
     """Train-if-missing: return the published merge-table path, training
     and publishing only when absent — write to a staging dir, AUDIT what
     was actually written (exactly BPE_ROUNDS rows, ranks 1..N, non-null
-    pairs), then one atomic rename: the s11 write-audit-publish shape
-    applied to a model artifact instead of a snapshot. Concurrent
-    trainers race benignly — the loser's rename fails against the
-    winner's published dir and falls through to reading it."""
+    pairs), then one atomic rename (`artifacts.publish`: the s11
+    write-audit-publish shape applied to a model artifact)."""
+
+    def write(staging: str) -> None:
+        bpe_merges(spark, sf_dir).write.mode("overwrite").parquet(staging)
+        err = _audit_merge_rows(spark.read.parquet(staging).collect())
+        if err:
+            raise ValueError(
+                f"merge-table audit failed ({err}) — NOT published"
+            )
+
     base = _merge_artifact_base(sf_dir)
-    published = os.path.join(base, "published")
-    if os.path.isdir(published):
-        return published
-    os.makedirs(base, exist_ok=True)
-    staging = tempfile.mkdtemp(prefix="_staging_", dir=base)
-    bpe_merges(spark, sf_dir).write.mode("overwrite").parquet(staging)
-    audited = spark.read.parquet(staging).collect()
-    err = _audit_merge_rows(audited)
-    if err:
-        raise ValueError(f"merge-table audit failed ({err}) — NOT published")
-    try:
-        os.rename(staging, published)  # atomic on POSIX
-    except OSError:
-        if not os.path.isdir(published):
-            raise  # a real failure, not a lost publish race
-        shutil.rmtree(staging, ignore_errors=True)  # lost the race: clean up
-    return published
+    return publish(os.path.join(base, "published"), write)
 
 
 def _audit_merge_rows(rows) -> str | None:

@@ -18,12 +18,13 @@ the shuffle width.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mric_bak_etl_spark.artifacts import publish
 from mric_bak_etl_spark.catalog import register
+from mric_bak_etl_spark.session import scratch_dir
 from mric_bak_etl_spark.tables import load_table
 
 
@@ -186,7 +187,7 @@ def quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="schema_evo_")
+    base = scratch_dir("schema_evo_")
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
@@ -220,7 +221,7 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "A")
-    base = tempfile.mkdtemp(prefix="compaction_")
+    base = scratch_dir("compaction_")
     frag, compact = os.path.join(base, "frag"), os.path.join(base, "compact")
     li.repartition(64).write.mode("overwrite").parquet(frag)
     n_frag = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
@@ -258,7 +259,7 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("int")
     )
-    base = tempfile.mkdtemp(prefix="dpp_")
+    base = scratch_dir("dpp_")
     li.write.mode("overwrite").partitionBy("ship_year").parquet(base)
     fact = spark.read.parquet(base)
     dim = spark.createDataFrame(
@@ -492,7 +493,7 @@ def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    base = tempfile.mkdtemp(prefix="sorted_layout_")
+    base = scratch_dir("sorted_layout_")
     li.sortWithinPartitions("l_shipdate").write.mode("overwrite").parquet(base)
     back = spark.read.parquet(base).filter(
         (F.col("l_shipdate") >= "1997-06-01") & (F.col("l_shipdate") < "1997-08-01")
@@ -721,26 +722,24 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 0)
-    base = tempfile.mkdtemp(prefix="wap_")
-    staging = os.path.join(base, "_staging")
-    published = os.path.join(base, "published")
-    li.write.mode("overwrite").parquet(staging)
 
-    staged = spark.read.parquet(staging)
-    audit = staged.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.when(
-                F.col("l_quantity").isNull() | (F.col("l_quantity") <= 0), 1
-            ).otherwise(0)
-        ).alias("violations"),
-    ).collect()[0]
-    if audit["violations"] != 0 or audit["n_rows"] == 0:
-        raise ValueError(
-            f"audit failed: {audit['violations']} violations over "
-            f"{audit['n_rows']} staged rows — snapshot NOT published"
-        )
-    os.rename(staging, published)  # atomic on POSIX: readers see old or new
+    def write(staging: str) -> None:
+        li.write.mode("overwrite").parquet(staging)
+        q = F.col("l_quantity")
+        audit = spark.read.parquet(staging).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.when(q.isNull() | (q <= 0), 1).otherwise(0)).alias(
+                "violations"
+            ),
+        ).collect()[0]
+        if audit["violations"] != 0 or audit["n_rows"] == 0:
+            raise ValueError(
+                f"audit failed: {audit['violations']} violations over "
+                f"{audit['n_rows']} staged rows — snapshot NOT published"
+            )
+
+    base = scratch_dir("wap_")
+    published = publish(os.path.join(base, "published"), write)
 
     return spark.read.parquet(published).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -975,6 +974,19 @@ def scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _commit_log_record(log_dir: str, ver: int, path: str) -> None:
+    """Commit version ``ver`` of a log-structured table: the atomic
+    append of one log record (table formats make this a conditional PUT
+    / atomic rename on object stores)."""
+    import json
+
+    os.makedirs(log_dir, exist_ok=True)
+    tmp = os.path.join(log_dir, f".{ver}.json.tmp")
+    with open(tmp, "w") as fh:
+        json.dump({"version": ver, "path": path}, fh)
+    os.rename(tmp, os.path.join(log_dir, f"{ver:020d}.json"))
+
+
 @register(
     "s14_time_travel",
     oracle="""
@@ -1004,11 +1016,8 @@ def scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "sink", "source"),
 )
 def time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-
-    base = tempfile.mkdtemp(prefix="s14_")
+    base = scratch_dir("s14_")
     log_dir = os.path.join(base, "_log")
-    os.makedirs(log_dir)
     o = load_table(spark, sf_dir, "orders")
     versions = {
         1: o.filter(F.col("o_orderkey") % 3 != 0),
@@ -1022,13 +1031,7 @@ def time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     for ver, df in versions.items():
         path = os.path.join(base, f"v{ver}")
         df.write.mode("overwrite").parquet(path)
-        # Commit is the atomic append of one log record (table formats
-        # make this a conditional PUT / atomic rename on object stores).
-        record = {"version": ver, "path": path}
-        tmp = os.path.join(log_dir, f".{ver}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(record, fh)
-        os.rename(tmp, os.path.join(log_dir, f"{ver:020d}.json"))
+        _commit_log_record(log_dir, ver, path)
 
     log = spark.read.json(log_dir)
     latest_ver = log.agg(F.max("version")).collect()[0][0]
@@ -1201,7 +1204,7 @@ def incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="dq6_")
+    base = scratch_dir("dq6_")
     v1 = os.path.join(base, "v1")
     v2 = os.path.join(base, "v2")
     o.write.mode("overwrite").parquet(v1)
@@ -1619,9 +1622,8 @@ def version_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import shutil
 
-    base = tempfile.mkdtemp(prefix="s18_")
+    base = scratch_dir("s18_")
     log_dir = os.path.join(base, "_log")
-    os.makedirs(log_dir)
     o = load_table(spark, sf_dir, "orders")
     versions = {
         1: o,
@@ -1636,11 +1638,7 @@ def version_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     for ver, df in versions.items():
         path = os.path.join(base, f"v{ver}")
         df.write.mode("overwrite").parquet(path)
-        record = {"version": ver, "path": path}
-        tmp = os.path.join(log_dir, f".{ver}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(record, fh)
-        os.rename(tmp, os.path.join(log_dir, f"{ver:020d}.json"))
+        _commit_log_record(log_dir, ver, path)
 
     # Vacuum: retain the last 2 versions. Log records go FIRST (readers
     # lose the pointer before files vanish), data dirs second.

@@ -22,6 +22,7 @@ from mric_bak_etl_spark.pipeline.snapshot import (
     overwrite_snapshot,
     overwrite_snapshot_jdbc,
 )
+from mric_bak_etl_spark.session import scratch_dir
 from mric_bak_etl_spark.tables import load_table
 
 
@@ -116,7 +117,7 @@ def state_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    out = os.path.join(tempfile.mkdtemp(prefix="snapshot_sink_"), "lineitem_r")
+    out = os.path.join(scratch_dir("snapshot_sink_"), "lineitem_r")
     overwrite_snapshot(li, out)
     back = spark.read.parquet(out)
     return back.agg(
@@ -147,7 +148,7 @@ def partitioned_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("int")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="snapshot_part_"), "lineitem_by_year")
+    out = os.path.join(scratch_dir("snapshot_part_"), "lineitem_by_year")
     overwrite_snapshot(li, out, partition_by=["ship_year"])
     back = spark.read.parquet(out).filter(F.col("ship_year").isin(1996, 1997))
     return (
@@ -184,7 +185,7 @@ def format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    base = tempfile.mkdtemp(prefix="format_rt_")
+    base = scratch_dir("format_rt_")
     csv_path, json_path = os.path.join(base, "csv"), os.path.join(base, "json")
     # Raw doubles: Spark prints shortest-round-trip decimals, so CSV/JSON
     # text round-trips bit-exactly; rounding happens once, at the end.
@@ -333,7 +334,7 @@ def orc_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "2-HIGH"
     )
-    base = tempfile.mkdtemp(prefix="format_rt2_")
+    base = scratch_dir("format_rt2_")
     orc_path, xml_path = os.path.join(base, "orc"), os.path.join(base, "xml")
     slim = o.select("o_orderkey", "o_orderstatus", "o_totalprice")
     slim.write.mode("overwrite").orc(orc_path)
@@ -387,9 +388,7 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("int")
     )
-    out = os.path.join(
-        tempfile.mkdtemp(prefix="snapshot_dyn_"), "lineitem_by_year"
-    )
+    out = os.path.join(scratch_dir("snapshot_dyn_"), "lineitem_by_year")
     overwrite_snapshot(li, out, partition_by=["ship_year"])
 
     corrected = li.filter(F.col("ship_year") == 1997).withColumn(
@@ -448,8 +447,8 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mric_bak_etl_spark.streaming.windows import stream_events
 
-    out = tempfile.mkdtemp(prefix="s16_sink_")
-    ckpt = tempfile.mkdtemp(prefix="s16_ckpt_")
+    out = scratch_dir("s16_sink_")
+    ckpt = scratch_dir("s16_ckpt_")
     q = (
         stream_events(spark, sf_dir)
         .filter(F.col("value") >= 50)
@@ -508,7 +507,7 @@ def selective_file_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
-    base = tempfile.mkdtemp(prefix="s17_zone_")
+    base = scratch_dir("s17_zone_")
     # Landing zone: per-year subdirs; urgent-class drops follow the
     # producer convention "urgent_*.parquet", decoys do not.
     for cls, name in (
@@ -588,7 +587,7 @@ def selective_file_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="s21_zone_")
+    base = scratch_dir("s21_zone_")
     (
         o.filter(F.col("o_orderkey") % 2 == 0)
         .select("o_orderkey", "o_totalprice")

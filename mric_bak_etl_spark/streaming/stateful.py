@@ -27,7 +27,6 @@ per micro-batch: no driver involvement, no per-row Python crossing.
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Iterator
 from typing import Any
 
@@ -36,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mric_bak_etl_spark.catalog import register
+from mric_bak_etl_spark.session import scratch_dir
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, total double"
@@ -98,7 +98,7 @@ def stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mric_bak_etl_spark.streaming.windows import stream_events
 
     out = stateful_running_totals(stream_events(spark, sf_dir))
-    ckpt = tempfile.mkdtemp(prefix="t6_ckpt_")
+    ckpt = scratch_dir("t6_ckpt_")
     q = (
         out.writeStream.format("memory")
         .queryName("t6_sink")
@@ -209,7 +209,7 @@ def transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mric_bak_etl_spark.streaming.windows import stream_events
 
     out = transform_with_state_totals(stream_events(spark, sf_dir))
-    ckpt = tempfile.mkdtemp(prefix="t9_ckpt_")
+    ckpt = scratch_dir("t9_ckpt_")
     q = (
         out.writeStream.format("memory")
         .queryName("t9_sink")
@@ -361,11 +361,11 @@ def foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mric_bak_etl_spark.streaming.windows import stream_events
 
-    base = tempfile.mkdtemp(prefix="t10_tgt_")
+    base = scratch_dir("t10_tgt_")
     state = {"version": 0}
     merge_batch = make_merge_sink(base, state)
 
-    ckpt = tempfile.mkdtemp(prefix="t10_ckpt_")
+    ckpt = scratch_dir("t10_ckpt_")
     q = (
         stream_events(spark, sf_dir)
         .writeStream.foreachBatch(merge_batch)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.operators.aggregates import _HLL_RHO_ORACLE
+from mric_bak_etl_spark.session import scratch_dir
 from mric_bak_etl_spark.tables import load_table
 
 
@@ -410,7 +411,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     deduped = (
         stream_events(spark, sf_dir)
@@ -418,7 +418,7 @@ def dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    ckpt = tempfile.mkdtemp(prefix="t11_ckpt_")
+    ckpt = scratch_dir("t11_ckpt_")
     q = (
         deduped.writeStream.format("memory")
         .queryName("t11_sink")
@@ -472,8 +472,6 @@ def dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_log_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-
-    from mric_bak_etl_spark.session import scratch_dir
 
     sink1 = scratch_dir("t12_sink1_")
     sink2 = scratch_dir("t12_sink2_")
@@ -662,11 +660,10 @@ def streaming_register_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
 
     from mric_bak_etl_spark.operators.aggregates import _hll_max_rank
 
-    base = tempfile.mkdtemp(prefix="t13b_reg_")
+    base = scratch_dir("t13b_reg_")
     state = {"version": 0}
     stream = stream_events(spark, sf_dir).select(
         F.date_format(
@@ -676,7 +673,7 @@ def streaming_register_maintenance(
         F.md5(F.col("user_id").cast("string")).alias("h"),
     )
     daily = _hll_max_rank(stream, ["week", "day"])
-    ckpt = tempfile.mkdtemp(prefix="t13b_ckpt_")
+    ckpt = scratch_dir("t13b_ckpt_")
     # State-sized stream partitioning (optimization r14): the stateful
     # aggregation's state-store instance count is fixed at first batch
     # from spark.sql.shuffle.partitions, and this operator's state is

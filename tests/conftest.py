@@ -7,6 +7,8 @@ SPARK_GRAFT_TEST_SF selects the scale dir for parity tests
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 import duckdb
 import pytest
@@ -28,6 +30,24 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 # untouched — this is fixture-scale right-sizing, not an engine change.
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
+
+
+@pytest.fixture(scope="session", autouse=True)
+def artifact_cache():
+    """A fresh, empty XDG_CACHE_HOME for the session, removed at its end,
+    so every persisted-artifact test builds and publishes the artifact it
+    claims to test instead of reading a warm ~/.cache. It sits beside the
+    user's cache root, not under the tempdir: the l26c test asserts that
+    artifact roots stay out of the world-shared tempdir."""
+    root = os.environ.get(
+        "XDG_CACHE_HOME", os.path.join(os.path.expanduser("~"), ".cache")
+    )
+    path = os.path.join(root, f"mric_test_cache_{uuid.uuid4().hex[:12]}")
+    os.makedirs(path)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("XDG_CACHE_HOME", path)
+        yield path
+    shutil.rmtree(path, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")
