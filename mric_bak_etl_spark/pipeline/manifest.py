@@ -16,13 +16,18 @@ Reference behavior re-expressed (SURVEY.md §2A R1-R6):
   preserved as-is, documented difference vs mtime ordering.
 
 Scale notes (100 TB): the reference re-lists the whole container and sorts
-client-side every run (O(all blobs), `src/bak_unload.ps1:23,46`). Here the
-latest-pick is ``F.max`` / ``orderBy().limit(1)`` — a partial max per
-partition then a 1-row combine, never a global sort; and the streaming
-runner replaces re-listing entirely with the file-source checkpoint.
+client-side every run (O(all blobs), `src/bak_unload.ps1:23,46`). Listing
+is the one cost ``run_batch`` keeps: building the manifest fills Spark's
+file index on the driver, and :func:`latest_listed_snapshot` picks the max
+name from that index without scheduling a job. :func:`latest_snapshot` is
+the DataFrame form the r-queries use — ``F.max``, a partial max per
+partition then a 1-row combine, never a global sort. The streaming runner
+replaces re-listing entirely with the file-source checkpoint.
 """
 
 from __future__ import annotations
+
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,3 +87,18 @@ def latest_snapshot(names: DataFrame) -> DataFrame:
     which its naming convention makes equivalent to recency.
     """
     return names.agg(F.max("name").alias("name"))
+
+
+def latest_listed_snapshot(listing: DataFrame, pattern: str = ".zip") -> str | None:
+    """R3-R6 on the driver: the max of the listed file names that contain
+    ``pattern``, or None when none do (R4's empty guard).
+
+    Reads the file index that building ``listing`` already filled
+    (``inputFiles()``), so no Spark job runs. ``inputFiles()`` returns
+    URI-encoded paths (``a b%20c.zip`` comes back as ``a%20b%2520c.zip``)
+    where the ``path`` column is not encoded, hence ``unquote``. Python's
+    ``str`` order is code-point order, which is the UTF-8 byte order
+    ``F.max`` uses, so both forms pick the same name.
+    """
+    names = (unquote(p.rsplit("/", 1)[-1]) for p in listing.inputFiles())
+    return max((n for n in names if pattern in n), default=None)

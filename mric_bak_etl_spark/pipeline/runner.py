@@ -7,8 +7,11 @@ The reference's full control flow (`src/bak_unload.ps1:21-126`):
     full-refresh load → commit state → cleanup
 
 A traced benchmark run (``perfbench/run.py --workload ingest --trace 1``)
-counts 8 Spark jobs for a scheduled run that loads a snapshot and 3 for
-one that stops at the already-imported check.
+counts 3 Spark jobs for a scheduled run that loads a snapshot (the
+already-imported check, the load and the state commit) and 1 for one that
+stops at that check. The bookkeeping runs on metadata the driver already
+holds: the latest-pick reads the listing's file index, and the entry count
+is an ``Observation`` on the load's own write.
 
 Batch :func:`run_batch` reproduces exactly that decision structure
 (including both early-exit messages). :func:`run_streaming` is the idiomatic
@@ -27,7 +30,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from mric_bak_etl_spark.pipeline import manifest, state, unzip
@@ -58,11 +61,10 @@ def run_batch(
     ensure_runtime_confs(spark)
 
     listing = manifest.manifest_from_directory(spark, blob_dir)
-    candidates = manifest.filter_snapshots(listing.select("name"), snapshot_pattern)
 
-    # R5+R6 as one 1-row action; the max over no names is NULL, which is
-    # R4's empty guard (`src/bak_unload.ps1:38-42`).
-    snapshot_name = manifest.latest_snapshot(candidates).first()["name"]
+    # R3-R6 from the listing's file index; None is R4's empty guard
+    # (`src/bak_unload.ps1:38-42`).
+    snapshot_name = manifest.latest_listed_snapshot(listing, snapshot_pattern)
     if snapshot_name is None:
         return RunResult(status="empty")
 
@@ -78,13 +80,21 @@ def run_batch(
         .option("pathGlobFilter", re.sub(r"[\\*?\[\]{}]", r"\\\g<0>", snapshot_name))
         .load(blob_dir)
     )
-    payload = unzip.unzip_entries(archive, payload_pattern)  # R9+R10
+    written = Observation()  # the entry count, taken by the write itself
+    payload = unzip.unzip_entries(archive, payload_pattern).observe(  # R9+R10
+        written, F.count(F.lit(1)).alias("n")
+    )
 
     overwrite_snapshot(payload, out_dir)  # R11 (atomic staged replace)
-    n_entries = spark.read.parquet(out_dir).count()
+    n_entries = written.get["n"]
 
-    state.commit_state(  # R13 — strictly after the load, like :103 vs :115
-        spark, state_dir, spark.createDataFrame([(snapshot_name,)], "name string")
+    # R13 — strictly after the load, like :103 vs :115. The one-row frame
+    # is planned in the JVM; a frame built from a Python list would pay a
+    # Python worker round-trip for one string.
+    state.commit_state(
+        spark,
+        state_dir,
+        spark.range(1, numPartitions=1).select(F.lit(snapshot_name).alias("name")),
     )
     return RunResult(status="loaded", snapshot=snapshot_name, entries=n_entries)
 

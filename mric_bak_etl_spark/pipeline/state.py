@@ -19,8 +19,7 @@ shuffles.
 
 from __future__ import annotations
 
-import os
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,11 +29,18 @@ _STATE_SCHEMA = T.StructType([T.StructField("name", T.StringType(), False)])
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Read the processed-names table; empty DataFrame when no state yet
-    (mirrors the reference's Test-Path probe, `src/bak_unload.ps1:58`)."""
-    if os.path.isdir(state_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(state_dir)
-    ):
+    (mirrors the reference's Test-Path probe, `src/bak_unload.ps1:58`).
+
+    The probe is Spark's own path resolution, so a local path and a
+    ``file://`` or ``abfss://`` URI behave alike: a missing dir raises
+    ``PATH_NOT_FOUND`` and reads as no state, and a dir without parquet
+    files reads as empty under the given schema. No job runs either way.
+    """
+    try:
         return spark.read.schema(_STATE_SCHEMA).parquet(state_dir)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
     return spark.createDataFrame([], _STATE_SCHEMA)
 
 

@@ -54,6 +54,7 @@ def test_single_candidate_edge_case(spark, dirs):
     result = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
     assert result.status == "loaded"
     assert result.snapshot == "backup_01.zip"
+    assert result.entries == 1
     assert payload_texts(spark, dirs["out"]) == ["only"]
 
 
@@ -108,6 +109,71 @@ def test_crash_replay_between_load_and_commit(spark, dirs):
     replay = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
     assert replay.status == "loaded"  # at-least-once
     assert payload_texts(spark, dirs["out"]) == ["payload"]  # still correct
+
+
+def test_archive_without_payload_counts_zero_entries(spark, dirs):
+    # The entry count is observed on the write; an empty write must still
+    # report it, and the name is still committed, so the run is not retried.
+    make_zip(os.path.join(dirs["blob"], "backup_05.zip"), {"readme.txt": b"x"})
+    result = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
+    assert (result.status, result.snapshot, result.entries) == ("loaded", "backup_05.zip", 0)
+    again = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
+    assert again.status == "already_imported"
+
+
+def test_state_and_dirs_given_as_uris(spark, dirs):
+    # A file:// state dir (and so an abfss:// one) must remember what was
+    # imported: the state probe goes through Spark's filesystem layer.
+    make_zip(os.path.join(dirs["blob"], "backup_06.zip"), {"u.bak": b"uri"})
+    uri = {k: "file://" + os.path.abspath(v) for k, v in dirs.items()}
+    first = run_batch(spark, uri["blob"], uri["state"], uri["out"])
+    assert first.status == "loaded"
+    assert payload_texts(spark, dirs["out"]) == ["uri"]
+    again = run_batch(spark, uri["blob"], uri["state"], uri["out"])
+    assert again.status == "already_imported"
+
+
+def test_latest_pick_decodes_listed_names(spark, dirs):
+    # The driver-side pick reads URI-encoded paths from the file index;
+    # it must agree with the DataFrame form (unencoded ``path`` column) on
+    # every pattern, skip hidden files as the listing does, and name a
+    # blob the archive read can find.
+    visible = ["a b%20c.zip", "ü.zip", "x{y}.zip", "backup_2024_07_02[1].zip"]
+    for name in visible + [".n.zip.part", "_n.zip"]:
+        make_zip(os.path.join(dirs["blob"], name), {"p.bak": name.encode()})
+    listing = manifest.manifest_from_directory(spark, dirs["blob"])
+
+    for pattern in [".zip", "n.zip", *visible]:
+        want = manifest.latest_snapshot(manifest.filter_snapshots(listing, pattern))
+        assert manifest.latest_listed_snapshot(listing, pattern) == want.first()["name"]
+    assert manifest.latest_listed_snapshot(listing, "n.zip") is None
+
+    for name in visible:
+        result = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"], name)
+        assert (result.status, result.snapshot, result.entries) == ("loaded", name, 1)
+        assert payload_texts(spark, dirs["out"]) == [name]
+
+
+def test_run_batch_job_counts(spark, dirs):
+    # The bookkeeping (latest-pick, entry count, state row) runs on the
+    # driver or inside the load's own jobs: a loaded run is the decide
+    # check, the load and the state commit; a no-op run is the check.
+    sc = spark.sparkContext
+    make_zip(os.path.join(dirs["blob"], "backup_07.zip"), {"j.bak": b"jobs"})
+
+    def jobs(group: str) -> tuple[str, int]:
+        sc.setJobGroup(group, group)
+        try:
+            status = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"]).status
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the bus
+        return status, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    status, n = jobs("test_run_batch_job_counts_loaded")
+    assert status == "loaded" and 1 <= n <= 3
+    status, n = jobs("test_run_batch_job_counts_noop")
+    assert status == "already_imported" and n <= 1
 
 
 def snapshot(stem: str, payload: bytes) -> dict[str, bytes]:
