@@ -14,6 +14,12 @@ artifact's load-time audit is the second line of defense.
 Publishing is s11's write-audit-publish, the atomic form of the
 reference's DROP-then-RESTORE swap: write to a staging dir beside the
 target, audit what was actually written, then one directory rename.
+
+The foreachBatch sinks that keep versioned state (t10, t13b, l42c)
+commit each micro-batch the same way, as the next ``vN`` dir
+(:func:`versioned_sink`). A ``vN`` dir exists only after its rename, so
+the newest one IS the commit pointer and a replayed batch whose version
+exists is skipped: exactly-once effects from at-least-once delivery.
 """
 
 from __future__ import annotations
@@ -23,6 +29,8 @@ import os
 import shutil
 import tempfile
 from collections.abc import Callable
+
+from pyspark.sql import DataFrame
 
 
 def artifact_dir(sf_dir: str, table: str, root: str, config: str) -> str:
@@ -60,3 +68,37 @@ def publish(target: str, write: Callable[[str], None]) -> str:
             raise  # a real failure, not a lost publish race
         shutil.rmtree(staging, ignore_errors=True)
     return target
+
+
+def versioned_sink(
+    base: str,
+    state: dict[str, int],
+    write: Callable[[DataFrame, str | None, str], None],
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch handler that commits batch ``batch_id`` as
+    ``base/v{batch_id + 1}``.
+
+    ``write(batch_df, prev, staging)`` writes the next version into
+    ``staging`` from the batch and ``prev``, the newest committed
+    version dir (None before the first). ``state["version"]`` is the
+    pointer; a cold one (a restarted process whose checkpoint resumes
+    mid-stream) is recovered from the ``vN`` dirs, and a batch whose
+    version already exists is a replay and is skipped."""
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if state["version"] == 0:
+            names = os.listdir(base) if os.path.isdir(base) else []
+            state["version"] = max(
+                (int(n[1:]) for n in names if n[:1] == "v" and n[1:].isdigit()),
+                default=0,
+            )
+        if (v := state["version"]) > batch_id:
+            return
+        prev = os.path.join(base, f"v{v}") if v else None
+        publish(
+            os.path.join(base, f"v{batch_id + 1}"),
+            lambda staging: write(batch_df, prev, staging),
+        )
+        state["version"] = batch_id + 1
+
+    return handle

@@ -34,7 +34,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mric_bak_etl_spark.artifacts import artifact_dir, publish
+from mric_bak_etl_spark.artifacts import artifact_dir, publish, versioned_sink
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.llm.text import tokens
 from mric_bak_etl_spark.tables import load_table, spread
@@ -3132,8 +3132,8 @@ def make_crawl_index_append_sink(
     cap: int = L42_MAX_POSTING,
 ):
     """The foreachBatch handler that gives the crawl indexes true
-    incremental MAINTENANCE (the t10/t13b versioned-commit scaffold,
-    streaming/stateful.py:239, applied to INDEX state): each crawl
+    incremental MAINTENANCE (`artifacts.versioned_sink`, the versioned
+    commit t10/t13b use too, applied to INDEX state): each crawl
     batch runs the funnel against the CURRENT committed index version,
     and its survivors are folded into the next immutable version —
     hashes ∪ survivor hashes; band postings ∪ survivor postings with
@@ -3151,10 +3151,10 @@ def make_crawl_index_append_sink(
     vN+1 indexes equal `build_crawl_index` run from scratch on
     corpus ∪ all survivors — probe-after-append == inline-on-grown-
     corpus. Exactly-once: batch_id keys the version (idempotent skip
-    on replay); versions commit through `artifacts.publish`, so a crash
-    mid-write leaves only an uncommitted staging dir, which
-    `recover_version` (it lists only ``vN`` dirs) and the replayed batch
-    ignore.
+    on replay), and a crash mid-write leaves only an uncommitted staging
+    dir, which the version recovery (it lists only ``vN`` dirs) and the
+    replayed batch ignore. The day-zero index is published once, as
+    ``_bootstrap``, inside the first version's write.
 
     At 100 TB: per-append cost is O(|batch|) signature work + a
     bucket-grain count merge + ONE index-sized union-anti-join write —
@@ -3165,30 +3165,12 @@ def make_crawl_index_append_sink(
 
     from mric_bak_etl_spark.tables import materialize
 
-    def recover_version() -> int:
-        try:
-            return max(
-                (
-                    int(v[1:])
-                    for v in os.listdir(base)
-                    if v.startswith("v") and v[1:].isdigit()
-                ),
-                default=0,
-            )
-        except OSError:
-            return 0
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if state["version"] == 0:
-            state["version"] = recover_version()
-        if state["version"] > batch_id:
-            return  # replayed batch already folded: idempotent skip
+    def fold(batch_df: DataFrame, vdir: str | None, staging: str) -> None:
         docs = spread(
             load_table(spark, sf_dir, "documents").select("doc_id", "text"),
             "doc_id",
         )
-        v = state["version"]
-        if v == 0:
+        if vdir is None:
             # Bootstrap: build the day-zero index ONCE and WRITE it,
             # then read the parquet back for the probe and the merge.
             # Without this, corpus_h/capped/counts are all lazy plans
@@ -3198,13 +3180,13 @@ def make_crawl_index_append_sink(
             # one-pass for the same fold (the SCALE.md materialize
             # lesson: parquet IS the materialization for corpus-sized
             # state; localCheckpoint pins poison repeated runs).
-            def write_bootstrap(staging: str) -> None:
+            def write_bootstrap(boot_staging: str) -> None:
                 index = build_crawl_index(
                     docs, n_hashes=n_hashes, n_bands=n_bands, cap=cap
                 )
                 for name, df_ in zip(("hashes", "bands", "counts"), index):
                     df_.write.mode("overwrite").parquet(
-                        os.path.join(staging, name)
+                        os.path.join(boot_staging, name)
                     )
 
             boot = publish(os.path.join(base, "_bootstrap"), write_bootstrap)
@@ -3216,7 +3198,6 @@ def make_crawl_index_append_sink(
                 F.col("doc_id").cast("long").alias("doc_id"), "text"
             )
         else:
-            vdir = os.path.join(base, f"v{v}")
             newdocs = spark.read.parquet(os.path.join(vdir, "newdocs"))
             corpus = docs.select(
                 F.col("doc_id").cast("long").alias("doc_id"), "text"
@@ -3264,23 +3245,16 @@ def make_crawl_index_append_sink(
         ).distinct()
         merged_newdocs = newdocs.unionByName(survivors)
         waterfall = _crawl_waterfall_from_flags(flags)
+        for name, df_ in (
+            ("hashes", merged_hashes),
+            ("bands", merged_bands),
+            ("counts", merged_counts),
+            ("newdocs", merged_newdocs),
+            ("waterfall", waterfall),
+        ):
+            df_.write.mode("overwrite").parquet(os.path.join(staging, name))
 
-        def write_version(staging: str) -> None:
-            for name, df_ in (
-                ("hashes", merged_hashes),
-                ("bands", merged_bands),
-                ("counts", merged_counts),
-                ("newdocs", merged_newdocs),
-                ("waterfall", waterfall),
-            ):
-                df_.write.mode("overwrite").parquet(
-                    os.path.join(staging, name)
-                )
-
-        publish(os.path.join(base, f"v{batch_id + 1}"), write_version)
-        state["version"] = batch_id + 1
-
-    return fold
+    return versioned_sink(base, state, fold)
 
 
 def maintain_crawl_index(spark: SparkSession, sf_dir: str) -> str:

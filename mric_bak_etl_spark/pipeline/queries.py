@@ -110,9 +110,10 @@ def state_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem WHERE l_returnflag = 'R'
     """,
     doc="S3/R11: snapshot-replace sink round-trip — overwrite-write the "
-    "filtered lineitem as a parquet snapshot (staged replace; readers "
-    "never see a half-written state, unlike the reference's DROP+RESTORE "
-    "gap) and aggregate the read-back.",
+    "filtered lineitem as a parquet snapshot and aggregate the read-back. "
+    "Like the reference's DROP+RESTORE the replace is not atomic: Spark's "
+    "overwrite clears the target before it writes, so a failed write "
+    "leaves it empty, and the caller re-runs the load (at-least-once).",
     tags=("pipeline", "sink"),
 )
 def snapshot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,12 +434,11 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "don't show: the stream writes parquet plus a _spark_metadata "
     "commit log, and a BATCH read of the same directory consults that "
     "log, so files from an uncommitted (crashed) micro-batch are "
-    "invisible to readers — no manifest tables, no manual _SUCCESS "
-    "checks (contrast t10's hand-built versioned-dir commit: this is "
-    "the built-in equivalent). The filtered stream (AvailableNow) "
-    "lands in the sink, the read-back aggregates, and the oracle "
-    "computes the same aggregate from the raw events — equality "
-    "proves no batch was dropped or doubled through the sink. At "
+    "invisible to readers — no manifest tables (run_streaming's "
+    "ingest stream uses the same sink). The filtered stream "
+    "(AvailableNow) lands in the sink, the read-back aggregates, and "
+    "the oracle computes the same aggregate from the raw events — "
+    "equality proves no batch was dropped or doubled through the sink. At "
     "scale the metadata log is also the compaction boundary: s7-style "
     "rewrites must go through a NEW table, never in-place, or the log "
     "and the files disagree.",

@@ -14,11 +14,19 @@ holds: the latest-pick reads the listing's file index, and the entry count
 is an ``Observation`` on the load's own write.
 
 Batch :func:`run_batch` reproduces exactly that decision structure
-(including both early-exit messages). :func:`run_streaming` is the idiomatic
-replacement for the schedule+state-file pattern: a Structured Streaming
-file source with ``Trigger.AvailableNow`` and a checkpoint — Spark tracks
-seen files exactly-once, so R7's anti-join and R13's commit come for free
-and the per-run O(all blobs) re-list + client sort disappears.
+(including both early-exit messages). Like the reference's load-then-commit
+it is at-least-once: a load that fails, or a crash before the state
+commit, leaves the name uncommitted and the next run loads it again.
+
+:func:`run_streaming` is the idiomatic replacement for the
+schedule+state-file pattern: a Structured Streaming file source with
+``Trigger.AvailableNow`` and a checkpoint, so R7's anti-join and R13's
+commit come for free and the per-run O(all blobs) re-list + client sort
+disappears. The parquet file sink's ``_spark_metadata`` log in the output
+dir makes it exactly-once: a batch the checkpoint replays after a crash is
+skipped because the log already has it. Spark readers list the output
+through that log; a reader that lists files itself must skip part files the
+log does not name (the debris of a batch that died before its commit).
 
 Cleanup (R14): the reference deletes its temp ``.bak`` files; here no temp
 materialization exists — archives stream executor-side through the unzip
@@ -30,7 +38,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from mric_bak_etl_spark.pipeline import manifest, state, unzip
@@ -85,7 +93,7 @@ def run_batch(
         written, F.count(F.lit(1)).alias("n")
     )
 
-    overwrite_snapshot(payload, out_dir)  # R11 (atomic staged replace)
+    overwrite_snapshot(payload, out_dir)  # R11: clears out_dir, then writes
     n_entries = written.get["n"]
 
     # R13 — strictly after the load, like :103 vs :115. The one-row frame
@@ -111,7 +119,8 @@ def run_streaming(
     Every ``*.zip`` that ever lands in ``blob_dir`` is processed exactly
     once across invocations — the checkpoint subsumes the reference's state
     file AND its full re-list per run. Each micro-batch decompresses its
-    archives and appends their payload entries; returns batches processed.
+    archives and appends their payload entries to the parquet file sink in
+    ``out_dir``; returns the number of micro-batches run.
 
     Note the semantic upgrade this makes explicit: the reference imports
     only the lexicographic-latest snapshot and silently skips any older
@@ -126,19 +135,15 @@ def run_streaming(
         .option("pathGlobFilter", "*.zip")
         .load(blob_dir)
     )
-
-    batches = {"n": 0}
-
-    def process(batch_df: DataFrame, _epoch: int) -> None:
-        payload = unzip.unzip_entries(batch_df, payload_pattern)
-        payload.write.mode("append").parquet(out_dir)
-        batches["n"] += 1
-
     query = (
-        stream.writeStream.foreachBatch(process)
+        unzip.unzip_entries(stream, payload_pattern)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     query.awaitTermination()
-    return batches["n"]
+    # An AvailableNow run with nothing new still reports one progress,
+    # without an addBatch phase.
+    return sum("addBatch" in p["durationMs"] for p in query.recentProgress)

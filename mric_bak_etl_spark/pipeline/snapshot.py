@@ -5,12 +5,16 @@ sqlcmd — a full, NON-atomic replace (readers see no database between the
 two statements, `src/bak_unload.ps1:90-103`), followed by an idempotent
 reader grant (`src/bak_unload.ps1:105-111`).
 
-Spark-first: ``write.mode("overwrite")`` IS drop-and-replace, but staged —
-the new data is written before the swap, so readers never observe the
-in-between state. We deliberately do NOT reproduce the reference's
-non-atomicity (SURVEY §4.2). The JDBC variant targets the same SQL Server
-shape the reference loads into; ``s13_jdbc_roundtrip`` runs it against the
-embedded Derby driver that ships with the Spark distribution.
+Spark-first: ``write.mode("overwrite")`` IS drop-and-replace, and it is
+just as non-atomic: Spark clears the target before the job writes, so
+readers can see an empty dir mid-load, and a load that fails (a corrupt
+archive) leaves the target empty — the previous snapshot is gone. Safety
+comes from the caller's commit order, as in the reference: the state row
+is written only after the load, so a failed load commits nothing and the
+next run loads the snapshot again (at-least-once, like DROP+RESTORE). The
+JDBC variant targets the same SQL Server shape the reference loads into;
+``s13_jdbc_roundtrip`` runs it against the embedded Derby driver that
+ships with the Spark distribution.
 
 Scale notes (100 TB): ``partition_by`` columns turn the snapshot into a
 partition-pruned table for downstream readers; writer parallelism is the
@@ -28,7 +32,9 @@ def overwrite_snapshot(
     path: str,
     partition_by: list[str] | None = None,
 ) -> None:
-    """R11 as an atomic staged replace: parquet ``mode("overwrite")``."""
+    """R11 as parquet ``mode("overwrite")``: the target is cleared, then
+    written. Not atomic — a failed write leaves ``path`` empty, and the
+    caller must not commit the snapshot as loaded."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)

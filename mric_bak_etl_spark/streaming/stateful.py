@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from mric_bak_etl_spark.artifacts import versioned_sink
 from mric_bak_etl_spark.catalog import register
 from mric_bak_etl_spark.session import scratch_dir
 
@@ -237,54 +238,17 @@ def transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def make_versioned_merge_sink(base: str, state: dict[str, int], merge):
-    """The versioned-commit foreachBatch scaffold shared by t10 and t13b:
-    crash-safe version recovery, batch_id-keyed idempotent skip, and the
-    next-immutable-version commit. ``merge(batch_df, cur)`` supplies only
-    the MERGE arithmetic — ``cur`` is the current committed target (None
-    on the first commit) — so the subtle exactly-once invariants live in
-    exactly one place.
-    """
+    """The versioned MERGE sink shared by t10 and t13b: each batch's
+    next version is ``merge(batch_df, cur)`` written whole, where
+    ``cur`` is the current committed target (None on the first commit).
+    Version recovery, the replay skip and the atomic commit are
+    :func:`artifacts.versioned_sink`'s."""
 
-    def recover_version() -> int:
-        # The version pointer must survive a query RESTART: the
-        # checkpoint resumes batch ids where they left off, so a fresh
-        # process that believed version=0 would treat its first resumed
-        # batch as the whole target. Recover from the committed version
-        # dirs themselves (on a table format this is the commit log —
-        # s14's read path). A dir only counts as COMMITTED if Spark's
-        # _SUCCESS marker is present: a crash mid-write leaves a partial
-        # v{N} dir without the marker, and trusting it would make the
-        # replayed batch skip as "already merged", permanently pinning a
-        # corrupt target. Partial dirs are instead overwritten by the
-        # replay (mode="overwrite" below), restoring exactly-once.
-        try:
-            versions = [
-                int(d[1:])
-                for d in os.listdir(base)
-                if d.startswith("v")
-                and d[1:].isdigit()
-                and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-            ]
-            return max(versions, default=0)
-        except OSError:
-            return 0
+    def write(batch_df: DataFrame, prev: str | None, staging: str) -> None:
+        cur = None if prev is None else batch_df.sparkSession.read.parquet(prev)
+        merge(batch_df, cur).write.mode("overwrite").parquet(staging)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["version"] == 0:
-            state["version"] = recover_version()
-        if state["version"] > batch_id:
-            return  # replayed batch already merged: idempotent skip
-        cur = None
-        if state["version"] > 0:
-            cur = batch_df.sparkSession.read.parquet(
-                os.path.join(base, f"v{state['version']}")
-            )
-        merge(batch_df, cur).write.mode("overwrite").parquet(
-            os.path.join(base, f"v{batch_id + 1}")
-        )
-        state["version"] = batch_id + 1
-
-    return merge_batch
+    return versioned_sink(base, state, write)
 
 
 def read_committed_version(spark, base: str, state: dict[str, int], label: str):
@@ -344,8 +308,9 @@ def make_merge_sink(base: str, state: dict[str, int]):
     "MERGE): each micro-batch arrives as a bounded DataFrame plus a "
     "monotonically increasing batch_id; the handler aggregates the "
     "batch, full-outer-merges it into the current target version, and "
-    "writes the result as the NEXT immutable version directory (the "
-    "s14 commit shape, so readers never see a half-written target). "
+    "writes the result to a staging dir that one rename turns into the "
+    "NEXT immutable version directory (artifacts.publish's commit, so "
+    "readers never see a half-written target). "
     "batch_id is the idempotence key: on crash-replay the same batch "
     "re-arrives with the same id, and a handler that already committed "
     "version batch_id+1 skips it — exactly-once effects from at-least-"

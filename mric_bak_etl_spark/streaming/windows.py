@@ -458,8 +458,7 @@ def dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     "FileStreamSource detects the upstream sink's log and enumerates "
     "committed files FROM THE LOG, never from a directory listing — "
     "so the orphan is invisible and the handoff stays exactly-once "
-    "with no manifest table or _SUCCESS convention (contrast t10's "
-    "hand-built version dirs and s2's explicit manifest). Stage 2 "
+    "with no manifest table (contrast s2's explicit manifest). Stage 2 "
     "re-sinks to a plain parquet dir; the final batch aggregate must "
     "equal the oracle computed from RAW events — equality proves no "
     "batch was dropped, doubled, or polluted by the orphan across "
@@ -599,10 +598,8 @@ def streaming_sketch_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def make_register_merge_sink(base: str, state: dict[str, int]):
     """Build the t13b foreachBatch handler: max-fold each micro-batch's
     updated (week, day, bucket, r) register rows into the persisted
-    register table. The crash-recovery / idempotent-replay / versioned-
-    commit scaffold is t10's, shared via make_versioned_merge_sink so
-    the exactly-once invariants live in one place; only the max-fold
-    merge arithmetic is t13b's."""
+    register table, committed as t10's next version
+    (make_versioned_merge_sink)."""
     # Local import: stateful imports stream_events from this module at
     # module level, so the reverse import must stay function-local.
     from mric_bak_etl_spark.streaming.stateful import (

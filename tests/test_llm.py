@@ -1348,6 +1348,7 @@ def test_l42c_crash_mid_version_then_replay(
 
     from pyspark.sql.readwriter import DataFrameWriter
 
+    from mric_bak_etl_spark import artifacts
     from mric_bak_etl_spark.llm import dedup as D
     from mric_bak_etl_spark.tables import load_table
 
@@ -1356,20 +1357,23 @@ def test_l42c_crash_mid_version_then_replay(
     )
     base = str(tmp_path / "maint")
     os.makedirs(base)
-    real_publish = D.publish
+    real_publish = artifacts.publish
 
     def crashing_publish(target, write):
         if os.path.basename(target) != "v1":
             return real_publish(target, write)
 
         def crash_after_two_tables(staging):
+            # The bootstrap publishes inside v1's write; only the
+            # version's own tables count towards the crash.
             real_parquet = DataFrameWriter.parquet
             written = []
 
             def parquet(self, path, *a, **k):
-                if len(written) == 2:
-                    raise RuntimeError("simulated crash mid-version")
-                written.append(path)
+                if os.path.dirname(path) == staging:
+                    if len(written) == 2:
+                        raise RuntimeError("simulated crash mid-version")
+                    written.append(path)
                 return real_parquet(self, path, *a, **k)
 
             with monkeypatch.context() as m:
@@ -1378,7 +1382,7 @@ def test_l42c_crash_mid_version_then_replay(
 
         return real_publish(target, crash_after_two_tables)
 
-    monkeypatch.setattr(D, "publish", crashing_publish)
+    monkeypatch.setattr(artifacts, "publish", crashing_publish)
     fold = D.make_crawl_index_append_sink(spark, sf_dir, base, {"version": 0})
     with pytest.raises(RuntimeError, match="mid-version"):
         fold(D._l42_batch(d), 0)
@@ -1635,6 +1639,37 @@ def test_l3f_apply_path_never_trains(spark, sf_dir, monkeypatch):
     }
     for row in first.itertuples():
         assert abs(exact[row.vec_id] - row.cosine) < 1e-9
+
+
+def test_l3f_load_refuses_published_index_missing_a_codebook_row(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """The load-time half of the audit: a published index whose codebook
+    lost a row (tampered or truncated after the publish) is refused."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from mric_bak_etl_spark.llm import similarity as S
+
+    published = S.publish_ann_index(spark, sf_dir)
+    monkeypatch.setattr(
+        S, "_ann_artifact_base", lambda _sf: str(tmp_path / "ann")
+    )
+    target = str(tmp_path / "ann" / "published")
+    shutil.copytree(published, target)
+    S.load_ann_index(spark, sf_dir)  # the intact copy loads
+
+    cb_dir = os.path.join(target, "codebook")
+    (part,) = [f for f in os.listdir(cb_dir) if f.endswith(".parquet")]
+    table = pq.read_table(os.path.join(cb_dir, part))
+    assert table.num_rows == S.PQ_M * S.PQ_K
+    pq.write_table(table.slice(1), os.path.join(cb_dir, part))
+    for crc in [f for f in os.listdir(cb_dir) if f.endswith(".crc")]:
+        os.remove(os.path.join(cb_dir, crc))
+    with pytest.raises(ValueError, match="violates its audit contract"):
+        S.load_ann_index(spark, sf_dir)
 
 
 def test_l3f_publish_audit_blocks_bad_codes(

@@ -11,7 +11,7 @@ import zipfile
 
 import pytest
 
-from mric_bak_etl_spark.pipeline import manifest
+from mric_bak_etl_spark.pipeline import manifest, state
 from mric_bak_etl_spark.pipeline.runner import run_batch, run_streaming
 
 
@@ -111,6 +111,32 @@ def test_crash_replay_between_load_and_commit(spark, dirs):
     assert payload_texts(spark, dirs["out"]) == ["payload"]  # still correct
 
 
+def test_failed_load_leaves_state_uncommitted(spark, dirs):
+    # The overwrite is not atomic (Spark clears the target, then writes),
+    # like the reference's DROP+RESTORE: a load that fails leaves the
+    # output empty and commits no state, so the repaired archive loads on
+    # the next run (at-least-once).
+    make_zip(os.path.join(dirs["blob"], "backup_01.zip"), {"p.bak": b"first"})
+    assert run_batch(spark, dirs["blob"], dirs["state"], dirs["out"]).status == "loaded"
+
+    corrupt = os.path.join(dirs["blob"], "backup_02.zip")
+    with open(corrupt, "wb") as f:
+        f.write(b"PK\x03\x04 not a zip archive")
+    with pytest.raises(Exception, match="BadZipFile"):
+        run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
+    left = [
+        f for _, _, files in os.walk(dirs["out"]) for f in files if f.endswith(".parquet")
+    ]
+    assert left == []  # the previous snapshot is gone
+    seen = sorted(r["name"] for r in state.read_state(spark, dirs["state"]).collect())
+    assert seen == ["backup_01.zip"]
+
+    make_zip(corrupt, {"p.bak": b"second"})
+    result = run_batch(spark, dirs["blob"], dirs["state"], dirs["out"])
+    assert (result.status, result.snapshot) == ("loaded", "backup_02.zip")
+    assert payload_texts(spark, dirs["out"]) == ["second"]
+
+
 def test_archive_without_payload_counts_zero_entries(spark, dirs):
     # The entry count is observed on the write; an empty write must still
     # report it, and the name is still committed, so the run is not retried.
@@ -197,6 +223,21 @@ def test_streaming_exactly_once(spark, dirs):
     make_zip(os.path.join(dirs["blob"], "backup_c.zip"), snapshot("c", b"gamma"))
     run_streaming(spark, dirs["blob"], dirs["ckpt"], dirs["out"])
     assert payload_texts(spark, dirs["out"]) == ["alpha", "beta", "gamma"]
+
+
+def test_streaming_replay_after_lost_commit_keeps_each_archive_once(spark, dirs):
+    # A crash after the sink wrote batch 0 but before the checkpoint
+    # committed it: the restarted stream replays batch 0, and the file
+    # sink's log skips it instead of appending its archives again.
+    make_zip(os.path.join(dirs["blob"], "backup_a.zip"), snapshot("a", b"alpha"))
+    make_zip(os.path.join(dirs["blob"], "backup_b.zip"), snapshot("b", b"beta"))
+    assert run_streaming(spark, dirs["blob"], dirs["ckpt"], dirs["out"]) == 1
+
+    commits = os.path.join(dirs["ckpt"], "commits")
+    os.remove(os.path.join(commits, "0"))
+    os.remove(os.path.join(commits, ".0.crc"))
+    assert run_streaming(spark, dirs["blob"], dirs["ckpt"], dirs["out"]) == 1
+    assert payload_texts(spark, dirs["out"]) == ["alpha", "beta"]
 
 
 def test_manifest_listing_parse_roundtrip(spark):

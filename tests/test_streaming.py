@@ -466,14 +466,18 @@ def test_foreachbatch_merge_survives_restart(spark, tmp_path):
     assert got == {1: (2, 15.0), 2: (1, 1.0), 3: (1, 7.0)}
 
 
-def test_foreachbatch_merge_ignores_partial_version_dir(spark, tmp_path):
-    """t10 crash-mid-write contract: a v{N} dir left WITHOUT Spark's
-    _SUCCESS marker (process died during the parquet write) must NOT be
-    treated as committed on restart — recover_version() skips it, the
-    replayed batch re-merges, and mode=overwrite replaces the partial
-    dir. Trusting the bare dir listing would skip the replay as
-    'already merged' and pin a corrupt target forever (ADVICE r3)."""
+def test_foreachbatch_merge_ignores_partial_version_dir(
+    spark, tmp_path, monkeypatch
+):
+    """t10 crash-mid-write contract: a process that dies while writing
+    v2 (here: after the data is written, before the commit) must leave
+    no v2 — only a staging dir that no reader or restart trusts — so
+    the replayed batch re-merges and commits the full aggregate. A v2
+    that existed before its write finished would make the replay skip
+    as 'already merged' and pin a corrupt target forever (ADVICE r3)."""
     import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
 
     from mric_bak_etl_spark.streaming.stateful import make_merge_sink
 
@@ -499,31 +503,28 @@ def test_foreachbatch_merge_ignores_partial_version_dir(spark, tmp_path):
     spark.createDataFrame([(1, 10.0), (2, 1.0)], schema).coalesce(1).write.mode(
         "append"
     ).parquet(d)
-    run_query()  # v1 committed (has _SUCCESS)
+    run_query()  # v1 committed
 
-    # Simulate a crash midway through writing v2: dir exists, contains a
-    # partial part file, but no _SUCCESS marker.
-    partial = os.path.join(base, "v2")
-    os.makedirs(partial)
-    with open(os.path.join(partial, "part-00000-garbage.parquet"), "wb") as f:
-        f.write(b"\x00not a parquet file")
-
-    # Restarted process replays batch 1 (its offsets may or may not have
-    # been checkpointed; either way the batch re-arrives).
     spark.createDataFrame([(1, 5.0), (3, 7.0)], schema).coalesce(1).write.mode(
         "append"
     ).parquet(d)
-    run_query()
+    real_parquet = DataFrameWriter.parquet
 
-    committed = [
-        int(v[1:])
-        for v in os.listdir(base)
-        if v.startswith("v")
-        and os.path.exists(os.path.join(base, v, "_SUCCESS"))
-    ]
-    latest = max(committed)
-    assert latest == 2  # the partial dir was overwritten and committed
-    final = spark.read.parquet(os.path.join(base, f"v{latest}"))
+    def crash_after_write(self, path, *a, **k):
+        real_parquet(self, path, *a, **k)
+        raise RuntimeError("simulated crash mid-version")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash_after_write)
+        with pytest.raises(Exception, match="mid-version"):
+            run_query()
+    assert not os.path.exists(os.path.join(base, "v2"))
+    stray = [p for p in os.listdir(base) if p.startswith("_staging_")]
+    assert len(stray) == 1
+
+    run_query()  # restarted process replays batch 1
+    assert sorted(p for p in os.listdir(base) if p.startswith("v")) == ["v1", "v2"]
+    final = spark.read.parquet(os.path.join(base, "v2"))
     got = {
         r["user_id"]: (r["n_events"], r["total_value"])
         for r in final.collect()
