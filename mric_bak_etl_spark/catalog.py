@@ -99,25 +99,21 @@ def all_specs() -> dict[str, QuerySpec]:
     return dict(_REGISTRY)
 
 
-# Verification order — round 14 rotation (OPTIMIZATION round 2).
-# The driver's correctness run is time-budgeted (~50 entries/round);
-# the cumulative record through round 13 is 0 driver failures ever
-# (CORRECTNESS_r01-r13). This round's semantic-risk surface is the
-# FINAL-ORDERBY SWEEP: all 50 non-top-k headline builders dropped
-# their presentational global sort (the driver's compare is declared
+# Verification order: the head of the queue, which the time-budgeted
+# external correctness run (~50 entries a round) samples first.
+# Its contents date from round 14, whose semantic-risk surface was the
+# FINAL-ORDERBY SWEEP: all 50 non-top-k headline builders dropped their
+# presentational global sort (the external compare is declared
 # order-insensitive, __spark_entry__.py; VERDICT r13 task 1), and the
 # capped-index/bucket paths replaced collect-then-filter with a window
-# count gate (l2/l2f pair buckets, l29/l32 shared windows, l40/l40b
-# and the l42-family build_crawl_index). The head is therefore exactly
-# those 50 changed oracle-bearing queries: the 47 swept headliners
-# that carry value oracles (the 3 rows-only swept — l2, m2, l40 — are
-# value-anchored by twins/tests and sit right behind in the full-
-# catalog tail) plus the 3 gated non-headline faces (l2f, l32, l40b).
-# Every one was locally value-verified TWICE this round: the
-# SPARK_GRAFT_FULL_PARITY suite sweep and a hostile-session driver
-# replay (local[16], America/New_York, no engine confs) at sf0.01 —
-# 299 value-green, 9 rows-only, 0 failures. The vintage rotation
-# resumes next build round.
+# count gate (l2/l2f pair buckets, l29/l32 shared windows, l40/l40b and
+# the l42-family build_crawl_index). The head is exactly those 50
+# changed oracle-bearing queries: the 47 swept headliners that carry
+# value oracles (the 3 rows-only swept — l2, m2, l40 — are
+# value-anchored by twins/tests and sit in the tail) plus the 3 gated
+# non-headline faces (l2f, l32, l40b). tests/test_oracle_parity.py
+# value-checks every oracle-bearing query on every run, whatever its
+# place here.
 _VERIFY_HEAD: tuple[str, ...] = (
     "a1_pricing_summary",
     "a4_rollup", "j1_inner_equi", "j2_broadcast_dims", "j6_asof",
@@ -266,14 +262,9 @@ def headline_names() -> list[str]:
     return list(HEADLINE)
 
 
-# Round 14 (optimization round 2): tables.spread — consumed across the
-# llm/multimodal/text families — became size-aware, so every spread
-# consumer runs changed code this round on top of the 50-query orderBy
-# sweep. The verify queue is therefore the whole catalog again: the
-# prioritized head above (the driver's time-budgeted correctness run
-# samples the FRONT of the queue), followed by every remaining
-# registered query in name order. Locally validated with the full
-# parity sweep plus a hostile-session replay of all 308 queries.
+# The whole verify queue: the head above, then every other registered
+# query in name order. Every registered query is a member, so only the
+# order carries information.
 _VERIFY_FIRST: tuple[str, ...] = _VERIFY_HEAD + tuple(
     n for n in sorted(all_specs()) if n not in set(_VERIFY_HEAD)
 )

@@ -873,10 +873,11 @@ def connected_components(edges: DataFrame, max_iterations: int = MAX_LP_ITERATIO
     return labels.withColumnRenamed("label", "cluster_id")
 
 
-@register(
-    "l2e_dup_clusters",
-    oracle=f"""
-    WITH RECURSIVE {_PAIRS_ORACLE},
+# connected_components + the per-cluster rollup as DuckDB text, over a CTE
+# ``pairs`` (doc_a, doc_b): a recursive-CTE transitive closure labels each
+# node with the min id it reaches. The one closure of l2e's, l32's and
+# g3's oracles; the caller's WITH must be RECURSIVE.
+_COMPONENT_CLUSTERS_ORACLE = """
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM pairs
       UNION ALL
@@ -896,7 +897,13 @@ def connected_components(edges: DataFrame, max_iterations: int = MAX_LP_ITERATIO
     FROM labels
     GROUP BY cluster_id
     ORDER BY cluster_id
-    """,
+    """
+
+@register(
+    "l2e_dup_clusters",
+    oracle=f"""
+    WITH RECURSIVE {_PAIRS_ORACLE},
+    {_COMPONENT_CLUSTERS_ORACLE}""",
     doc="L2e: duplicate clustering — iterative min-label propagation "
     "(distributed union-find) over the exact near-dup pair graph; a "
     "cluster = one duplicate group, cluster_id = the keeper (min doc_id). "
@@ -1414,30 +1421,11 @@ _L29_SURVIVORS_ORACLE = f"""
     oracle=f"""
     WITH RECURSIVE {_L29_SURVIVORS_ORACLE},
     hubs AS (SELECT win, min(doc_id) AS hub FROM banded GROUP BY win),
-    star AS (
-      SELECT DISTINCT b.doc_id AS a, h.hub AS b
+    pairs AS (
+      SELECT DISTINCT b.doc_id AS doc_a, h.hub AS doc_b
       FROM banded b JOIN hubs h USING (win)
     ),
-    edges AS (
-      SELECT a AS src, b AS dst FROM star
-      UNION ALL
-      SELECT b AS src, a AS dst FROM star
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach(node, root) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    labels AS (SELECT node AS doc_id, min(root) AS cluster_id
-               FROM reach GROUP BY node)
-    SELECT cluster_id,
-           CAST(count(*) AS BIGINT) AS n_members,
-           max(doc_id)              AS max_member
-    FROM labels
-    GROUP BY cluster_id
-    ORDER BY cluster_id
-    """,
+    {_COMPONENT_CLUSTERS_ORACLE}""",
     doc="L32: exact-substring duplicate CLUSTERS via bucket-level star "
     "reduction — the linear-in-duplication escape hatch SCALE.md "
     "measures l29 needing: instead of enumerating C(k,2) pairs per "
@@ -2470,21 +2458,158 @@ def _crawl_waterfall_from_flags(flags: DataFrame) -> DataFrame:
     )
 
 
-_L42_SHINGLE_ORACLE = """list_distinct(list_transform(
-      range(1, greatest(len(string_split_regex(text, '\\s+')) - 2, 1) + 1),
-      i -> array_to_string(string_split_regex(text, '\\s+')[i:i+2], ' ')
+def render_crawl_funnel_ctes(
+    suffix: str,
+    *,
+    n_hashes: int = N_MINHASHES,
+    n_bands: int = N_BANDS,
+    cap: int = L42_MAX_POSTING,
+    thresh: float = 0.5,
+    k: int = SHINGLE_K,
+) -> str:
+    """DuckDB CTE fragment for ONE generation of the crawl funnel — the
+    one text of the gate chain: l42 and l42b's registered oracle composes
+    it once (suffix ""), l42c's twice (one per generation), and fuzz
+    grammar 21 sweeps its parameter space (the way grammar 15 sweeps the
+    sketch family's), so the SQL the fuzzing checks is the SQL those
+    three oracles run.
+    Assumes CTEs ``corpus{suffix}`` (doc_id, text) and ``batch{suffix}``
+    (new_id, text, curl) are already defined; emits the chain through
+    ``f4{suffix}`` (per-doc survival flags) and ``tot{suffix}`` (the
+    one-row funnel totals). Every stage mirrors :func:`crawl_flags`
+    bit-for-bit on the portable md5 family: same URL-canonical keeper
+    rule, same corpus-hash probe, same in-batch keeper, same capped band
+    index (hot buckets dropped at count > cap), same 4dp-rounded
+    exact-Jaccard verify."""
+    S = suffix
+    if n_hashes % n_bands != 0:
+        raise ValueError(f"{n_hashes} slots do not band into {n_bands}")
+    rpb = n_hashes // n_bands
+    shingle = f"""list_distinct(list_transform(
+      range(1, greatest(len(string_split_regex(text, '\\s+')) - {k - 1}, 1) + 1),
+      i -> array_to_string(string_split_regex(text, '\\s+')[i:i+{k - 1}], ' ')
     ))"""
+    sig = ", ".join(
+        f"list_min(list_transform(sh, s -> md5(concat('{i}:', s))))"
+        for i in range(n_hashes)
+    )
+    band_key = ", ".join(f"mh[b.band*{rpb}+{r + 1}]" for r in range(rpb))
+    bands_list = ", ".join(str(b) for b in range(n_bands))
+    jac = (
+        f"CAST(len(list_intersect(ssh{S}.sh, csh{S}.sh)) AS DOUBLE)"
+        f" / (len(ssh{S}.sh) + len(csh{S}.sh)"
+        f" - len(list_intersect(ssh{S}.sh, csh{S}.sh)))"
+    )
+    return f"""
+    f0{S} AS (
+      SELECT new_id, text, curl,
+             CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS tok_n,
+             md5(text) AS h,
+             max(length(text)) OVER (PARTITION BY curl) AS best_len
+      FROM batch{S}
+    ),
+    f1{S} AS (
+      SELECT new_id, text, tok_n, h,
+             new_id = min(CASE WHEN length(text) = best_len THEN new_id END)
+                      OVER (PARTITION BY curl) AS s1
+      FROM f0{S}
+    ),
+    f2{S} AS (
+      SELECT f1{S}.*,
+             s1 AND h NOT IN (SELECT DISTINCT md5(text) FROM corpus{S}) AS s2
+      FROM f1{S}
+    ),
+    f3{S} AS (
+      SELECT f2{S}.*,
+             s2 AND new_id = min(CASE WHEN s2 THEN new_id END)
+                             OVER (PARTITION BY h) AS s3
+      FROM f2{S}
+    ),
+    ssh{S} AS (SELECT new_id AS doc_id, {shingle} AS sh FROM f3{S} WHERE s3),
+    csh{S} AS (SELECT doc_id, {shingle} AS sh FROM corpus{S}),
+    ssig{S} AS (SELECT doc_id, [{sig}] AS mh FROM ssh{S}),
+    csig{S} AS (SELECT doc_id, [{sig}] AS mh FROM csh{S}),
+    sbands{S} AS (
+      SELECT doc_id, b.band, md5(concat_ws('|', {band_key})) AS band_hash
+      FROM ssig{S} CROSS JOIN (SELECT unnest([{bands_list}]) AS band) b),
+    cbands{S} AS (
+      SELECT doc_id, b.band, md5(concat_ws('|', {band_key})) AS band_hash
+      FROM csig{S} CROSS JOIN (SELECT unnest([{bands_list}]) AS band) b),
+    hot{S} AS (
+      SELECT band, band_hash FROM cbands{S}
+      GROUP BY band, band_hash HAVING count(*) > {cap}
+    ),
+    capped{S} AS (
+      SELECT c.* FROM cbands{S} c
+      WHERE NOT EXISTS (
+        SELECT 1 FROM hot{S} h
+        WHERE h.band = c.band AND h.band_hash = c.band_hash
+      )
+    ),
+    cand{S} AS (
+      SELECT DISTINCT s.doc_id AS new_id, c.doc_id AS corp_id
+      FROM sbands{S} s JOIN capped{S} c
+        ON s.band = c.band AND s.band_hash = c.band_hash
+    ),
+    near{S} AS (
+      SELECT DISTINCT cand{S}.new_id
+      FROM cand{S}
+      JOIN ssh{S} ON ssh{S}.doc_id = cand{S}.new_id
+      JOIN csh{S} ON csh{S}.doc_id = cand{S}.corp_id
+      WHERE round({jac}, 4) >= {thresh}
+    ),
+    f4{S} AS (
+      SELECT f3{S}.*,
+             s3 AND new_id NOT IN (SELECT new_id FROM near{S}) AS s4
+      FROM f3{S}
+    ),
+    tot{S} AS (
+      SELECT CAST(count(*) AS BIGINT) AS n0,
+             CAST(sum(CASE WHEN s1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+             CAST(sum(CASE WHEN s2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
+             CAST(sum(CASE WHEN s3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
+             CAST(sum(CASE WHEN s4 THEN 1 ELSE 0 END) AS BIGINT) AS n4,
+             CAST(sum(tok_n) AS BIGINT) AS t0,
+             CAST(sum(CASE WHEN s1 THEN tok_n ELSE 0 END) AS BIGINT) AS t1,
+             CAST(sum(CASE WHEN s2 THEN tok_n ELSE 0 END) AS BIGINT) AS t2,
+             CAST(sum(CASE WHEN s3 THEN tok_n ELSE 0 END) AS BIGINT) AS t3,
+             CAST(sum(CASE WHEN s4 THEN tok_n ELSE 0 END) AS BIGINT) AS t4
+      FROM f4{S}
+    )"""
 
-_L42_BAND_ORACLE = """
-      SELECT doc_id, b.band,
-             md5(concat_ws('|', mh[b.band*4+1], mh[b.band*4+2],
-                                mh[b.band*4+3], mh[b.band*4+4])) AS band_hash
-"""
+
+def render_crawl_waterfall_select(suffixes: list[tuple[int, str]]) -> str:
+    """The stacked-waterfall SELECT over one ``tot{suffix}`` CTE per
+    generation: (batch_no, stage_no, stage, n_in, n_out, n_dropped,
+    pct_kept, tok_in, tok_out) — the l42 waterfall shape plus the
+    generation column."""
+    stages = [
+        (1, "url_canonical"),
+        (2, "exact_vs_corpus"),
+        (3, "exact_in_batch"),
+        (4, "neardup_vs_corpus"),
+    ]
+    parts = [
+        f"SELECT {bn} AS batch_no, {i} AS stage_no, '{stage}' AS stage, "
+        f"n{i - 1} AS n_in, n{i} AS n_out, t{i - 1} AS tok_in, "
+        f"t{i} AS tok_out FROM tot{S}"
+        for bn, S in suffixes
+        for i, stage in stages
+    ]
+    return (
+        "SELECT batch_no, stage_no, stage, n_in, n_out, "
+        "n_in - n_out AS n_dropped, "
+        "round(CAST(n_out AS DOUBLE) / n_in, 4) AS pct_kept, "
+        "tok_in, tok_out FROM (\n"
+        + "\n      UNION ALL\n".join(parts)
+        + "\n    ) ORDER BY batch_no, stage_no"
+    )
 
 
-_L42_ORACLE = f"""
-    WITH d AS (SELECT doc_id, text, lang, source FROM documents),
-    batch AS (
+# The first crawl generation as SQL over ``d`` (doc_id, text, lang,
+# source): :func:`_l42_batch`'s arms, one UNION ALL arm each. The batch
+# CTE of l42/l42b's oracle and the ``batch_g1`` CTE of l42c's.
+_CRAWL_BATCH1_SQL = """
       SELECT doc_id + 2000000 AS new_id, text,
              'https://'||source||'.example.com/'||lang||'/doc-'||(doc_id%40) AS curl
       FROM d WHERE doc_id % 10 = 3
@@ -2509,101 +2634,17 @@ _L42_ORACLE = f"""
       SELECT doc_id + 6500000, text || ' v0',
              'https://'||source||'.example.com/'||lang||'/doc-'||(doc_id%40)
       FROM d WHERE doc_id % 10 = 9
-    ),
-    f0 AS (
-      SELECT new_id, text, curl,
-             CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS tok_n,
-             md5(text) AS h,
-             max(length(text)) OVER (PARTITION BY curl) AS best_len
-      FROM batch
-    ),
-    f1 AS (
-      SELECT new_id, text, tok_n, h,
-             new_id = min(CASE WHEN length(text) = best_len THEN new_id END)
-                      OVER (PARTITION BY curl) AS s1
-      FROM f0
-    ),
-    f2 AS (
-      SELECT f1.*,
-             s1 AND h NOT IN (SELECT DISTINCT md5(text) FROM d) AS s2
-      FROM f1
-    ),
-    f3 AS (
-      SELECT f2.*,
-             s2 AND new_id = min(CASE WHEN s2 THEN new_id END)
-                             OVER (PARTITION BY h) AS s3
-      FROM f2
-    ),
-    ssh AS (
-      SELECT new_id AS doc_id, {_L42_SHINGLE_ORACLE} AS sh
-      FROM f3 WHERE s3
-    ),
-    csh AS (SELECT doc_id, {_L42_SHINGLE_ORACLE} AS sh FROM d),
-    ssig AS (SELECT doc_id, [{{sig}}] AS mh FROM ssh),
-    csig AS (SELECT doc_id, [{{sig}}] AS mh FROM csh),
-    sbands AS ({_L42_BAND_ORACLE}
-      FROM ssig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) b),
-    cbands AS ({_L42_BAND_ORACLE}
-      FROM csig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) b),
-    hot AS (
-      SELECT band, band_hash FROM cbands
-      GROUP BY band, band_hash HAVING count(*) > 32
-    ),
-    capped AS (
-      SELECT c.* FROM cbands c
-      WHERE NOT EXISTS (
-        SELECT 1 FROM hot h
-        WHERE h.band = c.band AND h.band_hash = c.band_hash
-      )
-    ),
-    cand AS (
-      SELECT DISTINCT s.doc_id AS new_id, c.doc_id AS corp_id
-      FROM sbands s JOIN capped c
-        ON s.band = c.band AND s.band_hash = c.band_hash
-    ),
-    near AS (
-      SELECT DISTINCT cand.new_id
-      FROM cand
-      JOIN ssh ON ssh.doc_id = cand.new_id
-      JOIN csh ON csh.doc_id = cand.corp_id
-      WHERE round(CAST(len(list_intersect(ssh.sh, csh.sh)) AS DOUBLE)
-            / (len(ssh.sh) + len(csh.sh)
-               - len(list_intersect(ssh.sh, csh.sh))), 4) >= 0.5
-    ),
-    f4 AS (
-      SELECT f3.*,
-             s3 AND new_id NOT IN (SELECT new_id FROM near) AS s4
-      FROM f3
-    ),
-    tot AS (
-      SELECT CAST(count(*) AS BIGINT) AS n0,
-             CAST(sum(CASE WHEN s1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-             CAST(sum(CASE WHEN s2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-             CAST(sum(CASE WHEN s3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-             CAST(sum(CASE WHEN s4 THEN 1 ELSE 0 END) AS BIGINT) AS n4,
-             CAST(sum(tok_n) AS BIGINT) AS t0,
-             CAST(sum(CASE WHEN s1 THEN tok_n ELSE 0 END) AS BIGINT) AS t1,
-             CAST(sum(CASE WHEN s2 THEN tok_n ELSE 0 END) AS BIGINT) AS t2,
-             CAST(sum(CASE WHEN s3 THEN tok_n ELSE 0 END) AS BIGINT) AS t3,
-             CAST(sum(CASE WHEN s4 THEN tok_n ELSE 0 END) AS BIGINT) AS t4
-      FROM f4
-    )
-    SELECT stage_no, stage, n_in, n_out,
-           n_in - n_out AS n_dropped,
-           round(CAST(n_out AS DOUBLE) / n_in, 4) AS pct_kept,
-           tok_in, tok_out
-    FROM (
-      SELECT 1 AS stage_no, 'url_canonical' AS stage,
-             n0 AS n_in, n1 AS n_out, t0 AS tok_in, t1 AS tok_out FROM tot
-      UNION ALL
-      SELECT 2, 'exact_vs_corpus', n1, n2, t1, t2 FROM tot
-      UNION ALL
-      SELECT 3, 'exact_in_batch', n2, n3, t2, t3 FROM tot
-      UNION ALL
-      SELECT 4, 'neardup_vs_corpus', n3, n4, t3, t4 FROM tot
-    )
-    ORDER BY stage_no
-    """.replace("{{sig}}", _L2F_SIG_ORACLE).replace("{sig}", _L2F_SIG_ORACLE)
+"""
+
+
+_L42_ORACLE = f"""
+    WITH d AS (SELECT doc_id, text, lang, source FROM documents),
+    corpus AS (SELECT doc_id, text FROM d),
+    batch AS ({_CRAWL_BATCH1_SQL}),
+    {render_crawl_funnel_ctes("")}
+    SELECT * EXCLUDE (batch_no)
+    FROM ({render_crawl_waterfall_select([(1, "")])})
+    """
 
 
 @register(
@@ -2847,152 +2888,6 @@ def incremental_crawl_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def render_crawl_funnel_ctes(
-    suffix: str,
-    *,
-    n_hashes: int = N_MINHASHES,
-    n_bands: int = N_BANDS,
-    cap: int = L42_MAX_POSTING,
-    thresh: float = 0.5,
-    k: int = SHINGLE_K,
-) -> str:
-    """DuckDB CTE fragment for ONE generation of the crawl funnel — the
-    parameterized form of `_L42_ORACLE`'s gate chain, shared by the l42c
-    two-generation oracle and fuzz grammar 21 (which sweeps the funnel's
-    parameter space the way grammar 15 sweeps the sketch family's).
-    Assumes CTEs ``corpus{suffix}`` (doc_id, text) and ``batch{suffix}``
-    (new_id, text, curl) are already defined; emits the chain through
-    ``f4{suffix}`` (per-doc survival flags) and ``tot{suffix}`` (the
-    one-row funnel totals). Every stage mirrors :func:`crawl_flags`
-    bit-for-bit on the portable md5 family: same URL-canonical keeper
-    rule, same corpus-hash probe, same in-batch keeper, same capped band
-    index (hot buckets dropped at count > cap), same 4dp-rounded
-    exact-Jaccard verify."""
-    S = suffix
-    if n_hashes % n_bands != 0:
-        raise ValueError(f"{n_hashes} slots do not band into {n_bands}")
-    rpb = n_hashes // n_bands
-    shingle = f"""list_distinct(list_transform(
-      range(1, greatest(len(string_split_regex(text, '\\s+')) - {k - 1}, 1) + 1),
-      i -> array_to_string(string_split_regex(text, '\\s+')[i:i+{k - 1}], ' ')
-    ))"""
-    sig = ", ".join(
-        f"list_min(list_transform(sh, s -> md5(concat('{i}:', s))))"
-        for i in range(n_hashes)
-    )
-    band_key = ", ".join(f"mh[b.band*{rpb}+{r + 1}]" for r in range(rpb))
-    bands_list = ", ".join(str(b) for b in range(n_bands))
-    jac = (
-        f"CAST(len(list_intersect(ssh{S}.sh, csh{S}.sh)) AS DOUBLE)"
-        f" / (len(ssh{S}.sh) + len(csh{S}.sh)"
-        f" - len(list_intersect(ssh{S}.sh, csh{S}.sh)))"
-    )
-    return f"""
-    f0{S} AS (
-      SELECT new_id, text, curl,
-             CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS tok_n,
-             md5(text) AS h,
-             max(length(text)) OVER (PARTITION BY curl) AS best_len
-      FROM batch{S}
-    ),
-    f1{S} AS (
-      SELECT new_id, text, tok_n, h,
-             new_id = min(CASE WHEN length(text) = best_len THEN new_id END)
-                      OVER (PARTITION BY curl) AS s1
-      FROM f0{S}
-    ),
-    f2{S} AS (
-      SELECT f1{S}.*,
-             s1 AND h NOT IN (SELECT DISTINCT md5(text) FROM corpus{S}) AS s2
-      FROM f1{S}
-    ),
-    f3{S} AS (
-      SELECT f2{S}.*,
-             s2 AND new_id = min(CASE WHEN s2 THEN new_id END)
-                             OVER (PARTITION BY h) AS s3
-      FROM f2{S}
-    ),
-    ssh{S} AS (SELECT new_id AS doc_id, {shingle} AS sh FROM f3{S} WHERE s3),
-    csh{S} AS (SELECT doc_id, {shingle} AS sh FROM corpus{S}),
-    ssig{S} AS (SELECT doc_id, [{sig}] AS mh FROM ssh{S}),
-    csig{S} AS (SELECT doc_id, [{sig}] AS mh FROM csh{S}),
-    sbands{S} AS (
-      SELECT doc_id, b.band, md5(concat_ws('|', {band_key})) AS band_hash
-      FROM ssig{S} CROSS JOIN (SELECT unnest([{bands_list}]) AS band) b),
-    cbands{S} AS (
-      SELECT doc_id, b.band, md5(concat_ws('|', {band_key})) AS band_hash
-      FROM csig{S} CROSS JOIN (SELECT unnest([{bands_list}]) AS band) b),
-    hot{S} AS (
-      SELECT band, band_hash FROM cbands{S}
-      GROUP BY band, band_hash HAVING count(*) > {cap}
-    ),
-    capped{S} AS (
-      SELECT c.* FROM cbands{S} c
-      WHERE NOT EXISTS (
-        SELECT 1 FROM hot{S} h
-        WHERE h.band = c.band AND h.band_hash = c.band_hash
-      )
-    ),
-    cand{S} AS (
-      SELECT DISTINCT s.doc_id AS new_id, c.doc_id AS corp_id
-      FROM sbands{S} s JOIN capped{S} c
-        ON s.band = c.band AND s.band_hash = c.band_hash
-    ),
-    near{S} AS (
-      SELECT DISTINCT cand{S}.new_id
-      FROM cand{S}
-      JOIN ssh{S} ON ssh{S}.doc_id = cand{S}.new_id
-      JOIN csh{S} ON csh{S}.doc_id = cand{S}.corp_id
-      WHERE round({jac}, 4) >= {thresh}
-    ),
-    f4{S} AS (
-      SELECT f3{S}.*,
-             s3 AND new_id NOT IN (SELECT new_id FROM near{S}) AS s4
-      FROM f3{S}
-    ),
-    tot{S} AS (
-      SELECT CAST(count(*) AS BIGINT) AS n0,
-             CAST(sum(CASE WHEN s1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-             CAST(sum(CASE WHEN s2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-             CAST(sum(CASE WHEN s3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-             CAST(sum(CASE WHEN s4 THEN 1 ELSE 0 END) AS BIGINT) AS n4,
-             CAST(sum(tok_n) AS BIGINT) AS t0,
-             CAST(sum(CASE WHEN s1 THEN tok_n ELSE 0 END) AS BIGINT) AS t1,
-             CAST(sum(CASE WHEN s2 THEN tok_n ELSE 0 END) AS BIGINT) AS t2,
-             CAST(sum(CASE WHEN s3 THEN tok_n ELSE 0 END) AS BIGINT) AS t3,
-             CAST(sum(CASE WHEN s4 THEN tok_n ELSE 0 END) AS BIGINT) AS t4
-      FROM f4{S}
-    )"""
-
-
-def render_crawl_waterfall_select(suffixes: list[tuple[int, str]]) -> str:
-    """The stacked-waterfall SELECT over one ``tot{suffix}`` CTE per
-    generation: (batch_no, stage_no, stage, n_in, n_out, n_dropped,
-    pct_kept, tok_in, tok_out) — the l42 waterfall shape plus the
-    generation column."""
-    stages = [
-        (1, "url_canonical"),
-        (2, "exact_vs_corpus"),
-        (3, "exact_in_batch"),
-        (4, "neardup_vs_corpus"),
-    ]
-    parts = [
-        f"SELECT {bn} AS batch_no, {i} AS stage_no, '{stage}' AS stage, "
-        f"n{i - 1} AS n_in, n{i} AS n_out, t{i - 1} AS tok_in, "
-        f"t{i} AS tok_out FROM tot{S}"
-        for bn, S in suffixes
-        for i, stage in stages
-    ]
-    return (
-        "SELECT batch_no, stage_no, stage, n_in, n_out, "
-        "n_in - n_out AS n_dropped, "
-        "round(CAST(n_out AS DOUBLE) / n_in, 4) AS pct_kept, "
-        "tok_in, tok_out FROM (\n"
-        + "\n      UNION ALL\n".join(parts)
-        + "\n    ) ORDER BY batch_no, stage_no"
-    )
-
-
 def _l42c_batch2(d: DataFrame) -> DataFrame:
     """The SECOND crawl generation — designed so the appended index is
     load-bearing, not decorative: re-ships of batch-1 survivors (%10==1
@@ -3045,33 +2940,6 @@ def _l42c_batch2(d: DataFrame) -> DataFrame:
     )
 
 
-_L42C_BATCH1_SQL = """
-      SELECT doc_id + 2000000 AS new_id, text,
-             'https://'||source||'.example.com/'||lang||'/doc-'||(doc_id%40) AS curl
-      FROM d WHERE doc_id % 10 = 3
-      UNION ALL
-      SELECT doc_id + 3000000, text || ' rev',
-             'https://'||source||'.example.com/'||lang||'/doc-'||(doc_id%40)
-      FROM d WHERE doc_id % 10 = 7
-      UNION ALL
-      SELECT doc_id + 4000000, text || ' rev',
-             'https://'||source||'.example.com/'||lang||'/doc-'||(doc_id%40)||'-alt'
-      FROM d WHERE doc_id % 10 = 7
-      UNION ALL
-      SELECT doc_id + 5000000,
-             'fresh crawl '||doc_id||' carries entirely new token material '||(doc_id*7),
-             'https://'||source||'.example.com/'||lang||'/fresh-'||doc_id
-      FROM d WHERE doc_id % 10 = 1
-      UNION ALL
-      SELECT doc_id + 6000000, text || ' resend with extra tail',
-             'https://'||source||'.example.com/'||lang||'/doc-'||(doc_id%40)
-      FROM d WHERE doc_id % 10 = 9
-      UNION ALL
-      SELECT doc_id + 6500000, text || ' v0',
-             'https://'||source||'.example.com/'||lang||'/doc-'||(doc_id%40)
-      FROM d WHERE doc_id % 10 = 9
-"""
-
 _L42C_BATCH2_SQL = """
       SELECT doc_id + 7000000 AS new_id,
              'fresh crawl '||doc_id||' carries entirely new token material '||(doc_id*7) AS text,
@@ -3097,7 +2965,7 @@ _L42C_BATCH2_SQL = """
 _L42C_ORACLE = f"""
     WITH d AS (SELECT doc_id, text, lang, source FROM documents),
     corpus_g1 AS (SELECT doc_id, text FROM d),
-    batch_g1 AS ({_L42C_BATCH1_SQL}),
+    batch_g1 AS ({_CRAWL_BATCH1_SQL}),
     {render_crawl_funnel_ctes("_g1")},
     surv_g1 AS (SELECT new_id AS doc_id, text FROM f4_g1 WHERE s4),
     corpus_g2 AS (

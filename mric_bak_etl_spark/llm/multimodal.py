@@ -562,6 +562,7 @@ def _decode_zip(content: bytes) -> dict:
                 "method": method,
                 "comp_size": comp_size,
                 "data_offset": data_off,
+                "byte_sum": sum(payload),
             }
         )
         pos = name_start + name_len + extra_len + comment_len
@@ -644,27 +645,17 @@ def make_zip(
 
 
 def zip_entry_byte_sums(blob: bytes, dec: dict | None = None) -> list[tuple]:
-    """Per-entry (size, byte_sum) of the entry CONTENT — sliced at the
-    DECODER's data offsets (the m8/m11 coupling lesson in archive form:
-    a self-extracting prefix, an EOCD comment, or a local extra field
-    moves every offset; the sums must not care) and inflated first when
-    the directory says the entry is deflated. Content sums are
-    method-invariant by construction: the oracle models the original
-    bytes, never the stream."""
-    import zlib
-
+    """Per-entry (size, byte_sum) of the entry CONTENT, as the decoder
+    summed it in its own CRC pass: sliced at the decoder's data offsets
+    (the m8/m11 coupling lesson in archive form: a self-extracting
+    prefix, an EOCD comment, or a local extra field moves every offset;
+    the sums must not care) and inflated first when the directory says
+    the entry is deflated. Content sums are method-invariant by
+    construction: the oracle models the original bytes, never the
+    stream."""
     if dec is None:
         dec = decode_media(blob, "archive")
-    out = []
-    for e in dec["entries"]:
-        raw = blob[e["data_offset"] : e["data_offset"] + e["comp_size"]]
-        payload = (
-            zlib.decompressobj(wbits=-15).decompress(raw)
-            if e["method"] == 8
-            else raw
-        )
-        out.append((e["size"], sum(payload)))
-    return out
+    return [(e["size"], e["byte_sum"]) for e in dec["entries"]]
 
 
 def ppm_channel_sums(blob: bytes, dec: dict | None = None) -> tuple:
@@ -1491,9 +1482,8 @@ _M12_SCHEMA = (
 def _zip_manifest_rows(mid: int, blob: bytes, field: str) -> Iterator[tuple]:
     """m12-m14's manifest: one (media_id, entry_no, entry ``field``,
     n_bytes, byte_sum) row per entry, sliced where the decoder says."""
-    dec = decode_media(blob, "archive")
-    for i, (sz, s) in enumerate(zip_entry_byte_sums(blob, dec)):
-        yield mid, i, dec["entries"][i][field], sz, s
+    for i, e in enumerate(decode_media(blob, "archive")["entries"]):
+        yield mid, i, e[field], e["size"], e["byte_sum"]
 
 
 def _zip_row(mid: int, data: bytes) -> Iterator[tuple]:

@@ -631,6 +631,39 @@ def _sq_l2_sql(a: str, b: str, n: int = PQ_D, base: int = 0) -> str:
     return " + ".join(terms)
 
 
+# The PQ encode as CTE text, build_pq_codebook + _pq_subspace_dists +
+# pq_encode in DuckDB: ``dists`` (vec_id, s, c, dd) is every vector's
+# squared-L2 to every subspace centroid, ``codes`` (vec_id, s, code) its
+# argmin per subspace (ties to the lower c, as min_by(c, struct(dd, c))).
+# The one text of l3e's and l3f's oracles.
+_PQ_CODES_ORACLE = f"""
+    cb AS (
+      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, embedding
+      FROM embeddings WHERE vec_id % 31 = 1 ORDER BY vec_id LIMIT {PQ_K}
+    ),
+    subs AS (SELECT unnest(range(0, {PQ_M})) AS s),
+    subcb AS (
+      SELECT s, c, embedding[s*{PQ_D}+1 : s*{PQ_D}+{PQ_D}] AS cent
+      FROM cb, subs
+    ),
+    vecsub AS (
+      SELECT vec_id, s, embedding[s*{PQ_D}+1 : s*{PQ_D}+{PQ_D}] AS sub
+      FROM embeddings, subs
+    ),
+    dists AS (
+      SELECT vec_id, v.s, c, {_sq_l2_sql("sub", "cent", base=1)} AS dd
+      FROM vecsub v JOIN subcb cb ON cb.s = v.s
+    ),
+    codes AS (
+      SELECT vec_id, s, c AS code
+      FROM (
+        SELECT vec_id, s, c,
+               row_number() OVER (PARTITION BY vec_id, s ORDER BY dd, c) AS rn
+        FROM dists
+      ) WHERE rn = 1
+    )"""
+
+
 def build_pq_codebook(spark: SparkSession, e: DataFrame) -> DataFrame:
     """The PQ training stage (l3f persists its output): the 128-row
     (s, c, cent) subspace-centroid table, materialized so the codebook
@@ -692,31 +725,7 @@ def pq_encode(spark: SparkSession, e: DataFrame, subcb: DataFrame) -> DataFrame:
 @register(
     "l3e_pq_topk",
     oracle=f"""
-    WITH cb AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, embedding
-      FROM embeddings WHERE vec_id % 31 = 1 ORDER BY vec_id LIMIT {PQ_K}
-    ),
-    subs AS (SELECT unnest(range(0, {PQ_M})) AS s),
-    subcb AS (
-      SELECT s, c, embedding[s*{PQ_D}+1 : s*{PQ_D}+{PQ_D}] AS cent
-      FROM cb, subs
-    ),
-    vecsub AS (
-      SELECT vec_id, s, embedding[s*{PQ_D}+1 : s*{PQ_D}+{PQ_D}] AS sub
-      FROM embeddings, subs
-    ),
-    dists AS (
-      SELECT vec_id, v.s, c, {_sq_l2_sql("sub", "cent", base=1)} AS dd
-      FROM vecsub v JOIN subcb cb ON cb.s = v.s
-    ),
-    codes AS (
-      SELECT vec_id, s, c AS code
-      FROM (
-        SELECT vec_id, s, c,
-               row_number() OVER (PARTITION BY vec_id, s ORDER BY dd, c) AS rn
-        FROM dists
-      ) WHERE rn = 1
-    ),
+    WITH {_PQ_CODES_ORACLE},
     qd AS (
       SELECT s, c, dd AS qdist FROM dists WHERE vec_id = 0
     ),
@@ -981,31 +990,7 @@ _L3F_ORACLE = f"""
       SELECT a.vec_id FROM a{KMEANS_ROUNDS + 1} a JOIN probe USING (cid)
       WHERE a.vec_id <> {QUERY_VEC_ID}
     ),
-    cb AS (
-      SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, embedding
-      FROM embeddings WHERE vec_id % 31 = 1 ORDER BY vec_id LIMIT {PQ_K}
-    ),
-    subs AS (SELECT unnest(range(0, {PQ_M})) AS s),
-    subcb AS (
-      SELECT s, c, embedding[s*{PQ_D}+1 : s*{PQ_D}+{PQ_D}] AS cent
-      FROM cb, subs
-    ),
-    vecsub AS (
-      SELECT vec_id, s, embedding[s*{PQ_D}+1 : s*{PQ_D}+{PQ_D}] AS sub
-      FROM embeddings, subs
-    ),
-    dists AS (
-      SELECT vec_id, v.s, c, {_sq_l2_sql("sub", "cent", base=1)} AS dd
-      FROM vecsub v JOIN subcb cb ON cb.s = v.s
-    ),
-    codes AS (
-      SELECT vec_id, s, c AS code
-      FROM (
-        SELECT vec_id, s, c,
-               row_number() OVER (PARTITION BY vec_id, s ORDER BY dd, c) AS rn
-        FROM dists
-      ) WHERE rn = 1
-    ),
+    {_PQ_CODES_ORACLE},
     qd AS (
       SELECT s, c, dd AS qdist FROM dists WHERE vec_id = {QUERY_VEC_ID}
     ),

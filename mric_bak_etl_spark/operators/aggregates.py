@@ -155,6 +155,26 @@ _HLL_RHO_ORACLE = (
     f" WHEN {_HLL_NIB_ORACLE} >= 2 THEN 2"
     " ELSE 3 END + 1 END"
 )
+# The day-grain register table over events as CTE text: ``daily`` holds
+# one (week, day, bucket, r) max-rank row per touched register. The one
+# text of t13/t13b's oracle (which selects it) and a23b's (which rolls it
+# up to weeks and the total).
+_HLL_DAY_REGISTERS_ORACLE = f"""
+    ev AS (
+      SELECT strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
+             strftime(ts, '%Y-%m-%d') AS day,
+             md5(CAST(user_id AS VARCHAR)) AS h
+      FROM events
+    ),
+    parts AS (
+      SELECT week, day,
+             instr('0123456789abcdef', substring(h, 1, 1)) - 1 AS bucket,
+             substring(h, 2, 13) AS rest
+      FROM ev
+    ),
+    rho AS (SELECT week, day, bucket, {_HLL_RHO_ORACLE} AS r FROM parts),
+    daily AS (SELECT week, day, bucket, max(r) AS r
+              FROM rho GROUP BY week, day, bucket)"""
 # Per-sketch register fold: the exact-bigint 2^-rank sum (<= 16 terms of
 # <= 2^53 — no float accumulation order to diverge) plus the empty-bucket
 # count the small-range branch needs. Shared by a3b and a23b oracles.
@@ -1066,21 +1086,7 @@ def sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "a23b_portable_sketch_merge_rollup",
     oracle=f"""
-    WITH ev AS (
-      SELECT strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-             strftime(ts, '%Y-%m-%d') AS day,
-             md5(CAST(user_id AS VARCHAR)) AS h
-      FROM events
-    ),
-    parts AS (
-      SELECT week, day,
-             instr('0123456789abcdef', substring(h, 1, 1)) - 1 AS bucket,
-             substring(h, 2, 13) AS rest
-      FROM ev
-    ),
-    rho AS (SELECT week, day, bucket, {_HLL_RHO_ORACLE} AS r FROM parts),
-    daily AS (SELECT week, day, bucket, max(r) AS r
-              FROM rho GROUP BY week, day, bucket),
+    WITH {_HLL_DAY_REGISTERS_ORACLE},
     weekly AS (SELECT week, bucket, max(r) AS r
                 FROM daily GROUP BY week, bucket),
     total AS (SELECT bucket, max(r) AS r FROM weekly GROUP BY bucket),

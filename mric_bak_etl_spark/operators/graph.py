@@ -23,6 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mric_bak_etl_spark.catalog import register
+from mric_bak_etl_spark.llm.dedup import (
+    _COMPONENT_CLUSTERS_ORACLE,
+    connected_components,
+)
 from mric_bak_etl_spark.tables import load_table
 
 DAMPING = 0.85
@@ -247,25 +251,7 @@ G3_VALUE_CUT = 200.0  # high-value activity only: keeps co-activity sparse
       SELECT e.user_id AS doc_a, h.hub AS doc_b
       FROM ev e JOIN hubs h USING (event_type, day)
     ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    reach(node, root) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-    ),
-    labels AS (SELECT node, min(root) AS cluster_id FROM reach GROUP BY node)
-    SELECT cluster_id,
-           CAST(count(*) AS BIGINT) AS n_members,
-           max(node)                AS max_member
-    FROM labels
-    GROUP BY cluster_id
-    ORDER BY cluster_id
-    """,
+    {_COMPONENT_CLUSTERS_ORACLE}""",
     doc="G3: USER-level connected components — cohorts of users linked by "
     "shared high-value activity in the same (event_type, day) group. "
     "Unlike g1/g2 (vocabulary-sized graphs, driver-materialized by "
@@ -282,8 +268,6 @@ G3_VALUE_CUT = 200.0  # high-value activity only: keeps co-activity sparse
     tags=("graph", "events", "iterative"),
 )
 def user_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mric_bak_etl_spark.llm.dedup import connected_components
-
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("value") >= G3_VALUE_CUT)

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mric_bak_etl_spark.catalog import register
-from mric_bak_etl_spark.operators.aggregates import _HLL_RHO_ORACLE
+from mric_bak_etl_spark.operators.aggregates import _HLL_DAY_REGISTERS_ORACLE
 from mric_bak_etl_spark.session import scratch_dir
 from mric_bak_etl_spark.tables import load_table
 
@@ -521,28 +521,18 @@ def sink_log_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# t13 and t13b persist the same register table, so they share one oracle.
+_REGISTERS_ORACLE = f"""
+    WITH {_HLL_DAY_REGISTERS_ORACLE}
+    SELECT week, day, CAST(bucket AS INT) AS bucket, CAST(r AS INT) AS r
+    FROM daily
+    ORDER BY week, day, bucket
+    """
+
 
 @register(
     "t13_streaming_sketch_registers",
-    oracle=f"""
-    WITH ev AS (
-      SELECT strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-             strftime(ts, '%Y-%m-%d') AS day,
-             md5(CAST(user_id AS VARCHAR)) AS h
-      FROM events
-    ),
-    parts AS (
-      SELECT week, day,
-             instr('0123456789abcdef', substring(h, 1, 1)) - 1 AS bucket,
-             substring(h, 2, 13) AS rest
-      FROM ev
-    ),
-    rho AS (SELECT week, day, bucket, {_HLL_RHO_ORACLE} AS r FROM parts)
-    SELECT week, day, CAST(bucket AS INT) AS bucket, CAST(max(r) AS INT) AS r
-    FROM rho
-    GROUP BY week, day, bucket
-    ORDER BY week, day, bucket
-    """,
+    oracle=_REGISTERS_ORACLE,
     doc="T13: the STREAMING face of the a23b sketch workflow — the "
     "day-grain portable HLL registers maintained by Structured "
     "Streaming as events arrive: readStream over the events parquet, "
@@ -617,25 +607,7 @@ def make_register_merge_sink(base: str, state: dict[str, int]):
 
 @register(
     "t13b_streaming_register_maintenance",
-    oracle=f"""
-    WITH ev AS (
-      SELECT strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-             strftime(ts, '%Y-%m-%d') AS day,
-             md5(CAST(user_id AS VARCHAR)) AS h
-      FROM events
-    ),
-    parts AS (
-      SELECT week, day,
-             instr('0123456789abcdef', substring(h, 1, 1)) - 1 AS bucket,
-             substring(h, 2, 13) AS rest
-      FROM ev
-    ),
-    rho AS (SELECT week, day, bucket, {_HLL_RHO_ORACLE} AS r FROM parts)
-    SELECT week, day, CAST(bucket AS INT) AS bucket, CAST(max(r) AS INT) AS r
-    FROM rho
-    GROUP BY week, day, bucket
-    ORDER BY week, day, bucket
-    """,
+    oracle=_REGISTERS_ORACLE,
     doc="T13b: t13's production face — UPDATE-mode incremental register "
     "maintenance. The streaming max() aggregation emits only the "
     "register rows a micro-batch CHANGED (update mode), and a "

@@ -111,3 +111,39 @@ def test_bench_line_gate_in_both_forms():
     short = json.loads(bench.compose_line(10.0, timings, 0.01, duck, budget=250))
     assert short["queries_shed"] > 0 and short["c23_ratio"] == want
     assert short["duck_c23_n"] == len(bench.COMMON23)
+
+
+def test_shared_oracle_subplans_are_one_text():
+    """An oracle sub-plan that several registered queries share is written
+    once and composed by each, so checking it once (fuzz grammar 21 for
+    the crawl funnel) checks every query that runs it."""
+    from mric_bak_etl_spark.llm.dedup import (
+        _COMPONENT_CLUSTERS_ORACLE,
+        render_crawl_funnel_ctes,
+    )
+    from mric_bak_etl_spark.llm.similarity import _PQ_CODES_ORACLE
+    from mric_bak_etl_spark.operators.aggregates import (
+        _HLL_DAY_REGISTERS_ORACLE,
+    )
+
+    specs = all_specs()
+    shared = {
+        render_crawl_funnel_ctes(""): (
+            "l42_incremental_crawl",
+            "l42b_incremental_crawl_persisted",
+        ),
+        _HLL_DAY_REGISTERS_ORACLE: (
+            "t13_streaming_sketch_registers",
+            "t13b_streaming_register_maintenance",
+            "a23b_portable_sketch_merge_rollup",
+        ),
+        _PQ_CODES_ORACLE: ("l3e_pq_topk", "l3f_ann_persisted"),
+        _COMPONENT_CLUSTERS_ORACLE: (
+            "l2e_dup_clusters",
+            "l32_substring_dup_clusters",
+            "g3_user_components",
+        ),
+    }
+    for fragment, names in shared.items():
+        for name in names:
+            assert fragment in specs[name].oracle, name

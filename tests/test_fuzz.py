@@ -1698,7 +1698,8 @@ def test_random_zip_manifest_recipes_agree(spark, duck, sf_dir, case):
 # duplication regime (verbatim / lightly-edited copies) x batch
 # composition, each instance checked bit-for-bit against the
 # parameterized DuckDB oracle (render_crawl_funnel_ctes — the same
-# fragment generator the l42c two-generation oracle composes). The
+# fragment generator that l42's, l42b's and l42c's registered oracles
+# compose, so the SQL fuzzed here is the SQL those oracles run). The
 # fixture corpus/batch are generated from ONE SQL text executed by both
 # engines (spark.sql over a temp view and DuckDB over the documents
 # view), so the only thing under test is the funnel itself. The fresh
