@@ -21,12 +21,16 @@ Conventions that keep the value-hash compare stable (SURVEY §7 risk #4):
   LONG);
 - top-k queries always carry a unique tiebreak key in the ORDER BY;
 - row ORDER is not part of the contract: the driver's compare is an
-  order-insensitive value-hash (__spark_entry__.py), so Spark builders
-  carry NO final presentational orderBy (optimization r14 — a global
+  order-insensitive value-hash (__spark_entry__.py), so no builder's
+  physical plan root is a global Sort with no limit above it (a global
   sort is a range exchange whose bounds sampling re-executes the whole
   pre-sort plan; guide §2.4 names it the canonical removable shuffle).
-  Oracle SQL keeps its ORDER BY for human readability only. Top-k/limit
-  orderBys are load-bearing and stay.
+  The allow-list is the queries whose operator IS the total sort:
+  o1_multikey_sort. tests/test_plans.py::test_no_presentational_root_sort
+  enforces the rule and keeps the allow-list with one reason per entry.
+  Top-k/limit sorts and sorts that feed a window, a sortWithinPartitions
+  layout or a write are load-bearing and stay. Oracle SQL keeps its
+  ORDER BY for human readability only.
 """
 
 from __future__ import annotations

@@ -60,7 +60,6 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_extract("text", r"([a-z]+)", 1).alias("first_alpha_run"),
             F.regexp_replace("text", r"\s+", "_").alias("squashed"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -101,7 +100,6 @@ def datetime_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("days_since_epoch_start"),
             F.unix_timestamp(F.col("o_orderdate").cast("timestamp")).alias("unix_ts"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -137,7 +135,6 @@ def math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sqrt("l_extendedprice"), 6).alias("price_sqrt"),
             F.pmod(F.col("l_orderkey"), F.lit(7)).cast("bigint").alias("key_pmod7"),
         )
-        .orderBy("l_orderkey", "l_linenumber")
     )
 
 
@@ -171,7 +168,6 @@ def conditional_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").alias("is_urgent"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -244,7 +240,6 @@ def map_struct_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.t").alias("s_type"),
             F.round(F.col("s.v"), 4).alias("s_value"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -275,7 +270,6 @@ def json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             parsed.getField("k").alias("k_from_json"),
             F.get_json_object("props", "$.missing").cast("int").alias("missing_field"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -307,7 +301,6 @@ def sql_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus
         """
     )
 
@@ -341,7 +334,6 @@ def string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "min_name_brand_dist"
             ),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -408,7 +400,6 @@ def array_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("top5_sum"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -449,7 +440,6 @@ def datetime_advanced(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("weekend_orders"),
         )
-        .orderBy("q")
     )
 
 
@@ -484,7 +474,7 @@ def bitwise_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.shiftleft(k, 2).cast("bigint").alias("shl"),
         F.shiftright(k, 3).cast("bigint").alias("shr"),
         F.bit_count(k).cast("int").alias("popcount"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @register(
@@ -536,7 +526,6 @@ def date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n", F.lit(0)).cast("bigint").alias("n_orders"),
             F.round(F.coalesce("tot", F.lit(0.0)), 4).alias("revenue"),
         )
-        .orderBy("day")
     )
 
 
@@ -577,7 +566,6 @@ def variant_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("k").cast("int").alias("max_k"),
             F.round(F.avg("k"), 4).alias("avg_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -637,7 +625,6 @@ def url_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("ref").cast("bigint").alias("n_refs"),
             F.min("proto").alias("proto"),
         )
-        .orderBy("host")
     )
 
 
@@ -670,7 +657,6 @@ def transcendental_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg(F.sqrt("l_extendedprice")), 4).alias("avg_sqrt_price"),
             F.round(F.avg(F.pow(F.col("l_discount") + 1.0, 1.5)), 6).alias("avg_pow_disc"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -692,25 +678,26 @@ _REACHABILITY_SQL = """
       WHERE r.hops < 4
     )
     SELECT node, CAST(min(hops) AS BIGINT) AS min_hops
-    FROM reach GROUP BY node ORDER BY node
+    FROM reach GROUP BY node{order_by}
 """
 
 
 @register(
     "q2_recursive_cte",
-    oracle=_REACHABILITY_SQL.format(t="VARCHAR"),
+    oracle=_REACHABILITY_SQL.format(t="VARCHAR", order_by=" ORDER BY node"),
     doc="Q2: recursive CTE (Spark 4) — breadth-bounded reachability over "
     "the event-transition graph: which event types are reachable from "
     "'signup' and in how few hops. Spark executes WITH RECURSIVE as "
     "iterated UnionLoop steps (same engine mechanics l2e builds by hand "
     "for connected components — this is the declarative face); the "
     "depth guard bounds state on cyclic graphs exactly like an "
-    "iteration cap. Identical SQL text runs on DuckDB as the oracle.",
+    "iteration cap. The same SQL text runs on DuckDB as the oracle, "
+    "which alone adds an ORDER BY for readability.",
     tags=("sql", "recursive"),
 )
 def recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, only=("events",))
-    return spark.sql(_REACHABILITY_SQL.format(t="STRING"))
+    return spark.sql(_REACHABILITY_SQL.format(t="STRING", order_by=""))
 
 
 @register(
@@ -897,7 +884,6 @@ def xml_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("x.t"), 2).alias("total"),
         )
-        .orderBy("prio")
     )
 
 
@@ -941,7 +927,7 @@ def interval_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(due.cast("date"), F.col("o_orderdate").cast("date"))
         .cast("bigint")
         .alias("span_days"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @register(
@@ -969,7 +955,7 @@ def number_format(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         s.alias("amount_str"),
         F.to_number(s, F.lit("999999990.00")).cast("double").alias("amount_back"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @register(
@@ -995,7 +981,7 @@ def session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql("""
         SELECT o_orderpriority, count(*) AS n_pricey
         FROM orders WHERE o_totalprice > price_floor
-        GROUP BY o_orderpriority ORDER BY o_orderpriority
+        GROUP BY o_orderpriority
     """)
 
 
@@ -1024,7 +1010,7 @@ def parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(sum(o_totalprice), 2) AS total
         FROM orders
         WHERE o_orderdate >= :since AND o_totalprice > :floor
-        GROUP BY o_orderstatus ORDER BY o_orderstatus
+        GROUP BY o_orderstatus
         """,
         args={"since": "1996-01-01", "floor": 150000.0},
     )
@@ -1108,7 +1094,7 @@ def higher_order_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         ).alias("rev_dot"),
-    ).orderBy("vec_id")
+    )
 
 
 @register(
@@ -1146,7 +1132,7 @@ def map_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at(bumped, "k").alias("k_bumped"),
         F.size(big_only).cast("bigint").alias("n_big"),
         F.element_at(zipped, "k").alias("combined"),
-    ).orderBy("event_id")
+    )
 
 
 @register(
@@ -1190,7 +1176,7 @@ def regexp_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.regexp_extract_all(F.col("text"), F.lit("[a-z]{5,}"), F.lit(0))).alias(
             "n_long_words"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -1243,7 +1229,6 @@ def sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(sum(disc_price(l_extendedprice, l_discount)), 4) AS revenue
         FROM lineitem
         GROUP BY l_returnflag, size_band(l_quantity)
-        ORDER BY l_returnflag, size_band
         """
     )
 
@@ -1262,8 +1247,8 @@ def sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Q6: SQL pipe syntax (Spark 4.1, SQL:2023-era pipe operators) — "
     "the same logical plan as q1's nested SQL, written as a linear "
-    "dataflow: FROM |> WHERE |> EXTEND |> AGGREGATE ... GROUP BY |> "
-    "ORDER BY. Each |> stage is parsed into the identical Catalyst "
+    "dataflow: FROM |> WHERE |> EXTEND |> AGGREGATE ... GROUP BY. "
+    "Each |> stage is parsed into the identical Catalyst "
     "operators (this is syntax, not a new engine path), so pushdown, "
     "partial aggregation and codegen are unchanged — verified by the "
     "oracle equivalence with the plain-SQL form. The pipe form is the "
@@ -1284,7 +1269,6 @@ def pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
                      round(sum(disc_price), 4) AS revenue,
                      round(avg(l_quantity), 4) AS avg_qty
            GROUP BY l_returnflag
-        |> ORDER BY l_returnflag
         """
     )
 
@@ -1348,7 +1332,6 @@ def csv_expressions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_roundtrip"),
         )
-        .orderBy("status")
     )
 
 
@@ -1531,7 +1514,6 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
             F.round(F.sum("price"), 4).alias("total_price"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -1600,7 +1582,6 @@ def sql_ddl_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(sum(o_totalprice), 4) AS total_price
         FROM {tbl}
         GROUP BY o_orderstatus
-        ORDER BY o_orderstatus
         """
     )
 
@@ -1662,7 +1643,7 @@ def catalog_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "table_part string, column_name string, data_type string, "
         "ordinal int"
-    ).orderBy("table_part", "ordinal")
+    )
 
 
 @register(
@@ -1758,7 +1739,6 @@ def variant_bronze_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("silver_k").cast("bigint").alias("sum_k"),
             F.count("src").cast("bigint").alias("n_with_meta"),
         )
-        .orderBy("generation", "status")
     )
 
 
@@ -1808,4 +1788,4 @@ def outer_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("pos").cast("bigint").alias("pos"),
         F.col("col").alias("tok"),
-    ).orderBy("doc_id", "pos")
+    )

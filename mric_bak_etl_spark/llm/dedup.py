@@ -73,14 +73,18 @@ def corpus_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(d.unionByName(variants), "doc_id")
 
 
-_CORPUS_ORACLE = """
+# DuckDB text of corpus_with_near_dups' variant: ``text`` minus its last 5
+# tokens (one token kept at least).
+_TRUNCATED_TEXT_SQL = """array_to_string(
+               string_split_regex(text, '\\s+')
+                 [1:greatest(len(string_split_regex(text, '\\s+')) - 5, 1)],
+               ' ')"""
+
+_CORPUS_ORACLE = f"""
       SELECT doc_id, text FROM documents
       UNION ALL
       SELECT doc_id + 1000000 AS doc_id,
-             array_to_string(
-               string_split_regex(text, '\\s+')
-                 [1:greatest(len(string_split_regex(text, '\\s+')) - 5, 1)],
-               ' ') AS text
+             {_TRUNCATED_TEXT_SQL} AS text
       FROM documents WHERE doc_id % 10 = 0
 """
 
@@ -190,6 +194,15 @@ def shingles(text_col: str = "text", k: int = SHINGLE_K) -> Column:
     return F.array_distinct(
         F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " "))
     )
+
+
+def shingle_set_sql(k: int = SHINGLE_K) -> str:
+    """DuckDB text of :func:`shingles` over a ``text`` column — the one copy
+    every dedup oracle and :func:`render_crawl_funnel_ctes` compose."""
+    return f"""list_distinct(list_transform(
+      range(1, greatest(len(string_split_regex(text, '\\s+')) - {k - 1}, 1) + 1),
+      i -> array_to_string(string_split_regex(text, '\\s+')[i:i+{k - 1}], ' ')
+    ))"""
 
 
 def shingle_hashes(text_col: str = "text", k: int = SHINGLE_K) -> Column:
@@ -445,16 +458,12 @@ def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared CTE body: the exact-Jaccard near-dup pair set (the l2b result
-# before ordering) — also the edge set for the duplicate-cluster oracle.
+# Shared CTE body: the exact-Jaccard near-dup pair set (the l2b result)
+# — also the edge set for the duplicate-cluster oracle.
 _PAIRS_ORACLE = f"""
     corpus AS ({_CORPUS_ORACLE}),
     sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(string_split_regex(text, '\\s+')) - 2, 1) + 1),
-               i -> array_to_string(string_split_regex(text, '\\s+')[i:i+2], ' ')
-             )) AS sh
+      SELECT doc_id, {shingle_set_sql()} AS sh
       FROM corpus
     ),
     inv AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
@@ -525,7 +534,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-    return jac.filter(F.col("jaccard") >= 0.5).orderBy("doc_a", "doc_b")
+    return jac.filter(F.col("jaccard") >= 0.5)
 
 
 def portable_minhash_signatures(
@@ -579,10 +588,27 @@ def portable_band_hashes(
     )
 
 
-_L2F_SIG_ORACLE = ", ".join(
-    f"list_min(list_transform(sh, s -> md5(concat('{i}:', s))))"
-    for i in range(N_MINHASHES)
-)
+def md5_signature_sql(n_hashes: int = N_MINHASHES) -> str:
+    """DuckDB text of :func:`portable_minhash_signatures` over a shingle-set
+    column ``sh``: the comma-separated slot list (callers wrap it in
+    ``[...]``)."""
+    return ", ".join(
+        f"list_min(list_transform(sh, s -> md5(concat('{i}:', s))))"
+        for i in range(n_hashes)
+    )
+
+
+def md5_bands_sql(
+    sig: str, n_hashes: int = N_MINHASHES, n_bands: int = N_BANDS
+) -> str:
+    """DuckDB text of :func:`portable_band_hashes` over the signature CTE
+    ``sig`` (column ``mh``): one (doc_id, band, band_hash) row per band."""
+    rpb = n_hashes // n_bands
+    band_key = ", ".join(f"mh[b.band*{rpb}+{r + 1}]" for r in range(rpb))
+    bands_list = ", ".join(str(b) for b in range(n_bands))
+    return f"""
+      SELECT doc_id, b.band, md5(concat_ws('|', {band_key})) AS band_hash
+      FROM {sig} CROSS JOIN (SELECT unnest([{bands_list}]) AS band) b"""
 
 
 @register(
@@ -590,20 +616,11 @@ _L2F_SIG_ORACLE = ", ".join(
     oracle=f"""
     WITH corpus AS ({_CORPUS_ORACLE}),
     sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(string_split_regex(text, '\\s+')) - 2, 1) + 1),
-               i -> array_to_string(string_split_regex(text, '\\s+')[i:i+2], ' ')
-             )) AS sh
+      SELECT doc_id, {shingle_set_sql()} AS sh
       FROM corpus
     ),
-    sig AS (SELECT doc_id, [{_L2F_SIG_ORACLE}] AS mh FROM sh),
-    bands AS (
-      SELECT doc_id, b.band,
-             md5(concat_ws('|', mh[b.band*4+1], mh[b.band*4+2],
-                                mh[b.band*4+3], mh[b.band*4+4])) AS band_hash
-      FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) b
-    ),
+    sig AS (SELECT doc_id, [{md5_signature_sql()}] AS mh FROM sh),
+    bands AS ({md5_bands_sql("sig")}),
     cands AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a
@@ -652,7 +669,6 @@ def portable_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         exact_jaccard(sh_tbl, pairs)
         .filter(F.col("jaccard") >= 0.5)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -745,7 +761,6 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         buckets.select(F.explode(pair_structs).alias("p"))
         .select("p.doc_a", "p.doc_b", "p.hamming")
         .distinct()
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -807,7 +822,6 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             cos.alias("cosine"),
         )
         .filter(F.col("cosine") >= 0.3)
-        .orderBy("vec_a", "vec_b")
     )
 
 
@@ -926,7 +940,6 @@ def dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_members"),
             F.max("doc_id").alias("max_member"),
         )
-        .orderBy("cluster_id")
     )
 
 
@@ -947,11 +960,7 @@ _WRAPPED_CORPUS_ORACLE = """
     oracle=f"""
     WITH corpus AS ({_WRAPPED_CORPUS_ORACLE}),
     sh AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(string_split_regex(text, '\\s+')) - 2, 1) + 1),
-               i -> array_to_string(string_split_regex(text, '\\s+')[i:i+2], ' ')
-             )) AS sh
+      SELECT doc_id, {shingle_set_sql()} AS sh
       FROM corpus
     ),
     inv AS (SELECT doc_id, unnest(sh) AS shingle FROM sh),
@@ -1046,10 +1055,7 @@ def containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-    return (
-        scored.filter((F.col("containment") >= 0.9) & (F.col("jaccard") < 0.5))
-        .orderBy("doc_a", "doc_b")
-    )
+    return scored.filter((F.col("containment") >= 0.9) & (F.col("jaccard") < 0.5))
 
 
 @register(
@@ -1118,7 +1124,6 @@ def url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("n") - F.count(F.lit(1))).cast("bigint").alias("n_removed"),
             F.sum("kept_chars").cast("bigint").alias("kept_chars"),
         )
-        .orderBy("source")
     )
 
 
@@ -1228,7 +1233,6 @@ def record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_correct"),
         )
-        .orderBy("lev_distance")
     )
 
 
@@ -1462,7 +1466,6 @@ def substring_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_members"),
             F.max("doc_id").alias("max_member"),
         )
-        .orderBy("cluster_id")
     )
 
 
@@ -1580,21 +1583,12 @@ def incremental_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_L39_SHINGLE_SQL = """list_distinct(list_transform(
-               range(1, greatest(len(string_split_regex(text, '\\s+')) - 2, 1) + 1),
-               i -> array_to_string(string_split_regex(text, '\\s+')[i:i+2], ' ')
-             ))"""
-
-
 @register(
     "l39_incremental_jaccard_neardup",
     oracle=f"""
     WITH nb AS (
       SELECT doc_id + 6000000 AS new_id,
-             array_to_string(
-               string_split_regex(text, '\\s+')
-                 [1:greatest(len(string_split_regex(text, '\\s+')) - 5, 1)],
-               ' ') AS text
+             {_TRUNCATED_TEXT_SQL} AS text
       FROM documents WHERE doc_id % 10 = 1
       UNION ALL
       SELECT doc_id + 7000000,
@@ -1602,9 +1596,9 @@ _L39_SHINGLE_SQL = """list_distinct(list_transform(
       FROM documents WHERE doc_id % 10 = 9
     ),
     c_sh AS (
-      SELECT doc_id AS match_doc, {_L39_SHINGLE_SQL} AS sh FROM documents
+      SELECT doc_id AS match_doc, {shingle_set_sql()} AS sh FROM documents
     ),
-    n_sh AS (SELECT new_id, {_L39_SHINGLE_SQL} AS sh FROM nb),
+    n_sh AS (SELECT new_id, {shingle_set_sql()} AS sh FROM nb),
     c_inv AS (SELECT match_doc, unnest(sh) AS shingle FROM c_sh),
     n_inv AS (SELECT new_id, unnest(sh) AS shingle FROM n_sh),
     common AS (
@@ -1709,7 +1703,7 @@ def incremental_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jaccard"),
         )
     )
-    return jac.filter(F.col("jaccard") >= 0.5).orderBy("new_id", "match_doc")
+    return jac.filter(F.col("jaccard") >= 0.5)
 
 
 # l40's planted boilerplate block: a fixed-size run of IDENTICAL docs
@@ -1882,20 +1876,6 @@ def incremental_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # l40 (engine-private xxhash bands) gets a fully value-oracled twin:
 # DuckDB rebuilds the same capped band index, the same candidate set,
 # and the same verified pairs bit-for-bit.
-_L40B_SHINGLE_SQL = """list_distinct(list_transform(
-               range(1, greatest(len(string_split_regex(text, '\\s+')) - 2, 1) + 1),
-               i -> array_to_string(string_split_regex(text, '\\s+')[i:i+2], ' ')
-             ))"""
-_L40B_SIG_SQL = ", ".join(
-    f"list_min(list_transform(sh, s -> md5(concat('{i}:', s))))"
-    for i in range(N_MINHASHES)
-)
-_L40B_BANDS_SQL = """SELECT doc_id, b.band,
-             md5(concat_ws('|', mh[b.band*4+1], mh[b.band*4+2],
-                                mh[b.band*4+3], mh[b.band*4+4])) AS band_hash
-      FROM {sig} CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) b"""
-
-
 @register(
     "l40b_portable_incremental_neardup",
     oracle=f"""
@@ -1904,9 +1884,9 @@ _L40B_BANDS_SQL = """SELECT doc_id, b.band,
       UNION ALL
       SELECT 8000000 + i, '{_L40_BOILER_TEXT}' FROM range({L40_BOILER_COPIES}) t(i)
     ),
-    c_sh AS (SELECT doc_id, {_L40B_SHINGLE_SQL} AS sh FROM corpus),
-    c_sig AS (SELECT doc_id, [{_L40B_SIG_SQL}] AS mh FROM c_sh),
-    c_bands AS ({_L40B_BANDS_SQL.format(sig="c_sig")}),
+    c_sh AS (SELECT doc_id, {shingle_set_sql()} AS sh FROM corpus),
+    c_sig AS (SELECT doc_id, [{md5_signature_sql()}] AS mh FROM c_sh),
+    c_bands AS ({md5_bands_sql("c_sig")}),
     hot AS (
       SELECT band, band_hash FROM c_bands
       GROUP BY band, band_hash HAVING count(*) > {L40_MAX_POSTING}
@@ -1917,10 +1897,7 @@ _L40B_BANDS_SQL = """SELECT doc_id, b.band,
     ),
     nb AS (
       SELECT doc_id + 9000000 AS doc_id,
-             array_to_string(
-               string_split_regex(text, '\\s+')
-                 [1:greatest(len(string_split_regex(text, '\\s+')) - 5, 1)],
-               ' ') AS text
+             {_TRUNCATED_TEXT_SQL} AS text
       FROM documents WHERE doc_id % 10 = 4
       UNION ALL
       SELECT doc_id + 9500000,
@@ -1929,9 +1906,9 @@ _L40B_BANDS_SQL = """SELECT doc_id, b.band,
       UNION ALL
       SELECT 9999999, '{_L40_BOILER_TEXT}'
     ),
-    n_sh AS (SELECT doc_id, {_L40B_SHINGLE_SQL} AS sh FROM nb),
-    n_sig AS (SELECT doc_id, [{_L40B_SIG_SQL}] AS mh FROM n_sh),
-    n_bands AS ({_L40B_BANDS_SQL.format(sig="n_sig")}),
+    n_sh AS (SELECT doc_id, {shingle_set_sql()} AS sh FROM nb),
+    n_sig AS (SELECT doc_id, [{md5_signature_sql()}] AS mh FROM n_sh),
+    n_bands AS ({md5_bands_sql("n_sig")}),
     cands AS (
       SELECT DISTINCT n.doc_id AS new_id, c.match_doc
       FROM n_bands n
@@ -2102,7 +2079,6 @@ def portable_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(bit_count(fa ^ fb) AS INT)").alias("hamming"),
         )
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -2484,17 +2460,8 @@ def render_crawl_funnel_ctes(
     S = suffix
     if n_hashes % n_bands != 0:
         raise ValueError(f"{n_hashes} slots do not band into {n_bands}")
-    rpb = n_hashes // n_bands
-    shingle = f"""list_distinct(list_transform(
-      range(1, greatest(len(string_split_regex(text, '\\s+')) - {k - 1}, 1) + 1),
-      i -> array_to_string(string_split_regex(text, '\\s+')[i:i+{k - 1}], ' ')
-    ))"""
-    sig = ", ".join(
-        f"list_min(list_transform(sh, s -> md5(concat('{i}:', s))))"
-        for i in range(n_hashes)
-    )
-    band_key = ", ".join(f"mh[b.band*{rpb}+{r + 1}]" for r in range(rpb))
-    bands_list = ", ".join(str(b) for b in range(n_bands))
+    shingle = shingle_set_sql(k)
+    sig = md5_signature_sql(n_hashes)
     jac = (
         f"CAST(len(list_intersect(ssh{S}.sh, csh{S}.sh)) AS DOUBLE)"
         f" / (len(ssh{S}.sh) + len(csh{S}.sh)"
@@ -2529,12 +2496,8 @@ def render_crawl_funnel_ctes(
     csh{S} AS (SELECT doc_id, {shingle} AS sh FROM corpus{S}),
     ssig{S} AS (SELECT doc_id, [{sig}] AS mh FROM ssh{S}),
     csig{S} AS (SELECT doc_id, [{sig}] AS mh FROM csh{S}),
-    sbands{S} AS (
-      SELECT doc_id, b.band, md5(concat_ws('|', {band_key})) AS band_hash
-      FROM ssig{S} CROSS JOIN (SELECT unnest([{bands_list}]) AS band) b),
-    cbands{S} AS (
-      SELECT doc_id, b.band, md5(concat_ws('|', {band_key})) AS band_hash
-      FROM csig{S} CROSS JOIN (SELECT unnest([{bands_list}]) AS band) b),
+    sbands{S} AS ({md5_bands_sql(f"ssig{S}", n_hashes, n_bands)}),
+    cbands{S} AS ({md5_bands_sql(f"csig{S}", n_hashes, n_bands)}),
     hot{S} AS (
       SELECT band, band_hash FROM cbands{S}
       GROUP BY band, band_hash HAVING count(*) > {cap}

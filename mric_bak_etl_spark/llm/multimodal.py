@@ -93,7 +93,6 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("meta.n_bytes").cast("bigint").alias("total_bytes"),
             F.round(F.avg("meta.width"), 4).alias("avg_width"),
         )
-        .orderBy("media_type")
     )
 
 
@@ -978,7 +977,6 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         frames.groupBy("media_id")
         .agg(F.count(F.lit(1)).alias("n_sampled_frames"))
-        .orderBy("media_id")
     )
 
 
@@ -1783,7 +1781,6 @@ def grouped_pandas_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.groupBy("lang")
         .applyInPandas(weighted, schema="lang string, weighted_chars double")
         .select("lang", F.round("weighted_chars", 4).alias("weighted_chars"))
-        .orderBy("lang")
     )
 
 
@@ -1826,7 +1823,6 @@ def python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
         SELECT doc_id, c.chunk_no, c.chunk_text, c.n_chunk_tokens
         FROM x3_docs, LATERAL x3_chunk_udtf(text) c
-        ORDER BY doc_id, chunk_no
         """
     )
 
@@ -1920,10 +1916,7 @@ def resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("meta.width").alias("width"),
         F.col("meta.height").alias("height"),
     )
-    return (
-        map_rows(spread(m, "media_id"), _resize_row, _RESIZE_SCHEMA)
-        .orderBy("media_id")
-    )
+    return map_rows(spread(m, "media_id"), _resize_row, _RESIZE_SCHEMA)
 
 
 @register(
@@ -2030,7 +2023,6 @@ def binary_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("copies") - F.count(F.lit(1))).cast("bigint").alias("n_dup_rows"),
             F.sum("nb").cast("bigint").alias("unique_bytes"),
         )
-        .orderBy("media_type")
     )
 
 
@@ -2068,7 +2060,6 @@ def grouped_pandas_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.groupBy("lang")
         .applyInPandas(top3, "lang string, doc_id long, n_chars long, rnk int")
-        .orderBy("lang", "rnk")
     )
 
 
@@ -2134,7 +2125,6 @@ def polymorphic_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
         """
         SELECT doc_id, g.pos, g.tok_1, g.tok_2, g.tok_3
         FROM x7_docs, LATERAL x7_ngrams(text, 3) g
-        ORDER BY doc_id, pos
         """
     )
 
@@ -2283,7 +2273,6 @@ def grouped_arrow_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_chars",
             F.round("avg_chars", 4).alias("avg_chars"),
         )
-        .orderBy("lang")
     )
 
 
@@ -2439,6 +2428,5 @@ def arrow_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(max(t.pos) AS INT)             AS last_pos
         FROM x11_docs, LATERAL x11_tokenize_arrow(text) t
         GROUP BY doc_id
-        ORDER BY doc_id
         """
     )

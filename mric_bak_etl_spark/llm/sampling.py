@@ -76,7 +76,6 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("first_doc"),
             F.max("doc_id").alias("last_doc"),
         )
-        .orderBy("lang")
     )
 
 
@@ -135,7 +134,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("n_chars"), 4).alias("avg_chars"),
             F.countDistinct("source").cast("bigint").alias("n_sources"),
         )
-        .orderBy("lang")
     )
 
 
@@ -208,7 +206,6 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.floor(F.col("rate") * 1000000 + 0.5) / 1000000).alias("keep_rate"),
             "n_kept",
         )
-        .orderBy("lang")
     )
 
 
@@ -279,7 +276,6 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("score"), 6).alias("min_score"),
             F.round(F.max("score"), 6).alias("max_score"),
         )
-        .orderBy("lang")
     )
 
 
@@ -321,7 +317,6 @@ def bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("hkey", "doc_id")
         .limit(50)
         .select("doc_id", "lang")
-        .orderBy("doc_id")
     )
 
 
@@ -430,7 +425,6 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("n_chars"), 4).alias("avg_chars"),
             F.count_distinct("lang").cast("bigint").alias("n_langs"),
         )
-        .orderBy("split")
     )
 
 
@@ -499,7 +493,7 @@ def temperature_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             L31_BUDGET * F.col("raw_w") / F.col("z") / F.col("cnt"), 4
         ).alias("effective_epochs"),
-    ).orderBy("lang")
+    )
 
 
 # l33: batch-gradient-descent logistic regression, L33_ROUNDS fixed
@@ -885,7 +879,7 @@ def curation_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("n_out").cast("double") / F.col("n_in"), 4).alias(
             "pct_kept"
         ),
-    ).orderBy("stage_no")
+    )
 
 
 @register(
@@ -955,4 +949,4 @@ def epoch_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("shuffle_key").cast("bigint").alias("shuffle_key"),
         )
     )
-    return ranked.filter(F.col("epoch_rank") % 37 == 0).orderBy("epoch_rank")
+    return ranked.filter(F.col("epoch_rank") % 37 == 0)

@@ -186,7 +186,6 @@ def grouped_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("centroid_d1"),
             F.round(F.avg("dim_mean"), 4).alias("mean_component"),
         )
-        .orderBy("label")
     )
 
 
@@ -367,7 +366,6 @@ def embedding_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("norm"), 6).alias("avg_norm"),
             F.round(F.avg("quant_err"), 8).alias("avg_int8_err"),
         )
-        .orderBy("label")
     )
 
 

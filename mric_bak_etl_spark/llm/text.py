@@ -106,7 +106,6 @@ def slice_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("n_chars"), 4).alias("avg_chars"),
             F.sum(F.size(tokens())).cast("bigint").alias("total_tokens"),
         )
-        .orderBy("lang", "source")
     )
 
 
@@ -133,7 +132,6 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(tokens()).alias("ws_tokens"),
             F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), 0)).alias("bpe_tokens"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -198,7 +196,6 @@ def langid(spark: SparkSession, sf_dir: str) -> DataFrame:
             detected.alias("detected_lang"),
             best.cast("int").alias("marker_hits"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -246,7 +243,6 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("punct_ratio"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -267,10 +263,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     canonical = F.array_join(F.array_sort(F.array_distinct(tokens())), " ")
-    return (
-        d.select("doc_id", F.md5(canonical).alias("fingerprint"))
-        .orderBy("doc_id")
-    )
+    return d.select("doc_id", F.md5(canonical).alias("fingerprint"))
 
 
 # Fixed-size token chunking with overlap — the LLM-training preprocessing
@@ -352,7 +345,7 @@ def chunk_documents(d: DataFrame) -> DataFrame:
 )
 def chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-    return chunk_documents(d).orderBy("doc_id", "chunk_no")
+    return chunk_documents(d)
 
 
 @register(
@@ -470,7 +463,6 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_tok").cast("bigint").alias("total_tokens"),
         )
-        .orderBy("lang", "shard")
     )
 
 
@@ -770,7 +762,6 @@ def redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_hits").cast("bigint").alias("total_redactions"),
             F.sum("redacted_len").cast("bigint").alias("redacted_chars"),
         )
-        .orderBy("lang")
     )
 
 
@@ -907,7 +898,6 @@ def boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_mostly_boiler"),
         )
-        .orderBy("lang")
     )
 
 
@@ -1027,7 +1017,6 @@ def entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("entropy"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1222,7 +1211,6 @@ def bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.round(F.avg("doc_nll"), 4).alias("avg_nll"),
         )
-        .orderBy("lang")
     )
 
 
@@ -1437,7 +1425,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return spark.createDataFrame(
         best_rows, "rank int, a string, b string, pair_freq bigint"
-    ).orderBy("rank")
+    )
 
 
 @register(
@@ -1713,5 +1701,4 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("n_chars").cast("bigint").alias("min_chars"),
             F.max("n_chars").cast("bigint").alias("max_chars"),
         )
-        .orderBy("lang", "bucket")
     )

@@ -95,7 +95,6 @@ def distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("o_orderpriority").alias("n_priorities"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -115,7 +114,6 @@ def approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.approx_count_distinct("l_orderkey", rsd=0.01).alias("approx_orders"),
             F.approx_count_distinct("l_partkey", rsd=0.01).alias("approx_parts"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -328,7 +326,6 @@ def portable_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "round(abs(e - n_exact) / CAST(n_exact AS DOUBLE), 4)"
             ).alias("rel_error"),
         )
-        .orderBy("ship_year")
     )
 
 
@@ -384,11 +381,6 @@ def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
         )
         .select("o_orderstatus", "o_orderpriority", "gid", "sum_price", "n")
-        .orderBy(
-            "gid",
-            F.col("o_orderstatus").asc_nulls_last(),
-            F.col("o_orderpriority").asc_nulls_last(),
-        )
     )
 
 
@@ -420,7 +412,6 @@ def pivot_quantities(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("O").alias("qty_O"),
             F.col("F").alias("qty_F"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -501,7 +492,6 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             pct(0.75).alias("p75"),
             pct(0.99).alias("p99"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -535,7 +525,6 @@ def stats_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.stddev_samp("l_extendedprice"), 2).alias("sd_price"),
             F.round(F.var_samp("l_discount"), 6).alias("var_discount"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -568,7 +557,6 @@ def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(sum(l_quantity), 4)   AS total_qty
         FROM a4d_lineitem
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        ORDER BY gid, l_returnflag, l_linestatus
         """
     )
 
@@ -602,7 +590,6 @@ def min_by_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min_by("o_orderkey", "o_totalprice").alias("smallest_order"),
             F.round(F.min("o_totalprice"), 4).alias("smallest_price"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -638,7 +625,6 @@ def filtered_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(avg(l_tax) FILTER (WHERE l_linestatus = 'F'), 6)    AS avg_tax_finished
         FROM a12_lineitem
         GROUP BY l_returnflag
-        ORDER BY l_returnflag
         """
     )
 
@@ -679,7 +665,7 @@ def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
         values=["sum_qty", "sum_price", "sum_disc"],
         variableColumnName="measure",
         valueColumnName="val",
-    ).orderBy("l_returnflag", "measure")
+    )
 
 
 @register(
@@ -714,7 +700,6 @@ def hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "exact_custs",
         )
         .unionByName(merged)
-        .orderBy("o_orderpriority")
     )
 
 
@@ -790,7 +775,6 @@ def median_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("total").cast("bigint").alias("n_rows"),
         )
         .select("l_returnflag", "median_qty", "mode_qty", "n_rows")
-        .orderBy("l_returnflag")
     )
 
 
@@ -827,7 +811,6 @@ def decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((dec * 100).cast("bigint")).cast("bigint").alias("sum_cents"),
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -870,7 +853,6 @@ def histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.min("o_totalprice"), 4).alias("bucket_min"),
             F.round(F.max("o_totalprice"), 4).alias("bucket_max"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -937,7 +919,7 @@ def listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
                  WITHIN GROUP (ORDER BY o_orderkey) AS order_ids,
                count(*) AS n_orders
         FROM orders WHERE o_orderkey % 100 = 0
-        GROUP BY o_orderpriority ORDER BY o_orderpriority
+        GROUP BY o_orderpriority
     """)
 
 
@@ -973,7 +955,6 @@ def approx_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("price_q")[2], 4).alias("p99"),
             "n_lines",
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -1006,7 +987,6 @@ def regression_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.regr_r2("l_extendedprice", "l_quantity"), 6).alias("r2"),
             F.regr_count("l_extendedprice", "l_quantity").cast("bigint").alias("n"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -1027,8 +1007,7 @@ def regression_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is what makes a value oracle possible: when the tracked-item "
     "budget covers the distinct count the sketch degrades to exact "
     "counting — the same guarantee a production rollout validates "
-    "before trusting the approximate regime. Result re-sorted with a "
-    "deterministic (cnt DESC, item) tiebreak.",
+    "before trusting the approximate regime.",
     tags=("aggregates", "sketch"),
 )
 def approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1042,7 +1021,6 @@ def approx_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e.item").alias("item"),
             F.col("e.count").cast("bigint").alias("cnt"),
         )
-        .orderBy(F.col("cnt").desc(), "item")
     )
 
 
@@ -1079,7 +1057,6 @@ def sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.count(F.lit(1)).cast("bigint").alias("n_days"),
         )
-        .orderBy("month")
     )
 
 
@@ -1282,7 +1259,6 @@ def exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p50_disc"),
             F.round(F.expr("median(l_discount)"), 4).alias("med_discount"),
         )
-        .orderBy("l_returnflag")
     )
 
 

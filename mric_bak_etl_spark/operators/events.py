@@ -143,7 +143,6 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         activity.groupBy("cohort_week", "week_offset")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_active_users"))
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -200,7 +199,6 @@ def gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -331,7 +329,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.groupBy("r", "f", "m")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_customers"))
-        .orderBy("r", "f", "m")
     )
 
 
@@ -429,7 +426,6 @@ def interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.percentile("gap_s", 0.5), 4).alias("p50_gap_s"),
             F.round(F.percentile("gap_s", 0.95), 4).alias("p95_gap_s"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -505,7 +501,6 @@ def attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_touches"),
             F.round(F.sum("credit"), 4).alias("credit"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -730,7 +725,6 @@ def time_to_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.round(F.exp(log_sum), 6))
             .alias("survival"),
         )
-        .orderBy("day_k")
     )
 
 
@@ -822,7 +816,6 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cum_ltv_per_user"
             ),
         )
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -936,7 +929,6 @@ def growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_churned"),
         )
-        .orderBy("week")
     )
 
 
@@ -1109,7 +1101,7 @@ def experiment_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     welch = ed.select(
         *[F.expr(e).alias(n) for n, e in _E13_VALUE_STATS.items()]
     )
-    return prop.unionByName(welch).orderBy("metric")
+    return prop.unionByName(welch)
 
 
 # e14: CUPED variance reduction (Deng et al., "Improving the
@@ -1329,7 +1321,7 @@ def cuped_experiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = step.select(
         *[F.expr(e).alias(n) for n, e in _E14_ROW_ADJ.items()]
     )
-    return un.unionByName(adj).orderBy("metric")
+    return un.unionByName(adj)
 
 
 # e15: sample-ratio mismatch (SRM) — the randomization-health gate every

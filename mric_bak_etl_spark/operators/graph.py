@@ -131,7 +131,7 @@ def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return ranks.select(
         F.col("v").alias("event_type"), F.round("r", 6).alias("pagerank")
-    ).orderBy(F.desc("pagerank"), F.asc("event_type"))
+    )
 
 
 SP_SOURCE = "signup"
@@ -231,7 +231,7 @@ def shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return dist.select(
         F.col("v").alias("event_type"), F.round("d", 6).alias("nll_dist")
-    ).orderBy(F.asc_nulls_last("nll_dist"), "event_type")
+    )
 
 
 G3_VALUE_CUT = 200.0  # high-value activity only: keeps co-activity sparse
@@ -287,7 +287,6 @@ def user_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_members"),
             F.max("doc_id").alias("max_member"),
         )
-        .orderBy("cluster_id")
     )
 
 

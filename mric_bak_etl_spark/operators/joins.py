@@ -123,7 +123,6 @@ def left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_customers_without_orders"),
             F.count("o_orderkey").alias("n_orders"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -180,7 +179,6 @@ def left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .select("c_custkey", "c_mktsegment")
-        .orderBy("c_custkey")
     )
 
 
@@ -203,7 +201,6 @@ def left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .select("c_custkey", "c_mktsegment")
-        .orderBy("c_custkey")
     )
 
 
@@ -237,7 +234,6 @@ def range_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum(F.col("b_size") - F.col("a_size")).cast("bigint").alias("total_size_gap"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -346,7 +342,7 @@ def asof_purchases_to_signups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cross_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region").select("r_name")
     n = load_table(spark, sf_dir, "nation").select("n_name")
-    return r.crossJoin(n).orderBy("r_name", "n_name")
+    return r.crossJoin(n)
 
 
 N_SALTS = 8
@@ -496,7 +492,6 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lines"),
             F.round(F.sum("l_quantity"), 4).alias("total_qty"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -531,7 +526,6 @@ def broadcast_nested_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_suppliers"),
             F.round(F.sum("s_acctbal"), 4).alias("total_bal"),
         )
-        .orderBy("r_name")
     )
 
 
@@ -592,7 +586,6 @@ def bucketed_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("iv_key")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_in_window"))
-        .orderBy("iv_key")
     )
 
 
@@ -631,7 +624,6 @@ def shuffle_hash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_lines"),
             F.round(F.sum("l_extendedprice"), 4).alias("total_price"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -752,7 +744,6 @@ def null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("o_totalprice"), 4).alias("total"),
         )
-        .orderBy("label")
     )
 
 
@@ -924,5 +915,4 @@ def null_skew_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
             F.round(F.sum("o_totalprice"), 4).alias("revenue"),
         )
-        .orderBy("segment")
     )

@@ -80,7 +80,6 @@ def projection(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.upper("l_returnflag").alias("flag_up"),
             (F.col("l_quantity") >= 25).alias("is_bulk"),
         )
-        .orderBy("l_orderkey", "l_linenumber", "disc_price")
     )
 
 
@@ -114,7 +113,6 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("p_retailprice").isNotNull()
         )
         .select("p_partkey", "p_name", "p_brand", "p_type", "p_size")
-        .orderBy("p_partkey")
     )
 
 

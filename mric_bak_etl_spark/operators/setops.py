@@ -54,7 +54,6 @@ def union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("o_totalprice"), 4).alias("total"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -78,7 +77,7 @@ def intersect_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderstatus") == "F")
         .select(F.col("o_custkey").alias("c_custkey"))
     )
-    return c.intersect(o).orderBy("c_custkey")
+    return c.intersect(o)
 
 
 @register(
@@ -119,7 +118,7 @@ def union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     b = o.filter(F.col("o_totalprice") > 100000).select("o_custkey")
-    return a.union(b).distinct().orderBy("o_custkey")
+    return a.union(b).distinct()
 
 
 @register(

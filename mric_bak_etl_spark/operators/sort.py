@@ -201,7 +201,7 @@ def distributed_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_totalprice",
         )
     )
-    return ranked.filter(F.col("rn") % 97 == 0).orderBy("rn")
+    return ranked.filter(F.col("rn") % 97 == 0)
 
 
 @register(

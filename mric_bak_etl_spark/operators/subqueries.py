@@ -57,7 +57,6 @@ def exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
                   AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
               )
         GROUP BY o_orderpriority
-        ORDER BY o_orderpriority
     """)
 
 
@@ -143,7 +142,6 @@ def in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 SELECT l_partkey FROM lineitem WHERE l_quantity >= 49
               )
         GROUP BY p_brand
-        ORDER BY p_brand
     """)
 
 
@@ -178,7 +176,6 @@ def lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                ORDER BY c_acctbal DESC, c_name
                LIMIT 2
              ) AS top
-        ORDER BY n.n_name, top.c_acctbal DESC, top.c_name
     """)
 
 

@@ -275,7 +275,6 @@ def nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year"))
         .agg(F.round(F.sum(_revenue()), 4).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -340,7 +339,6 @@ def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("mkt_share")
         )
-        .orderBy("o_year")
     )
 
 
@@ -422,7 +420,6 @@ def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "s_suppkey", "s_name", F.round("total_rev", 4).alias("total_revenue")
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -494,7 +491,6 @@ def sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("numcust"),
             F.round(F.sum("c_acctbal"), 4).alias("totacctbal"),
         )
-        .orderBy("c_nationkey")
     )
 
 
@@ -571,7 +567,6 @@ def order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         late.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).cast("bigint").alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -661,7 +656,6 @@ def order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("o_orderkey").alias("c_count"))
         .groupBy("c_count")
         .agg(F.count(F.lit(1)).cast("bigint").alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
     )
 
 
@@ -707,7 +701,6 @@ def product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("int").alias("o_year"),
         )
         .agg(F.round(F.sum(profit), 4).alias("sum_profit"))
-        .orderBy("nation_name", F.desc("o_year"))
     )
 
 
@@ -747,7 +740,6 @@ def late_line_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(high, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).cast("bigint").alias("low_line_count"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -801,7 +793,6 @@ def waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).cast("bigint").alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
     )
 
 
@@ -918,7 +909,6 @@ def important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         val.crossJoin(F.broadcast(threshold))
         .filter(F.col("value") > F.col("cut"))
         .select("l_partkey", F.round("value", 4).alias("value"))
-        .orderBy(F.desc("value"), "l_partkey")
     )
 
 
@@ -961,7 +951,6 @@ def supplier_part_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), F.col("l_partkey") == p.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").cast("bigint").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
     )
 
 
@@ -1017,5 +1006,4 @@ def dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.join(dominant, "s_suppkey", "left_semi")
         .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
         .select("s_name", "n_name")
-        .orderBy("s_name")
     )

@@ -97,7 +97,6 @@ def lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("value") - F.coalesce(F.lag("value").over(w), F.col("value")), 4
             ).alias("delta"),
         )
-        .orderBy("user_id", "ts", "event_id")
     )
 
 
@@ -234,7 +233,7 @@ def forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "v",
         F.last("v", ignorenulls=True).over(w).alias("v_filled"),
-    ).orderBy("user_id", "ts", "event_id")
+    )
 
 
 @register(
@@ -274,7 +273,7 @@ def distribution_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (F.floor(F.cume_dist().over(w) * 1000000 + 0.5) / 1000000).alias("cdist"),
         F.nth_value("c_name", 2).over(w_full).alias("second_poorest"),
-    ).orderBy("c_nationkey", "c_custkey")
+    )
 
 
 @register(
@@ -326,7 +325,7 @@ def running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         F.col("n_new").cast("bigint").alias("n_new_users"),
         F.sum("n_new").over(w).cast("bigint").alias("cum_distinct_users"),
-    ).orderBy("event_type", "day")
+    )
 
 
 @register(
@@ -422,7 +421,7 @@ def interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return bounded.select(
         "event_id", "user_id", "v", F.round(interp, 4).alias("v_interp")
-    ).orderBy("user_id", "event_id")
+    )
 
 
 @register(
@@ -499,7 +498,6 @@ def rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_days_in_frame"
             ),
         )
-        .orderBy("o_orderpriority", "day")
     )
 
 

@@ -102,7 +102,6 @@ def snapshot_diff_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.groupBy("change")
         .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy("change")
     )
 
 
@@ -273,7 +272,6 @@ def dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.round(F.sum("l_extendedprice"), 4).alias("total_price"),
         )
-        .orderBy("ship_year")
     )
 
 
@@ -370,7 +368,6 @@ def merge_apply_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.round(F.sum("o_totalprice"), 4).alias("total_price"),
         )
-        .orderBy(F.col("o_orderstatus").asc_nulls_first())
     )
 
 
@@ -464,9 +461,6 @@ def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist.select("h.*")
         .groupBy(F.col("v").alias("status"), "valid_from", "valid_to", "is_current")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
-        .orderBy(
-            "status", "valid_from", F.col("valid_to").asc_nulls_first(), "is_current"
-        )
     )
 
 
@@ -635,7 +629,6 @@ def scd2_multi_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         hist.groupBy(F.col("v").alias("status"), "valid_from", "valid_to")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
-        .orderBy("status", "valid_from", F.col("valid_to").asc_nulls_first())
     )
 
 
@@ -696,7 +689,6 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("yd").cast("bigint").alias("min_doy"),
             F.max("yd").cast("bigint").alias("max_doy"),
         )
-        .orderBy("file_id")
     )
 
 
@@ -809,7 +801,7 @@ def column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.orderBy("col")
+    return out
 
 
 @register(
@@ -970,7 +962,6 @@ def scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("bal"), 2).alias("total_bal"),
         )
-        .orderBy("version")
     )
 
 
@@ -1050,7 +1041,7 @@ def time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for v in (1, int(latest_ver))
     ]
-    return summaries[0].unionByName(summaries[1]).orderBy("version")
+    return summaries[0].unionByName(summaries[1])
 
 
 @register(
@@ -1233,7 +1224,7 @@ def schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("unchanged")
         .alias("drift"),
     )
-    return drift.filter(F.col("drift") != "unchanged").orderBy("col")
+    return drift.filter(F.col("drift") != "unchanged")
 
 
 @register(
@@ -1434,7 +1425,6 @@ def late_arriving_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_repaired"),
             F.round(F.sum("o_totalprice"), 4).alias("revenue"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -1508,7 +1498,6 @@ def fact_summary_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.avg(F.when(F.col("s").isNotNull(), rel)), 4
             ).alias("avg_rel_error"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -1578,7 +1567,6 @@ def pk_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("l_orderkey") * 1000 + F.col("l_linenumber"),
             )
         )
-        .orderBy("table_name")
     )
 
 
@@ -1672,7 +1660,7 @@ def version_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = summaries[0]
     for s in summaries[1:]:
         out = out.unionByName(s)
-    return out.orderBy("version")
+    return out
 
 
 @register(
@@ -1727,7 +1715,6 @@ def source_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
             stale_min.alias("minutes_stale"),
             (stale_min > 360).alias("sla_breached"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1896,7 +1883,7 @@ def benford_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     overall = pd_row.select(
         *[F.expr(e).alias(n) for n, e in _DQ11_TOTAL_ROW.items()]
     )
-    return per_digit.unionByName(overall).orderBy("digit")
+    return per_digit.unionByName(overall)
 
 
 # s19: anti-entropy checksum audit between two replicas of a table.
@@ -2212,5 +2199,4 @@ def bucket_scoped_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("value_drift"))
             .alias("status"),
         )
-        .orderBy("o_orderkey")
     )

@@ -35,7 +35,7 @@ from mric_bak_etl_spark.tables import load_table
 )
 def file_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = manifest.manifest_from_directory(spark, sf_dir, glob="*.parquet")
-    return m.select("name", "length").orderBy("name")
+    return m.select("name", "length")
 
 
 @register(
@@ -99,7 +99,7 @@ def state_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).alias("name")
     candidates = o.select(name).distinct()
     processed = o.filter(F.col("o_orderstatus") == "F").select(name).distinct()
-    return state.filter_unprocessed(candidates, processed).orderBy("name")
+    return state.filter_unprocessed(candidates, processed)
 
 
 @register(
@@ -159,7 +159,6 @@ def partitioned_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_quantity"), 4).alias("total_qty"),
         )
         .select(F.col("ship_year").cast("int").alias("ship_year"), "n_rows", "total_qty")
-        .orderBy("ship_year")
     )
 
 
@@ -203,7 +202,6 @@ def format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 4).alias("total_price"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -307,7 +305,6 @@ def jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -352,7 +349,6 @@ def orc_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 4).alias("total_price"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -414,7 +410,6 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rows",
             "total_qty",
         )
-        .orderBy("ship_year")
     )
 
 
@@ -467,7 +462,6 @@ def streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -553,7 +547,6 @@ def selective_file_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "total_price",
         )
-        .orderBy("order_year")
     )
 
 

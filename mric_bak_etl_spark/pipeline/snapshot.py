@@ -2,8 +2,9 @@
 
 Reference behavior: ``DROP DATABASE IF EXISTS`` + ``RESTORE DATABASE`` via
 sqlcmd — a full, NON-atomic replace (readers see no database between the
-two statements, `src/bak_unload.ps1:90-103`), followed by an idempotent
-reader grant (`src/bak_unload.ps1:105-111`).
+two statements, `src/bak_unload.ps1:90-103`), followed by a reader
+grant (`src/bak_unload.ps1:105-111`) that a truncate-load makes
+unnecessary (see ``overwrite_snapshot_jdbc``).
 
 Spark-first: ``write.mode("overwrite")`` IS drop-and-replace, and it is
 just as non-atomic: Spark clears the target before the job writes, so
@@ -24,7 +25,7 @@ many small files hurt listing, one giant file hurts parallel reads).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def overwrite_snapshot(
@@ -67,17 +68,3 @@ def overwrite_snapshot_jdbc(
         writer = writer.option(key, value)
     writer.save()
 
-
-def grant_reader(spark: SparkSession, table: str, principal: str) -> str:
-    """R12: idempotent reader grant (`src/bak_unload.ps1:105-111`).
-
-    File-based tables have no principal catalog; against a real metastore
-    this issues ``GRANT SELECT``. Returns the statement for logging either
-    way, so runs are auditable like the reference's console output.
-    """
-    stmt = f"GRANT SELECT ON TABLE {table} TO `{principal}`"
-    try:
-        spark.sql(stmt)
-    except Exception:
-        pass  # catalog without ACL support — logged no-op (SURVEY §2A R12)
-    return stmt

@@ -55,8 +55,8 @@ def _shuffle_partition_conf() -> dict[str, str]:
     # Spark's global default of 200: on a driver-provided session every
     # shuffle otherwise schedules 200 tasks regardless of core count —
     # pure per-task overhead at test scale. Runtime-settable, and AQE
-    # coalesces further downward; clusters override via
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS (~2-3× total executor cores).
+    # coalesces further downward; clusters set spark.sql.shuffle.partitions
+    # on the session (~2-3× total executor cores).
     return {"spark.sql.shuffle.partitions": str(default_parallelism())}
 
 
@@ -107,12 +107,9 @@ def default_parallelism() -> int:
     a local[8] session schedules 4 tasks per core of pure overhead on
     every exchange/spread (r13 optimization; AQE coalesces reducers but
     not the round-robin spread before CPU-dense stages). On a cluster,
-    override via SPARK_GRAFT_SHUFFLE_PARTITIONS or session conf to
-    ~2-3× total executor cores so AQE has room to coalesce downward.
+    set spark.sql.shuffle.partitions on the session to ~2-3× total
+    executor cores so AQE has room to coalesce downward.
     """
-    env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus and cpus.isdigit() and int(cpus) > 0:
         return int(cpus)

@@ -124,7 +124,6 @@ def stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             F.round("total_value", 4).alias("total_value"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -342,4 +341,4 @@ def foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = read_committed_version(spark, base, state, "t10")
     return final.select(
         "user_id", "n_events", F.round("total_value", 4).alias("total_value")
-    ).orderBy("user_id")
+    )

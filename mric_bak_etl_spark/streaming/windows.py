@@ -90,7 +90,6 @@ def sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("window.start").alias("window_start"), "n_events", "total_value"
         )
-        .orderBy("window_start")
     )
 
 
@@ -140,7 +139,6 @@ def session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "total_value",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -173,7 +171,6 @@ def watermark_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("window.start").alias("window_start"), "n_events")
-        .orderBy("window_start")
     )
 
 
@@ -197,7 +194,6 @@ def stateful_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.dropDuplicates(["user_id", "event_type"])
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_users"))
-        .orderBy("event_type")
     )
 
 
@@ -327,7 +323,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_attributed"),
             F.round(F.sum("value"), 4).alias("attributed_value"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -380,7 +375,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),
         )
-        .orderBy("r_name")
     )
 
 
@@ -432,7 +426,6 @@ def dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table("t11_sink")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_users"))
-        .orderBy("event_type")
     )
 
 
@@ -517,7 +510,6 @@ def sink_log_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.round(F.sum("value"), 4).alias("total_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -581,7 +573,6 @@ def streaming_sketch_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("bucket").cast("int").alias("bucket"),
             F.col("r").cast("int").alias("r"),
         )
-        .orderBy("week", "day", "bucket")
     )
 
 

@@ -41,8 +41,6 @@ TABLE_NAMES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 # Lazy-plan cache keyed by (session, table path): spark.read.parquet
 # re-infers the file schema on the DRIVER every call (~70 ms of footer

@@ -24,12 +24,13 @@ TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 # overhead — and maximum exposure to co-tenant scheduling jitter (the
 # dominant suite-wall noise on this box). Measured on test_oracle_parity
 # (299 queries, same box, minutes apart): 10:56 at 32/32 vs 7:34 at 8/8,
-# a 1.45x suite-wide lever with zero test-mass loss. Explicit env vars
-# still win (setdefault), so the 32-core posture remains one command
-# away; bench.py and the driver build their own sessions and are
-# untouched — this is fixture-scale right-sizing, not an engine change.
+# a 1.45x suite-wide lever with zero test-mass loss. The shuffle and
+# spread partition count follows SPARK_GRAFT_CPUS (session.py
+# default_parallelism), and an explicit value still wins (setdefault), so
+# the 32-core posture remains one command away; bench.py and the driver
+# build their own sessions and are untouched — this is fixture-scale
+# right-sizing, not an engine change.
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
 
 
 @pytest.fixture(scope="session", autouse=True)

@@ -1131,20 +1131,15 @@ PSKETCH_CASES = st.fixed_dictionaries(
 
 
 def render_psketch_sql(case: dict) -> str:
+    from mric_bak_etl_spark.llm.dedup import (
+        md5_bands_sql,
+        md5_signature_sql,
+        shingle_set_sql,
+    )
+
     k, nh, nb = case["k"], case["n_hashes"], case["n_bands"]
-    rpb = nh // nb
-    shingle = f"""list_distinct(list_transform(
-        range(1, greatest(len(string_split_regex(text, '\\s+')) - {k - 1}, 1) + 1),
-        i -> array_to_string(string_split_regex(text, '\\s+')[i:i+{k - 1}], ' ')
-      ))"""
-    sig = ", ".join(
-        f"list_min(list_transform(sh, s -> md5(concat('{i}:', s))))"
-        for i in range(nh)
-    )
-    band_key = ", ".join(
-        f"mh[b.band*{rpb}+{r + 1}]" for r in range(rpb)
-    )
-    bands_list = ", ".join(str(b) for b in range(nb))
+    shingle = shingle_set_sql(k)
+    sig = md5_signature_sql(nh)
     jac = (
         "CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)"
         " / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh)))"
@@ -1153,10 +1148,7 @@ def render_psketch_sql(case: dict) -> str:
     WITH corpus AS ({_PS_CORPUS_SQL}),
     sh AS (SELECT doc_id, {shingle} AS sh FROM corpus),
     sig AS (SELECT doc_id, [{sig}] AS mh FROM sh),
-    bands AS (
-      SELECT doc_id, b.band, md5(concat_ws('|', {band_key})) AS band_hash
-      FROM sig CROSS JOIN (SELECT unnest([{bands_list}]) AS band) b
-    ),
+    bands AS ({md5_bands_sql("sig", nh, nb)}),
     cands AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b
