@@ -57,7 +57,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mric_bak_etl_spark.catalog import all_specs, headline_names  # noqa: E402
-from mric_bak_etl_spark.session import get_spark  # noqa: E402
+from mric_bak_etl_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 # Headline set lives in the catalog beside the registry (catalog.HEADLINE,
 # r10 verdict task 6): headline_names() validates membership against the
@@ -101,6 +101,9 @@ def main() -> None:
     # Warm-up: one untimed pass over every query — JVM JIT, per-query
     # codegen, parquet footers, and the Python worker pool (the pandas
     # stages otherwise pay ~2 s of worker spin-up in the measured run).
+    # The codegen part holds because get_spark sizes Spark's generated-class
+    # cache to the catalog (session.CODEGEN_CACHE_ENTRIES); at Spark's
+    # default of 100 every sweep recompiled its ~1,200 classes.
     # Steady-state is what a long-lived cluster session observes.
     for name in names:
         materialize(specs[name].builder(spark, sf_dir))
@@ -113,13 +116,16 @@ def main() -> None:
     # least-contended — i.e. most plan-representative — estimate, matching
     # steady-state profiling of the same queries.
     timings: dict[str, float] = {}
+    compiles: list[int] = []  # generated classes compiled per measured sweep
     for _ in range(3):
+        before = codegen_compiles(spark)
         for name in names:
             start = time.perf_counter()
             materialize(specs[name].builder(spark, sf_dir))
             elapsed = round(time.perf_counter() - start, 3)
             if name not in timings or elapsed < timings[name]:
                 timings[name] = elapsed
+        compiles.append(codegen_compiles(spark) - before)
 
     total = round(sum(timings.values()), 3)
 
@@ -221,6 +227,7 @@ def main() -> None:
         "duck_sec": duck_timings,
         "spark_over_duck": ratios,
         "duck_slow_shed": duck_slow_shed,
+        "codegen_compiles": compiles,
     }
     try:
         side = os.path.join(

@@ -146,11 +146,16 @@ _VERIFY_HEAD: tuple[str, ...] = (
 
 
 def _ordered_specs() -> list[QuerySpec]:
+    """The whole verify queue: the head above, then every other registered
+    query in name order. Every registered query is a member, so only the
+    order carries information. Built on call, never at import: a
+    registering module imports this one, so loading every registering
+    module here at import time closes an import cycle."""
     specs = all_specs()
-    missing = [n for n in _VERIFY_FIRST if n not in specs]
-    assert not missing, f"_VERIFY_FIRST names unknown queries: {missing}"
-    head = [specs[n] for n in _VERIFY_FIRST]
-    tail = [specs[n] for n in sorted(specs) if n not in set(_VERIFY_FIRST)]
+    missing = [n for n in _VERIFY_HEAD if n not in specs]
+    assert not missing, f"_VERIFY_HEAD names unknown queries: {missing}"
+    head = [specs[n] for n in _VERIFY_HEAD]
+    tail = [specs[n] for n in sorted(specs) if n not in set(_VERIFY_HEAD)]
     return head + tail
 
 
@@ -265,10 +270,3 @@ def headline_names() -> list[str]:
     assert not missing, f"HEADLINE names unknown queries: {missing}"
     return list(HEADLINE)
 
-
-# The whole verify queue: the head above, then every other registered
-# query in name order. Every registered query is a member, so only the
-# order carries information.
-_VERIFY_FIRST: tuple[str, ...] = _VERIFY_HEAD + tuple(
-    n for n in sorted(all_specs()) if n not in set(_VERIFY_HEAD)
-)

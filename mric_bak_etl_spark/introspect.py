@@ -17,8 +17,9 @@ code without a fresh driver row. This module makes that sweep mechanical:
    show up as ``(module, name)`` references.
 3. :func:`consumers_of_changed` intersects the two: every catalog query
    whose builder (or anything it transitively calls or reads) changed
-   this round. ``tests/test_plans.py`` asserts each one appears in
-   ``catalog._VERIFY_FIRST`` so the driver collects a post-change row.
+   this round. ``tests/test_plans.py`` asserts each one appears in the
+   verify queue, ``catalog.queries()``, so the driver collects a
+   post-change row.
 
 Run it by hand while rotating the head::
 
@@ -230,7 +231,7 @@ def main(argv: list[str]) -> int:
     base = argv[1] if len(argv) > 1 else None
     from mric_bak_etl_spark import catalog
 
-    head = set(catalog._VERIFY_FIRST)
+    head = set(catalog.queries())
     hits = consumers_of_changed(base)
     missing = sorted(set(hits) - head)
     print(f"base={base or round_base_commit()}")
@@ -239,9 +240,9 @@ def main(argv: list[str]) -> int:
         syms = ", ".join(f"{m}.{n}" for m, n in sorted(hits[q]))
         print(f"{mark} {q}: {syms}")
     if missing:
-        print(f"MISSING FROM _VERIFY_FIRST: {missing}")
+        print(f"MISSING FROM the verify queue: {missing}")
         return 1
-    print(f"all {len(hits)} changed-code consumers queued in _VERIFY_FIRST")
+    print(f"all {len(hits)} changed-code consumers queued in the verify queue")
     return 0
 
 

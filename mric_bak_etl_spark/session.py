@@ -9,6 +9,23 @@ Two audiences:
   on for correctness (UTC session timezone for timestamp comparison against
   DuckDB; parquet TIMESTAMP(NANOS) read support for the events table).
 
+Every session :func:`get_spark` builds compiles each generated class once.
+Spark caches the Janino classes whole-stage codegen compiles, but only
+``spark.sql.codegen.cache.maxEntries`` of them, 100 by default, evicting
+the least recently used. The engine's working set is far larger: one
+perfbench ``llm`` sweep (5 queries) needs ~232 distinct classes and a pass
+over the whole catalog (308 queries, sf0.001) 2,914, as counted by the
+JVM's ``CodegenMetrics`` compile counter, which counts cache misses only
+(:func:`codegen_compiles`). At the default every warm pass therefore
+recompiled nearly all of its classes; :data:`CODEGEN_CACHE_ENTRIES` holds
+a whole-catalog pass, whose second run compiles 17. The cache key is the generated source, and by default the class name
+in it carries the whole-stage codegen stage id, which AQE assigns afresh on
+every run of a query; with ``spark.sql.codegen.useIdInClassName`` off, a
+re-run's identical code hits the cache (an ``llm`` sweep after the first:
+~27 compiles with the id, 0-3 without). The cache size is a static conf,
+so both are set on the builder, never through :func:`ensure_runtime_confs`;
+a session the driver builds keeps whatever values it was built with.
+
 100 TB posture: nothing here is local-mode-specific. On a real cluster the
 same session code applies — AQE handles skew-join splitting and partition
 coalescing at runtime, and ``spark.sql.shuffle.partitions`` becomes the
@@ -50,6 +67,11 @@ _RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Generated classes Spark keeps compiled per JVM, sized to the whole catalog
+# (2,914 distinct classes at sf0.001) with headroom. A constant, not a knob.
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def _shuffle_partition_conf() -> dict[str, str]:
     # Initial (pre-AQE) shuffle parallelism sized to the engine instead of
     # Spark's global default of 200: on a driver-provided session every
@@ -73,6 +95,13 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
             # over refusing to run.
             pass
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far: the count of Spark's
+    codegen compile timer, which ticks on cache misses only."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 _SCRATCH_BASE: str | None = None
@@ -122,6 +151,15 @@ def get_spark(app_name: str = "mric_bak_etl_spark", master: str | None = None) -
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores if the
     env var is unset); on a real cluster pass ``None`` and let
     spark-submit/cluster manager supply the master.
+
+    The builder also sizes Spark's generated-class cache: the static
+    ``spark.sql.codegen.cache.maxEntries`` is :data:`CODEGEN_CACHE_ENTRIES`
+    rather than 100, and class names carry no stage id, so a warm pass
+    reuses its compiled classes instead of recompiling them (an ``llm``
+    sweep: ~232 compiles per warm sweep at Spark's defaults, 0-3 here).
+    A static conf takes effect only in a new JVM: when ``getOrCreate``
+    returns a session that already exists, such as a driver's, it keeps
+    its own cache size.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -133,6 +171,8 @@ def get_spark(app_name: str = "mric_bak_etl_spark", master: str | None = None) -
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)

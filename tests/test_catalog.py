@@ -147,3 +147,31 @@ def test_shared_oracle_subplans_are_one_text():
     for fragment, names in shared.items():
         for name in names:
             assert fragment in specs[name].oracle, name
+
+
+def test_every_module_imports_first_in_a_fresh_interpreter():
+    """Each package module imports cleanly as the first import of a new
+    interpreter. In one shared process the first importer decides the
+    order, so an import cycle (a registering module importing the catalog
+    while the catalog loads every registering module) stays hidden."""
+    import subprocess
+    from concurrent.futures import ThreadPoolExecutor
+    from pathlib import Path
+
+    pkg = Path(_ROOT) / "mric_bak_etl_spark"
+    modules = sorted(
+        ".".join(p.relative_to(_ROOT).with_suffix("").parts).removesuffix(".__init__")
+        for p in pkg.rglob("*.py")
+    )
+
+    def import_alone(module: str) -> tuple[str, str]:
+        proc = subprocess.run(
+            [sys.executable, "-c", f"import {module}"],
+            cwd=_ROOT, capture_output=True, text=True,
+        )
+        tail = proc.stderr.strip().splitlines()[-1:]
+        return module, f"exit {proc.returncode}: {tail}" if proc.returncode else ""
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        failed = {m: err for m, err in pool.map(import_alone, modules) if err}
+    assert not failed, failed

@@ -725,7 +725,7 @@ def test_verify_first_covers_all_never_verified_queries():
     # and the head must contain no unknown names or duplicates — otherwise
     # a round's ~50-query budget lands on already-green entries while
     # unverified operators starve. The check is against the head, the part
-    # whose membership is a choice: _VERIFY_FIRST holds every registered
+    # whose membership is a choice: the whole queue holds every registered
     # name, so membership there is always true.
     import glob
     import json
@@ -757,12 +757,12 @@ def test_verify_first_queues_every_changed_code_consumer():
     # modules away). This sweep is the mechanical replacement: diff the
     # working tree against the driver's round-base commit, walk every
     # registered builder's transitive global references (function-local
-    # imports included), and demand a _VERIFY_FIRST slot for every query
+    # imports included), and demand a queries() slot for every query
     # whose code — builder, helper, or oracle-fragment constant — changed
     # this round, so the driver collects a post-change row for each.
     import pytest
 
-    from mric_bak_etl_spark.catalog import _VERIFY_FIRST
+    from mric_bak_etl_spark.catalog import queries
     from mric_bak_etl_spark.introspect import (
         consumers_of_changed,
         round_base_commit,
@@ -782,7 +782,7 @@ def test_verify_first_queues_every_changed_code_consumer():
     if round_base_commit() is None:
         pytest.skip("no round-base commit (fresh clone without history)")
     hits = consumers_of_changed()
-    missing = sorted(set(hits) - set(_VERIFY_FIRST))
+    missing = sorted(set(hits) - set(queries()))
     assert not missing, (
         "queries running changed code this round but not queued for a "
         "post-change driver row: "
