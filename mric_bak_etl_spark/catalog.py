@@ -35,8 +35,11 @@ Conventions that keep the value-hash compare stable (SURVEY §7 risk #4):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -103,60 +106,43 @@ def all_specs() -> dict[str, QuerySpec]:
     return dict(_REGISTRY)
 
 
-# Verification order: the head of the queue, which the time-budgeted
-# external correctness run (~50 entries a round) samples first.
-# Its contents date from round 14, whose semantic-risk surface was the
-# FINAL-ORDERBY SWEEP: all 50 non-top-k headline builders dropped their
-# presentational global sort (the external compare is declared
-# order-insensitive, __spark_entry__.py; VERDICT r13 task 1), and the
-# capped-index/bucket paths replaced collect-then-filter with a window
-# count gate (l2/l2f pair buckets, l29/l32 shared windows, l40/l40b and
-# the l42-family build_crawl_index). The head is exactly those 50
-# changed oracle-bearing queries: the 47 swept headliners that carry
-# value oracles (the 3 rows-only swept — l2, m2, l40 — are
-# value-anchored by twins/tests and sit in the tail) plus the 3 gated
-# non-headline faces (l2f, l32, l40b). tests/test_oracle_parity.py
-# value-checks every oracle-bearing query on every run, whatever its
-# place here.
-_VERIFY_HEAD: tuple[str, ...] = (
-    "a1_pricing_summary",
-    "a4_rollup", "j1_inner_equi", "j2_broadcast_dims", "j6_asof",
-    "w1_ranking", "u2b_except_all", "f5_arrays",
-    "h5_local_supplier_volume", "j8_salted_skew_join",
-    "t1_tumbling_window", "l17_semdedup", "l18_unigram_lm",
-    "e4_event_transitions", "a18_bitmap_exact_distinct",
-    "j12_interval_overlap_join", "l19_kmeans", "j15_bloom_prejoin",
-    "r21_incremental_agg", "g5_user_pagerank",
-    "l29_exact_substring_dedup", "e9_sequence_pattern",
-    "l38_incremental_exact_dedup", "w10_distributed_running_total",
-    "a26_moment_profile", "s19_replica_checksum_audit",
-    "a23b_portable_sketch_merge_rollup", "m2b_portable_feature_extract",
-    "m7_bmp_decode", "e15_srm_check",
-    "t13b_streaming_register_maintenance", "m8_bmp_channel_stats",
-    "l41_duplication_profile", "s21_schema_evolution_read",
-    "m9_wav_decode", "l26b_bpe_encode", "m10_wav_window_stats",
-    "m10b_portable_wav_window_stats", "m11_ppm_decode",
-    "m12_zip_manifest", "l26c_bpe_encode_persisted",
-    "m13_zip_deflate_manifest", "m14_zip_persisted_manifest",
-    "l42_incremental_crawl", "l43_quality_score_persisted",
-    "l42b_incremental_crawl_persisted", "l42c_crawl_index_maintenance",
-    "l2f_portable_minhash", "l32_substring_dup_clusters",
-    "l40b_portable_incremental_neardup",
-)
+_ROOT = Path(__file__).resolve().parents[1]
+
+
+def last_green_rounds() -> dict[str, int]:
+    """Each query's newest round with a green driver row, read from the
+    ``CORRECTNESS_r{N}.json`` records at the repo root. A row is green
+    when its value hash matched, or when the query has no oracle and the
+    driver ran it clean (``err == "no_oracle"``)."""
+    green: dict[str, int] = {}
+    for path in _ROOT.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        rnd = int(m.group(1))
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("hash_match") is True or row.get("err") == "no_oracle":
+                green[name] = max(rnd, green.get(name, 0))
+    return green
+
+
+def verify_order(names: Iterable[str], green: dict[str, int]) -> list[str]:
+    """Queries never green first, then the rest by ascending newest green
+    round (the row checked longest ago first), ties by name."""
+    return sorted(names, key=lambda n: (n in green, green.get(n, 0), n))
 
 
 def _ordered_specs() -> list[QuerySpec]:
-    """The whole verify queue: the head above, then every other registered
-    query in name order. Every registered query is a member, so only the
-    order carries information. Built on call, never at import: a
-    registering module imports this one, so loading every registering
-    module here at import time closes an import cycle."""
+    """The whole verify queue, every registered query once, in
+    ``verify_order`` over the committed correctness record. The external
+    correctness run checks ~50 entries a round from the front, so the
+    queries whose last driver check is oldest come up next. With no record
+    files every query counts as never green and the order is by name.
+    Built on call, never at import: a registering module imports this
+    one, so loading every registering module here at import time closes
+    an import cycle."""
     specs = all_specs()
-    missing = [n for n in _VERIFY_HEAD if n not in specs]
-    assert not missing, f"_VERIFY_HEAD names unknown queries: {missing}"
-    head = [specs[n] for n in _VERIFY_HEAD]
-    tail = [specs[n] for n in sorted(specs) if n not in set(_VERIFY_HEAD)]
-    return head + tail
+    return [specs[n] for n in verify_order(specs, last_green_rounds())]
 
 
 def queries() -> dict[str, SparkBuilder]:
@@ -176,18 +162,13 @@ def oracle_sql() -> dict[str, str]:
 # derives its run list from here via headline_names(), which validates
 # every name against the registry (a typo or a renamed query fails
 # loudly), and tests/test_catalog.py makes FORGETTING impossible: every
-# query with no driver attestation yet (first registered this round)
-# must be a member, so its first driver round benches it too.
+# query that has never been green in the driver record (first registered
+# this round) must be a member, so its first driver round benches it too.
 #
-# Design note — why a registry-level tuple and not @register(...,
-# headline=True): the introspect sweep deliberately treats any decorator
-# edit as a changed verification contract (an oracle-only edit must
-# re-enter the driver head), so flipping a kwarg on 50+ existing
-# registrations would queue them ALL for driver re-confirmation —
-# blowing the ~50-entry rotation budget on a semantically-inert change
-# at the cost of the round's real re-verification work. Bench membership
-# is not part of the correctness contract, so it lives beside the
-# registry, not inside the verified symbols.
+# Membership lives in this one tuple, not in a @register(...,
+# headline=True) kwarg: bench membership is not part of the correctness
+# contract a registration carries, and one list keeps the bench's run
+# order and its membership in one place.
 HEADLINE: tuple[str, ...] = (
     "a1_pricing_summary",   # scan + filter + multi-measure hash agg
     "a4_rollup",            # grouping sets / Expand

@@ -124,9 +124,7 @@ def map_rows(
 CPU_DENSE_PARTITION_BYTES = 32 << 20  # ~32 MB of input per compute task
 
 
-def sized_parallelism(
-    sf_dir: str, name: str, per_partition_bytes: int = CPU_DENSE_PARTITION_BYTES
-) -> int:
+def sized_parallelism(sf_dir: str, name: str) -> int:
     """Partition count proportional to INPUT BYTES, not core count.
 
     ``spread`` pins to engine parallelism, which is right when per-row CPU
@@ -153,7 +151,7 @@ def sized_parallelism(
             )
     except OSError:
         return default_parallelism()
-    n_by_bytes = max(1, -(-size // per_partition_bytes))
+    n_by_bytes = max(1, -(-size // CPU_DENSE_PARTITION_BYTES))
     return int(max(n_by_bytes, min(8, default_parallelism())))
 
 

@@ -4,27 +4,26 @@ to forget) and HEADLINE/registry consistency."""
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
 
-from mric_bak_etl_spark.catalog import HEADLINE, all_specs, headline_names
+from mric_bak_etl_spark.catalog import (
+    HEADLINE,
+    all_specs,
+    headline_names,
+    last_green_rounds,
+)
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_every_new_query_joins_the_bench_headline():
-    """A query with NO driver attestation yet (absent from every
-    committed CORRECTNESS_r*.json — i.e. first registered this round)
-    must be in catalog.HEADLINE, so its first driver round benches it
-    too. Once its first correctness row lands, membership becomes a
-    curation choice again."""
-    attested: set[str] = set()
-    for f in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
-        with open(f) as fh:
-            attested |= set(json.load(fh))
-    new = set(all_specs()) - attested
+    """A query that has never been green in the driver record (first
+    registered this round) must be in catalog.HEADLINE, so its first
+    driver round benches it too. Once it has a green row, membership
+    becomes a curation choice again."""
+    new = set(all_specs()) - set(last_green_rounds())
     missing = sorted(new - set(HEADLINE))
     assert not missing, (
         f"queries new this round are missing from the bench HEADLINE: "

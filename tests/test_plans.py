@@ -718,79 +718,61 @@ def test_user_pagerank_mass_and_isolated_nodes(spark, sf_dir):
         assert sum(rows.values()) < 1.0  # mass actually leaked
 
 
-def test_verify_first_covers_all_never_verified_queries():
-    # The load-bearing verification-order list (ADVICE r3: keep its
-    # rationale from drifting): every catalog query with no green driver
-    # CORRECTNESS row across recorded rounds must appear in _VERIFY_HEAD,
-    # and the head must contain no unknown names or duplicates — otherwise
-    # a round's ~50-query budget lands on already-green entries while
-    # unverified operators starve. The check is against the head, the part
-    # whose membership is a choice: the whole queue holds every registered
-    # name, so membership there is always true.
-    import glob
+def test_verify_order_puts_never_green_first_then_oldest_green(
+    tmp_path, monkeypatch
+):
+    # A synthetic record: "red" has only failing rows, so it counts as
+    # never green beside "new"; the rest go oldest newest-green round
+    # first, ties by name.
     import json
 
-    from mric_bak_etl_spark.catalog import _VERIFY_HEAD
+    from mric_bak_etl_spark import catalog
 
-    specs = all_specs()
-    assert len(_VERIFY_HEAD) == len(set(_VERIFY_HEAD))
-    assert not [n for n in _VERIFY_HEAD if n not in specs]
+    ok = {"hash_match": True, "err": None}
+    bad = {"hash_match": False, "err": None}
+    rows_only = {"hash_match": None, "err": "no_oracle"}
+    crashed = {"hash_match": None, "err": "boom"}
+    rounds = {
+        3: {"a": ok, "b": ok, "c": ok, "red": bad},
+        7: {"a": ok, "b": ok, "d": bad, "nohash": rows_only},
+        12: {"d": ok, "c": bad, "red": crashed},
+    }
+    for rnd, rows in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    monkeypatch.setattr(catalog, "_ROOT", tmp_path)
 
-    seen = set()
-    repo_root = Path(__file__).resolve().parents[1]
-    for path in sorted(glob.glob(str(repo_root / "CORRECTNESS_r*.json"))):
-        for name, row in json.load(open(path)).items():
-            if row.get("hash_match") is True or row.get("err") == "no_oracle":
-                seen.add(name)
-    never = {n for n in specs if n not in seen}
-    missing = never - set(_VERIFY_HEAD)
-    assert not missing, (
-        f"{len(missing)} never-driver-verified queries absent from "
-        f"_VERIFY_HEAD: {sorted(missing)}"
-    )
+    green = catalog.last_green_rounds()
+    assert green == {"a": 7, "b": 7, "c": 3, "d": 12, "nohash": 7}
+    names = ["d", "red", "a", "nohash", "c", "new", "b"]
+    assert catalog.verify_order(names, green) == [
+        "new", "red", "c", "a", "b", "nohash", "d"
+    ]
+    assert catalog.verify_order(names, {}) == sorted(names)
 
 
-def test_verify_first_queues_every_changed_code_consumer():
-    # Round-8 post-mortem (r8 verdict task 2): the shared stream_events
-    # helper changed and the hand-maintained re-confirmation block missed
-    # one of its six registered consumers (s16, a transitive consumer two
-    # modules away). This sweep is the mechanical replacement: diff the
-    # working tree against the driver's round-base commit, walk every
-    # registered builder's transitive global references (function-local
-    # imports included), and demand a queries() slot for every query
-    # whose code — builder, helper, or oracle-fragment constant — changed
-    # this round, so the driver collects a post-change row for each.
-    import pytest
+def test_verify_first_covers_all_never_verified_queries():
+    # The driver checks ~50 queries a round from the front of queries().
+    # On the committed record: the never-green names form the queue's
+    # prefix, and its first name's last green round is the oldest of all.
+    from mric_bak_etl_spark.catalog import last_green_rounds, queries
 
-    from mric_bak_etl_spark.catalog import queries
-    from mric_bak_etl_spark.introspect import (
-        consumers_of_changed,
-        round_base_commit,
-    )
+    green = last_green_rounds()
+    names = list(queries())
+    assert sorted(names) == sorted(all_specs())
+    never = [n for n in names if n not in green]
+    assert names[: len(never)] == never
+    assert green.get(names[0], 0) == min(green.get(n, 0) for n in names)
 
-    # Decorator-only edits must be visible: most verification contracts
-    # (oracle SQL, docs) live inside @register(...) decorators, which
-    # ast.get_source_segment EXCLUDES from the bare node — an oracle fix
-    # was invisible to the sweep until the segment was widened (round-9
-    # review finding, reproduced on t10).
-    from mric_bak_etl_spark.introspect import _top_level_symbols
 
-    a = "@register('q', oracle='SELECT 1')\ndef f():\n    return 1\n"
-    b = "@register('q', oracle='SELECT 2')\ndef f():\n    return 1\n"
-    assert _top_level_symbols(a)["f"] != _top_level_symbols(b)["f"]
+def test_verify_head_is_not_the_last_round_checked():
+    # Re-checking the newest round's green rows first would starve the
+    # rows checked longest ago.
+    from mric_bak_etl_spark.catalog import last_green_rounds, queries
 
-    if round_base_commit() is None:
-        pytest.skip("no round-base commit (fresh clone without history)")
-    hits = consumers_of_changed()
-    missing = sorted(set(hits) - set(queries()))
-    assert not missing, (
-        "queries running changed code this round but not queued for a "
-        "post-change driver row: "
-        + "; ".join(
-            f"{q} (via {', '.join(f'{m}.{n}' for m, n in sorted(hits[q]))})"
-            for q in missing
-        )
-    )
+    green = last_green_rounds()
+    newest = max(green.values())
+    head = list(queries())[:50]
+    assert not [n for n in head if green.get(n) == newest]
 
 
 def test_duplication_profile_shuffles_hashes_not_text(catalog_plan):
