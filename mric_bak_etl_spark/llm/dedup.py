@@ -226,24 +226,17 @@ def shingle_hashes(text_col: str = "text", k: int = SHINGLE_K) -> Column:
     )
 
 
-def minhash_signatures(corpus: DataFrame, n_hashes: int = N_MINHASHES) -> DataFrame:
-    """doc_id → n_hashes MinHash values, computed NARROWLY: each signature
-    slot is array_min over the doc's shingle-hash array re-hashed with the
-    slot seed — a per-row expression, so the whole signature stage is
-    map-side with ZERO shuffle. (The explode + groupBy(doc_id) formulation
-    computes identical values but shuffles the full shingle stream —
+def minhash_signatures(sh: DataFrame, n_hashes: int = N_MINHASHES) -> DataFrame:
+    """(doc_id, sh) shingle-hash table → doc_id + n_hashes MinHash values,
+    computed NARROWLY: each signature slot is array_min over the doc's
+    shingle-hash array re-hashed with the slot seed — a per-row
+    expression, so the whole signature stage is map-side with ZERO
+    shuffle. (The explode + groupBy(doc_id) formulation computes
+    identical values but shuffles the full shingle stream —
     |docs|·|shingles| rows — just to regroup rows that started co-located;
-    at 100 TB that shuffle dominates the whole dedup pipeline.)"""
-    # Materialize the shingle array in its own projection so the 16 slot
-    # expressions share ONE tokenize+hash evaluation (higher-order funcs
-    # fall outside codegen subexpression elimination). Accepts a frame
-    # that already carries `sh` (the materialized shingle table) so the
-    # LSH pipeline tokenizes the corpus exactly once.
-    sh = (
-        corpus
-        if "sh" in corpus.columns
-        else corpus.select("doc_id", shingle_hashes().alias("sh"))
-    )
+    at 100 TB that shuffle dominates the whole dedup pipeline.) Callers
+    build the shingle table once (``shingle_hashes()``) and share it with
+    the exact verify, so the corpus is tokenized exactly once."""
 
     def slot(i: int) -> Column:
         # Single-arg lambda: a 2-arg lambda would be bound by transform()
@@ -309,10 +302,16 @@ def band_hashes(signatures: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     )
 
 
-def bucket_sizes(bands: DataFrame) -> DataFrame:
-    """``bands`` plus ``n``: the posting count of each row's
-    (band, band_hash) bucket — the one gate every capped LSH path
-    (l2/l2f, l40/l40b, the l42 crawl index) filters on.
+def bucket_sizes(rows: DataFrame, *keys: str) -> DataFrame:
+    """``rows`` plus ``n``: the row count of each row's bucket, keyed by
+    the ``keys`` columns — the one cap gate every capped dedup path on
+    row-level input filters on: (band, band_hash) for l2/l2f, l40/l40b
+    and the l42 crawl index, the 40-char window ``win`` for l29/l32.
+
+    Precondition: count(*) is the MEMBER count only when (member, key)
+    rows are unique. Band rows are (one per doc per band); window rows
+    are not until deduped, since a window can repeat inside one
+    document — :func:`_shared_window_buckets` takes the distinct first.
 
     The count is a WINDOW over the bucket key, taken BEFORE anything is
     collected (optimization r14, guide §2.5/§5): collecting a bucket's
@@ -321,11 +320,43 @@ def bucket_sizes(bands: DataFrame) -> DataFrame:
     buffers (a viral band at 100 TB = one task's OOM). The window rides
     one exchange on the bucket key, its row buffer spills, and the rows
     pass through as-is, so callers cap on ``n`` with no collect, no
-    re-explode and no anti-join. (doc_id, band) rows are unique per doc,
-    so count(*) IS the posting count.
+    re-explode and no anti-join. A count-then-broadcast gate returns the
+    same rows but measured slower at sf0.1 (ROADMAP direction 3).
     """
-    return bands.withColumn(
-        "n", F.count(F.lit(1)).over(Window.partitionBy("band", "band_hash"))
+    return rows.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+
+
+def _capped_buckets(rows: DataFrame, cap: int, *keys: str) -> DataFrame:
+    """One row per bucket of 2..``cap`` members: the ``keys`` plus
+    ``ids``, the sorted ``doc_id`` array. Buckets are sized by
+    :func:`bucket_sizes` (same precondition) before any is collected."""
+    return (
+        bucket_sizes(rows, *keys)
+        .filter((F.col("n") > 1) & (F.col("n") <= cap))
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
+    )
+
+
+def _bucket_pairs(buckets: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b, for every pair inside each bucket
+    row's ``ids`` array — expanded JVM-side (nested transform + filter +
+    explode), never by self-joining the rows the buckets came from. A
+    pair shared by several buckets repeats once per bucket: l2/l2f take
+    a distinct, l29 counts the repeats as shared windows."""
+    pair_structs = F.filter(
+        F.flatten(
+            F.transform(
+                "ids",
+                lambda a: F.transform(
+                    "ids", lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b"))
+                ),
+            )
+        ),
+        lambda p: p["doc_a"] < p["doc_b"],
+    )
+    return buckets.select(F.explode(pair_structs).alias("p")).select(
+        "p.doc_a", "p.doc_b"
     )
 
 
@@ -341,10 +372,10 @@ def lsh_candidate_pairs(signatures: DataFrame, n_bands: int = N_BANDS) -> DataFr
 
     Only bucket-colliding pairs surface — the step that replaces the O(n²)
     pair space at scale. Pairing is done by grouping the bucket's members
-    and expanding i<j combinations JVM-side (collect_list + nested
-    transform), not by self-joining the banded table: a self-join would
-    evaluate the whole signature DAG twice, and its shuffle carries the
-    banded rows two times. Buckets over ``L2_MAX_BUCKET`` are dropped.
+    and expanding i<j combinations JVM-side (:func:`_bucket_pairs`), not by
+    self-joining the banded table: a self-join would evaluate the whole
+    signature DAG twice, and its shuffle carries the banded rows two
+    times. Buckets over ``L2_MAX_BUCKET`` are dropped.
     """
     return _pairs_from_bands(band_hashes(signatures, n_bands))
 
@@ -353,38 +384,17 @@ def _pairs_from_bands(bands: DataFrame) -> DataFrame:
     """(band, band_hash)-bucketed pair expansion shared by the xxhash64 LSH
     (l2) and the portable md5 LSH (l2f) — band_hash may be int64 or string;
     the grouping and i<j expansion are type-agnostic. Only buckets of
-    2..L2_MAX_BUCKET postings (:func:`bucket_sizes`) reach the collect.
+    2..L2_MAX_BUCKET postings reach the collect.
     """
-    buckets = (
-        bucket_sizes(bands)
-        .filter((F.col("n") > 1) & (F.col("n") <= L2_MAX_BUCKET))
-        .groupBy("band", "band_hash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-    )
-    pair_structs = F.filter(
-        F.flatten(
-            F.transform(
-                "ids",
-                lambda a: F.transform(
-                    "ids", lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b"))
-                ),
-            )
-        ),
-        lambda p: p["doc_a"] < p["doc_b"],
-    )
-    return (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    buckets = _capped_buckets(bands, L2_MAX_BUCKET, "band", "band_hash")
+    return _bucket_pairs(buckets).distinct()
 
 
-def exact_jaccard(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
+def exact_jaccard(sh: DataFrame, pairs: DataFrame) -> DataFrame:
     """Verify candidate pairs with exact shingle Jaccard (array ops, no
-    re-explode): |A∩B| / |A∪B| over the distinct shingle sets.
-
-    Sets are hashed shingles (int64), so the intersect/union compares
-    longs, not strings; Jaccard is identical modulo 64-bit collisions.
+    re-explode): |A∩B| / |A∪B| over the distinct shingle sets of the
+    (doc_id, sh) table ``sh`` — int64 hashes for l2 (Jaccard identical
+    modulo 64-bit collisions), the strings its portable hash needs for l2f.
 
     The pair side is small (LSH survivors), so it broadcasts. Rather than
     joining the corpus once per pair side (two full tokenize+shingle
@@ -395,11 +405,6 @@ def exact_jaccard(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
     At cluster scale, the melted side doubles as the semi-join prune: the
     join itself discards every non-candidate document.
     """
-    sh = (
-        corpus.select("doc_id", "sh")
-        if "sh" in corpus.columns
-        else corpus.select("doc_id", shingle_hashes().alias("sh"))
-    )
     melted = pairs.select(
         "doc_a",
         "doc_b",
@@ -407,7 +412,7 @@ def exact_jaccard(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
     )
     return (
         F.broadcast(melted)
-        .join(sh, "doc_id")
+        .join(sh.select("doc_id", "sh"), "doc_id")
         .groupBy("doc_a", "doc_b")
         .agg(
             F.first(F.when(F.col("doc_id") == F.col("doc_a"), F.col("sh")), ignorenulls=True).alias("sh_a"),
@@ -720,6 +725,8 @@ def _segment(col: Column, seg: int) -> Column:
     tags=("llm", "dedup"),
 )
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Own pair expansion, not :func:`_bucket_pairs`: each pair carries
+    its hamming distance, computed and filtered inside the expansion."""
     corpus = corpus_with_near_dups(spark, sf_dir)
     fp = simhash_bits(corpus)
     segs = fp.select(
@@ -1306,7 +1313,7 @@ L29_STOP_CAP = 50
 )
 def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Optimization r13 (guide §2.4 / §2.3): pairs come from the bucket
-    # table's i<j expansion (the _pairs_from_bands idiom) instead of a
+    # table's i<j expansion (_bucket_pairs, l2's too) instead of a
     # banded-table SELF-join — the old form shuffled the survivor set
     # twice on the 40-char window key and needed the set pinned
     # (localCheckpoint) to avoid re-running the corpus lineage per join
@@ -1314,22 +1321,8 @@ def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin, the frequency-band join and both self-join exchanges all
     # disappear. Pair multiset is identical: each window contributes
     # exactly its C(k, 2) ordered pairs.
-    buckets = _shared_window_buckets(spark, sf_dir)
-    pair_structs = F.filter(
-        F.flatten(
-            F.transform(
-                "ids",
-                lambda a: F.transform(
-                    "ids",
-                    lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b")),
-                ),
-            )
-        ),
-        lambda p: p["doc_a"] < p["doc_b"],
-    )
     return (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.doc_a", "p.doc_b")
+        _bucket_pairs(_shared_window_buckets(spark, sf_dir))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared_windows"))
     )
@@ -1339,14 +1332,16 @@ def _shared_window_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l29/l32 shared core, bucket-grain (optimization r13): one row per
     surviving window — (win, ids), where ids is the SORTED distinct
     doc set of every window whose exact string appears in
-    2..L29_STOP_CAP documents. Replaces the former row-grain survivor
-    set + localCheckpoint + frequency-band join: collect_set performs
-    the (doc_id, win) dedup, size(ids) IS the distinct-doc frequency,
-    and both consumers (l29's pair expansion, l32's star edges) read
-    the buckets exactly once — no pin, one exchange fewer, and the
-    window strings shuffle once instead of three times."""
-    from mric_bak_etl_spark.tables import spread
+    2..L29_STOP_CAP documents. Both consumers (l29's pair expansion,
+    l32's star edges) read the buckets exactly once — no pin, and the
+    window strings shuffle once.
 
+    The cap is l2's: the hash-surviving (doc_id, win) rows take a
+    distinct — a window can repeat inside one document, and
+    :func:`bucket_sizes` counts rows — then :func:`_capped_buckets`
+    gates them on the window count before any doc set is collected.
+    ``spread(..., "doc_id")`` already hash-partitions the rows by
+    doc_id, so the distinct adds no exchange."""
     # spread(): documents.parquet is one input split at test scale — the
     # explode/hash pass must fan out to engine parallelism first.
     docs = spread(
@@ -1379,29 +1374,17 @@ def _shared_window_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Pass 2: map-side re-derivation of the window strings for surviving
     # hashes only (AQE broadcasts shared_h — it is duplication-sized),
-    # then ONE groupBy(win) builds the buckets: collect_set dedups
-    # (doc_id, win) occurrences — the former separate distinct shuffle —
-    # and the [2, cap] frequency band gates BEFORE the set is collected
-    # (optimization r14, guide §2.5/§5): pass 1 only proves >= 2 distinct
-    # docs, so a boilerplate window in 10^6 docs would otherwise collect
-    # its whole doc set into one unspillable aggregation buffer just to
-    # be size-filtered away. dense_rank over (win, doc_id) + max over the
-    # same partition is the exact distinct-doc count ((doc_id, win) can
-    # repeat within a doc — count(*) would over-count); both windows and
-    # the collect ride ONE exchange, and the window row buffers spill.
-    ww = Window.partitionBy("win")
-    return (
+    # then the exact string-frequency cap and ONE groupBy(win).
+    wins = (
         exploded.select(
             "doc_id", F.expr(f"substring(text, p, {L29_WIN})").alias("win")
         )
         .withColumn("h", F.xxhash64("win"))
         .join(shared_h, "h")
-        .withColumn("dr", F.dense_rank().over(ww.orderBy("doc_id")))
-        .withColumn("nd", F.max("dr").over(ww))
-        .filter(F.col("nd").between(2, L29_STOP_CAP))
-        .groupBy("win")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("ids"))
+        .select("doc_id", "win")
+        .distinct()
     )
+    return _capped_buckets(wins, L29_STOP_CAP, "win")
 
 
 # Shared CTE text: the l29 survivor set, string-grain, for oracles that
@@ -1754,7 +1737,7 @@ def _banded_probe(
     # ONE tokenize+shingle pass per side serves signatures AND the verify.
     corpus_sh = materialize(corpus.select("doc_id", shingle().alias("sh")))
     capped_index = (
-        bucket_sizes(bands(corpus_sh))
+        bucket_sizes(bands(corpus_sh), "band", "band_hash")
         .filter(F.col("n") <= L40_MAX_POSTING)
         .select(F.col("doc_id").alias("match_doc"), "band", "band_hash")
     )
@@ -1840,7 +1823,8 @@ def _banded_probe(
     "Index build: corpus → shingle hashes → narrow minhash signatures "
     "→ (doc_id, band, band_hash) via band_hashes(); posting lists "
     "longer than L40_MAX_POSTING are dropped AT INDEX BUILD as "
-    "boilerplate by the bucket_sizes() window count — one exchange on "
+    "boilerplate by the dedup family's one cap gate (bucket_sizes, "
+    "shared with l2/l29/l42): a window count with one exchange on "
     "the bucket key whose row buffer spills, no posting list collected "
     "(planted here as L40_BOILER_COPIES identical disclaimer docs "
     "whose bands exceed the cap at every SF). Probe: the new-batch "
@@ -1930,8 +1914,8 @@ def incremental_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="L40b: l40's incremental banded near-dup on the PORTABLE hash "
     "family (l2f's md5 signatures and band keys) — identical plan shape "
     "to l40: capped band index built once from the corpus (+ the planted "
-    "boilerplate block, whose over-cap postings the build drops by the "
-    "bucket_sizes() window count), the new batch's bands broadcast onto the "
+    "boilerplate block, whose over-cap postings the build drops at the "
+    "one cap gate, bucket_sizes), the new batch's bands broadcast onto the "
     "capped index, exact string-shingle Jaccard >= 0.5 on band survivors "
     "only. Because every intermediate is engine-neutral md5, this twin "
     "carries a FULL value oracle: DuckDB rebuilds the same index, drops "
@@ -2100,7 +2084,7 @@ def build_crawl_index(
     self-contained oracle face: the distinct content-hash set (l38's
     index), the CAPPED portable band table (l40's index on l2f's md5
     family; buckets holding more than ``cap`` docs dropped at build by
-    the :func:`bucket_sizes` window count), and the full
+    the :func:`bucket_sizes` gate), and the full
     per-bucket COUNT table (band, band_hash, n) over ALL buckets
     including hot ones. The counts are one row per distinct bucket —
     tiny next to the postings — and are what make the cap INCREMENTALLY
@@ -2118,7 +2102,7 @@ def build_crawl_index(
     # table is the under-cap rows passed through, the count table a
     # distinct over the same windowed rows (already partitioned by the
     # bucket key — no further exchange), covering hot buckets too.
-    gated = bucket_sizes(index_bands)
+    gated = bucket_sizes(index_bands, "band", "band_hash")
     counts = gated.select("band", "band_hash", "n").distinct()
     # Column order (band, band_hash, doc_id) matches the r12 artifact
     # layout (the pre-r13 USING-join put keys first); the l42c fold's
@@ -2718,30 +2702,22 @@ def publish_crawl_index(spark: SparkSession, sf_dir: str) -> str:
                 )
             ).alias("nulls"),
         ).collect()[0]
-        cap_row = (
-            b.groupBy("band", "band_hash")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("max_posting"))
-            .collect()[0]
-        )
         # Cross-table invariant: the capped band table must hold EXACTLY
         # the postings of the count table's under-cap buckets — a packer
         # that dropped the wrong buckets (or a stale counts write) shows up
         # as a mismatch row. Both sides are bucket-grain (tiny next to the
-        # postings); one join, one count.
+        # postings); one join, one job. The full outer join keeps every
+        # staged bucket, so the largest staged posting list comes off the
+        # same rows.
         c = spark.read.parquet(os.path.join(staging, "counts"))
         staged_counts = b.groupBy("band", "band_hash").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_b")
         )
-        mismatches = (
+        mismatches, max_posting = (
             c.filter(F.col("n") <= L42_MAX_POSTING)
             .join(staged_counts, ["band", "band_hash"], "full_outer")
-            .filter(
-                F.col("n").isNull()
-                | F.col("n_b").isNull()
-                | (F.col("n") != F.col("n_b"))
-            )
-            .count()
+            .agg(F.count_if(~F.col("n").eqNullSafe(F.col("n_b"))), F.max("n_b"))
+            .collect()[0]
         )
         # The duplication-regime annotation (counts over ALL buckets).
         c_row = c.agg(
@@ -2770,13 +2746,13 @@ def publish_crawl_index(spark: SparkSession, sf_dir: str) -> str:
                 b_row["n"] == 0
                 or (0 <= b_row["min_band"] and b_row["max_band"] < N_BANDS)
             )
-            and (cap_row["max_posting"] or 0) <= L42_MAX_POSTING
+            and (max_posting or 0) <= L42_MAX_POSTING
             and mismatches == 0
         )
         if not ok:
             raise ValueError(
                 f"crawl-index audit failed (hashes {tuple(h_row)}, bands "
-                f"{tuple(b_row)}, max_posting {tuple(cap_row)}, "
+                f"{tuple(b_row)}, max_posting {max_posting}, "
                 f"count mismatches {mismatches}) — NOT published"
             )
         spark.createDataFrame(
@@ -2991,7 +2967,10 @@ def make_crawl_index_append_sink(
     bucket-grain count merge + ONE index-sized union-anti-join write —
     no corpus re-signature anywhere (the ×100 probe curve's dominant
     term, SCALE.md round-12, now amortizes across the corpus's whole
-    life, not just until the next append)."""
+    life, not just until the next append).
+
+    The fold caps against the PERSISTED count tables, not through
+    :func:`bucket_sizes`: it has no row-level input to count."""
     import os
 
     from mric_bak_etl_spark.tables import materialize

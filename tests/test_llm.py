@@ -65,7 +65,10 @@ def test_lsh_candidate_stage_does_not_flood(spark, sf_dir):
 
 
 def test_minhash_signature_shape(spark, sf_dir):
-    sigs = minhash_signatures(corpus_with_near_dups(spark, sf_dir))
+    sh = corpus_with_near_dups(spark, sf_dir).select(
+        "doc_id", shingle_hashes().alias("sh")
+    )
+    sigs = minhash_signatures(sh)
     assert len([c for c in sigs.columns if c.startswith("mh_")]) == 16
     # Signatures are deterministic across evaluations.
     a = sorted(map(tuple, sigs.collect()))
@@ -664,6 +667,7 @@ def test_banded_incremental_posting_cap(spark, sf_dir):
         L40_MAX_POSTING,
         _L40_BOILER_TEXT,
         band_hashes,
+        bucket_sizes,
         minhash_signatures,
         shingle_hashes,
     )
@@ -677,19 +681,19 @@ def test_banded_incremental_posting_cap(spark, sf_dir):
     corpus_sh = d.unionByName(boiler).select(
         "doc_id", shingle_hashes().alias("sh")
     )
-    index = band_hashes(minhash_signatures(corpus_sh))
-    sizes = index.groupBy("band", "band_hash").agg(
-        F.count(F.lit(1)).alias("n_docs"),
+    # The gate l40 runs: bucket_sizes' posting count, capped at build.
+    gated = bucket_sizes(
+        band_hashes(minhash_signatures(corpus_sh)), "band", "band_hash"
+    )
+    sizes = gated.groupBy("band", "band_hash").agg(
+        F.max("n").alias("n_docs"),
         F.max(F.col("doc_id") >= 8_000_000).alias("has_boiler"),
     )
     boiler_buckets = sizes.filter("has_boiler").collect()
     assert boiler_buckets, "boilerplate produced no buckets"
     assert all(r["n_docs"] >= L40_BOILER_COPIES for r in boiler_buckets)
     assert all(r["n_docs"] > L40_MAX_POSTING for r in boiler_buckets)
-    capped = index.join(
-        sizes.filter(F.col("n_docs") <= L40_MAX_POSTING),
-        ["band", "band_hash"],
-    )
+    capped = gated.filter(F.col("n") <= L40_MAX_POSTING)
     assert capped.filter(F.col("doc_id") >= 8_000_000).count() == 0
 
 

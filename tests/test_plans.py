@@ -889,6 +889,20 @@ def test_incremental_dedup_plans_are_hash_joins(catalog_plan):
         assert "Window" in plan, (name, plan[:400])
 
 
+def test_substring_dedup_caps_windows_with_the_shared_gate(
+    spark, sf_dir, catalog_plan
+):
+    # l29/l32 cap windows with bucket_sizes' count, not a private
+    # dense_rank + max pair (l32's own plan starts past its checkpoint).
+    from mric_bak_etl_spark.llm.dedup import _shared_window_buckets
+
+    for plan in (
+        catalog_plan("l29_exact_substring_dedup"),
+        plan_of(_shared_window_buckets(spark, sf_dir)),
+    ):
+        assert "Window" in plan and "dense_rank" not in plan, plan[:400]
+
+
 def test_python_round_only_in_l33_clamp():
     # Convention guard (r4 advice, applied repo-wide in r5): output
     # quantization happens via F.round in Spark projections (half-away,
