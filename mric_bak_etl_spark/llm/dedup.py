@@ -2643,7 +2643,7 @@ def incremental_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _crawl_index_artifact_base(sf_dir: str) -> str:
     """Keyed by the index config: hash family, band geometry, posting
     cap."""
-    config = f"crawlidx-v2-md5x{N_MINHASHES}-b{N_BANDS}-cap{L42_MAX_POSTING}"
+    config = f"crawlidx-v3-md5x{N_MINHASHES}-b{N_BANDS}-cap{L42_MAX_POSTING}"
     return artifact_dir(
         sf_dir, "documents", "mric_crawl_index_artifacts", config
     )
@@ -2922,7 +2922,7 @@ def _crawl_maint_artifact_base(sf_dir: str) -> str:
     """Keyed by l42b's index config, under its own root: the maintained
     artifact's content also depends on the fold history (v1, v2, ...)."""
     config = (
-        f"crawlmaint-v1-md5x{N_MINHASHES}-b{N_BANDS}-cap{L42_MAX_POSTING}"
+        f"crawlmaint-v2-md5x{N_MINHASHES}-b{N_BANDS}-cap{L42_MAX_POSTING}"
     )
     return artifact_dir(
         sf_dir, "documents", "mric_crawl_maint_artifacts", config

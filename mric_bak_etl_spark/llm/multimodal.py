@@ -1640,7 +1640,7 @@ def _decode_persisted_row(mid: int, blob: bytes) -> Iterator[tuple]:
 
 def _archive_artifact_base(sf_dir: str) -> str:
     """Keyed by the packer config (one version tag)."""
-    config = "zipcol-v1-m14"
+    config = "zipcol-v2-m14"
     return artifact_dir(sf_dir, "documents", "mric_media_artifacts", config)
 
 

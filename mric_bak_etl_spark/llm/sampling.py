@@ -644,13 +644,14 @@ def logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _model_artifact_base(sf_dir: str) -> str:
     """Keyed by the trainer config: rounds, learning rate."""
-    config = f"logreg-v1-r{L33_ROUNDS}-lr{L33_LR}"
+    config = f"logreg-v2-r{L33_ROUNDS}-lr{L33_LR}"
     return artifact_dir(sf_dir, "documents", "mric_model_artifacts", config)
 
 
 def _audit_model_rows(rows) -> bool:
     """The weight-table contract: exactly one row, every weight non-null
-    and finite. Run at publish AND at every load."""
+    and finite. Run on the staged rows at publish; a load trusts the
+    published dir's manifest (`artifacts.publish`)."""
     import math
 
     return len(rows) == 1 and all(
@@ -685,18 +686,10 @@ def publish_model(spark: SparkSession, sf_dir: str) -> str:
 
 def load_model(spark: SparkSession, sf_dir: str) -> tuple[float, float, float]:
     """The apply-only artifact read: one row, three doubles — model
-    state, not data (the l19/g1 driver-boundary rule). The publish-time
-    audit re-runs here (the l26c load-audit lesson): a published dir
-    that violates the one-finite-row contract was planted or tampered
-    with and must be refused loudly."""
-    path = publish_model(spark, sf_dir)
-    rows = spark.read.parquet(path).collect()
-    if not _audit_model_rows(rows):
-        raise ValueError(
-            f"published model at {path} violates its audit contract — "
-            f"artifact tampered or stale; delete it to retrain"
-        )
-    r = rows[0]
+    state, not data (the l19/g1 driver-boundary rule). A published dir
+    that does not match its manifest was planted or tampered with:
+    `artifacts.publish` refuses it loudly."""
+    (r,) = spark.read.parquet(publish_model(spark, sf_dir)).collect()
     return r["bias"], r["w_len"], r["w_aux"]
 
 
@@ -738,8 +731,8 @@ _L43_FEATS = """
     "final artifact kind (l26c = tokenizer merges, m14 = media blobs, "
     "l43 = MODEL WEIGHTS): l33 trains the logistic model, publish_model "
     "ships its 3 doubles once per corpus fingerprint (write → audit → "
-    "one atomic rename under the user-owned cache; audit re-run at "
-    "load, the l26c lesson), and the steady-state scoring job is what "
+    "one atomic rename under the user-owned cache; loads must match "
+    "the publish manifest), and the steady-state scoring job is what "
     "a crawl actually runs — read one row, inline the weights into a "
     "closed-form sigmoid expression, ONE corpus scan feeding a "
     "map-side-combined per-language aggregate. No training stage "
@@ -916,9 +909,8 @@ def curation_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "sampling", "scale"),
 )
 def epoch_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from mric_bak_etl_spark.tables import materialize, sized_parallelism
+    from mric_bak_etl_spark.operators.sort import global_row_number
+    from mric_bak_etl_spark.tables import sized_parallelism
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -926,27 +918,10 @@ def epoch_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("doc_id") * 2654435761) % 2147483648).alias("shuffle_key"),
     )
     n = sized_parallelism(sf_dir, "documents")
-    parts = materialize(
-        d.repartitionByRange(n, "shuffle_key", "doc_id").withColumn(
-            "pid", F.spark_partition_id()
-        )
-    )
-    counts = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("off")
-    )
-    w_local = Window.partitionBy("pid").orderBy("shuffle_key", "doc_id")
-    ranked = (
-        parts.withColumn("local_rn", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), "pid")
-        .select(
-            (F.col("off") + F.col("local_rn")).cast("bigint").alias(
-                "epoch_rank"
-            ),
-            "doc_id",
-            "lang",
-            F.col("shuffle_key").cast("bigint").alias("shuffle_key"),
-        )
+    ranked = global_row_number(d, n, "shuffle_key", "doc_id").select(
+        F.col("rn").alias("epoch_rank"),
+        "doc_id",
+        "lang",
+        F.col("shuffle_key").cast("bigint").alias("shuffle_key"),
     )
     return ranked.filter(F.col("epoch_rank") % 37 == 0)

@@ -800,7 +800,7 @@ def _ann_artifact_base(sf_dir: str) -> str:
     """Keyed by the full index config: k-means seeding and rounds, PQ
     geometry, nprobe."""
     config = (
-        f"annidx-v1-km{KMEANS_K_MOD}r{KMEANS_ROUNDS}"
+        f"annidx-v2-km{KMEANS_K_MOD}r{KMEANS_ROUNDS}"
         f"-pq{PQ_M}x{PQ_K}-np{ANN_NPROBE}"
     )
     return artifact_dir(sf_dir, "embeddings", "mric_ann_artifacts", config)
@@ -820,11 +820,12 @@ def publish_ann_index(spark: SparkSession, sf_dir: str) -> str:
       filter becomes parquet PARTITION PRUNING: the scan physically reads
       ~nprobe/k of the code files, no join needed to select candidates.
 
-    Audit (from the staged parquet): the centroid and codebook shape
-    that `load_ann_index` re-verifies (`_audit_ann_shape`), at most one
-    centroid per deterministic seed; the code table covers every corpus
-    vector exactly PQ_M times, codes in [0, PQ_K), and every cell id is
-    a real centroid id. Then one atomic rename (`artifacts.publish`).
+    Audit (from the staged parquet): at least one and at most one
+    centroid per deterministic seed, no null ids, full-width 64-dim
+    vectors; exactly PQ_M x PQ_K codebook rows of PQ_D-dim centroids;
+    the code table covers every corpus vector exactly PQ_M times, codes
+    in [0, PQ_K), and every cell id is a real centroid id. Then one
+    atomic rename (`artifacts.publish`).
 
     At 100 TB: train on a sample, assign + encode in one corpus scan at
     ingest; a query then costs a k-row centroid read, a partition-pruned
@@ -863,7 +864,18 @@ def publish_ann_index(spark: SparkSession, sf_dir: str) -> str:
 
         n_corpus = e_raw.count()
         n_seeds = e_raw.filter(F.col("vec_id") % KMEANS_K_MOD == 0).count()
-        c, _, c_row, cb_row, shape_ok = _audit_ann_shape(spark, staging)
+        c = spark.read.parquet(os.path.join(staging, "centroids"))
+        c_row = c.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.size("cv")).alias("min_dim"),
+            F.max(F.size("cv")).alias("max_dim"),
+            F.sum(F.col("cid").isNull().cast("int")).alias("nulls"),
+        ).collect()[0]
+        cb_row = spark.read.parquet(os.path.join(staging, "codebook")).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.size("cent")).alias("min_dim"),
+            F.max(F.size("cent")).alias("max_dim"),
+        ).collect()[0]
         k = spark.read.parquet(os.path.join(staging, "codes"))
         k_row = k.agg(
             F.count(F.lit(1)).alias("n"),
@@ -882,8 +894,11 @@ def publish_ann_index(spark: SparkSession, sf_dir: str) -> str:
         # the x10 verbatim-copy probe corpus found exactly this), so the
         # centroid count is bounded by the seed count, not equal to it.
         ok = (
-            shape_ok
-            and c_row["n"] <= n_seeds
+            1 <= c_row["n"] <= n_seeds
+            and (c_row["nulls"] or 0) == 0
+            and c_row["min_dim"] == c_row["max_dim"] == 64
+            and cb_row["n"] == PQ_M * PQ_K
+            and cb_row["min_dim"] == cb_row["max_dim"] == PQ_D
             and k_row["n"] == n_corpus * PQ_M
             and k_row["n_vecs"] == n_corpus
             and (k_row["min_code"] or 0) >= 0
@@ -901,58 +916,20 @@ def publish_ann_index(spark: SparkSession, sf_dir: str) -> str:
     return publish(os.path.join(base, "published"), write)
 
 
-def _audit_ann_shape(spark: SparkSession, path: str):
-    """The centroid and codebook checks that publish and load share:
-    at least one centroid, no null ids, full-width 64-dim vectors, and
-    exactly PQ_M x PQ_K codebook rows of PQ_D-dim centroids. One job per
-    table. Returns (centroids, codebook, centroid row, codebook row,
-    ok)."""
-    import os
-
-    c = spark.read.parquet(os.path.join(path, "centroids"))
-    c_row = c.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.size("cv")).alias("min_dim"),
-        F.max(F.size("cv")).alias("max_dim"),
-        F.sum(F.col("cid").isNull().cast("int")).alias("nulls"),
-    ).collect()[0]
-    cb = spark.read.parquet(os.path.join(path, "codebook"))
-    cb_row = cb.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.size("cent")).alias("min_dim"),
-        F.max(F.size("cent")).alias("max_dim"),
-    ).collect()[0]
-    ok = (
-        c_row["n"] >= 1
-        and (c_row["nulls"] or 0) == 0
-        and c_row["min_dim"] == c_row["max_dim"] == 64
-        and cb_row["n"] == PQ_M * PQ_K
-        and cb_row["min_dim"] == cb_row["max_dim"] == PQ_D
-    )
-    return c, cb, c_row, cb_row, ok
-
-
 def load_ann_index(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame, str]:
-    """The apply-only artifact read (l26c load-audit lesson): re-verify
-    the publish audit's cheap structural half (`_audit_ann_shape`)
-    before trusting the index; a published dir that violates it was
-    planted or tampered with and is refused loudly. Returns (centroids,
-    codebook, codes, path); the code table is returned lazily so the
-    caller's cell filter prunes partitions."""
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The apply-only artifact read. A published dir that does not match
+    its manifest was planted or tampered with: `artifacts.publish`
+    refuses it loudly, with no Spark job. Returns (centroids, codebook,
+    codes), lazily, so the caller's cell filter prunes partitions."""
     import os
 
     path = publish_ann_index(spark, sf_dir)
-    c, cb, c_row, cb_row, ok = _audit_ann_shape(spark, path)
-    if not ok:
-        raise ValueError(
-            f"published ANN index at {path} violates its audit contract "
-            f"(centroids {tuple(c_row)}, codebook {tuple(cb_row)}) — "
-            "artifact tampered or stale; delete it to rebuild"
-        )
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    return c, cb, codes, path
+    return tuple(
+        spark.read.parquet(os.path.join(path, name))
+        for name in ("centroids", "codebook", "codes")
+    )
 
 
 def _l3f_km_ctes() -> str:
@@ -1040,7 +1017,7 @@ _L3F_ORACLE = f"""
     tags=("llm", "vector", "artifact"),
 )
 def ann_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cents, subcb, codes, _path = load_ann_index(spark, sf_dir)
+    cents, subcb, codes = load_ann_index(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double().alias("v")
     )

@@ -1504,7 +1504,7 @@ def _encode_corpus(
 
 def _merge_artifact_base(sf_dir: str) -> str:
     """Keyed by the trainer config: merge rounds, vocab words."""
-    config = f"bpe-v1-r{BPE_ROUNDS}-w{BPE_VOCAB_WORDS}"
+    config = f"bpe-v2-r{BPE_ROUNDS}-w{BPE_VOCAB_WORDS}"
     return artifact_dir(sf_dir, "documents", "mric_bpe_artifacts", config)
 
 
@@ -1530,7 +1530,8 @@ def publish_merge_table(spark: SparkSession, sf_dir: str) -> str:
 def _audit_merge_rows(rows) -> str | None:
     """The merge-table contract: exactly BPE_ROUNDS rows, ranks 1..N,
     non-null pair halves. Returns a description of the violation, or
-    None. Cheap (BPE_ROUNDS rows) — run at publish AND at every load."""
+    None. Cheap (BPE_ROUNDS rows) — run on the staged rows at publish;
+    a load trusts the published dir's manifest (`artifacts.publish`)."""
     ranks = sorted(r["rank"] for r in rows)
     if ranks != list(range(1, BPE_ROUNDS + 1)):
         return f"ranks={ranks}"
@@ -1543,19 +1544,11 @@ def load_merge_table(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
     """The apply-only artifact read: BPE_ROUNDS rows in rank order — the
     KB-sized file a tokenizer ships. No training stage anywhere on this
     path once the artifact exists (tests/test_llm.py pins that by making
-    training raise). The publish-time audit is RE-RUN here (r11 ADVICE):
-    a publish is only ever the audited rename, so a published dir that
-    fails the contract was planted or tampered with — refuse it loudly
+    training raise). A published dir that does not match its manifest
+    was planted or tampered with: `artifacts.publish` refuses it loudly
     rather than silently poisoning every downstream encode."""
     path = publish_merge_table(spark, sf_dir)
     rows = spark.read.parquet(path).orderBy("rank").collect()
-    err = _audit_merge_rows(rows)
-    if err:
-        raise ValueError(
-            f"published merge table at {path} violates its audit "
-            f"contract ({err}) — artifact tampered or stale; delete it "
-            f"to retrain"
-        )
     return [(r["a"], r["b"]) for r in rows]
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mric_bak_etl_spark.catalog import register
-from mric_bak_etl_spark.tables import load_table
+from mric_bak_etl_spark.tables import load_table, materialize, sized_parallelism
 
 
 @register(
@@ -137,6 +137,38 @@ def limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def global_row_number(df: DataFrame, n: int, *keys: str) -> DataFrame:
+    """``df`` plus ``rn``, its 1-based position in ``keys`` order, with
+    no single-partition window: range-partition into ``n`` partitions,
+    number rows locally, add each partition's prefix offset. ``keys``
+    must be a total order, so the numbering does not depend on where
+    the sampled range boundaries land."""
+    # Pin the partitioning ONCE: the offsets branch and the ranking
+    # branch must observe the SAME range boundaries — re-executing the
+    # range exchange per consumer re-samples boundaries independently
+    # (and AQE may re-coalesce), silently misaligning offsets with
+    # local ranks. materialize (localCheckpoint; persist on a cluster)
+    # freezes pid for both consumers.
+    parts = materialize(
+        df.repartitionByRange(n, *keys).withColumn("pid", F.spark_partition_id())
+    )
+    counts = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
+    # Offsets: cumulative counts over the partition-count-sized table —
+    # the single-task window here ranges over ~dozens of rows (one per
+    # partition), never over data.
+    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = counts.select(
+        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("off")
+    )
+    w_local = Window.partitionBy("pid").orderBy(*keys)
+    return (
+        parts.withColumn("local_rn", F.row_number().over(w_local))
+        .join(F.broadcast(offsets), "pid")
+        .withColumn("rn", (F.col("local_rn") + F.col("off")).cast("bigint"))
+        .drop("pid", "local_rn", "off")
+    )
+
+
 @register(
     "o5_distributed_row_number",
     oracle="""
@@ -164,44 +196,14 @@ def limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sort", "scale"),
 )
 def distributed_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mric_bak_etl_spark.tables import sized_parallelism
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    from mric_bak_etl_spark.tables import materialize
-
     n = sized_parallelism(sf_dir, "orders")
-    # Pin the partitioning ONCE: the offsets branch and the ranking
-    # branch must observe the SAME range boundaries — re-executing the
-    # range exchange per consumer re-samples boundaries independently
-    # (and AQE may re-coalesce), silently misaligning offsets with
-    # local ranks. materialize (localCheckpoint; persist on a cluster)
-    # freezes pid for both consumers.
-    parts = materialize(
-        o.repartitionByRange(n, "o_orderdate", "o_orderkey").withColumn(
-            "pid", F.spark_partition_id()
-        )
+    ranked = global_row_number(o, n, "o_orderdate", "o_orderkey")
+    return ranked.select("rn", "o_orderkey", "o_totalprice").filter(
+        F.col("rn") % 97 == 0
     )
-    counts = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    # Offsets: cumulative counts over the partition-count-sized table —
-    # the single-task window here ranges over ~dozens of rows (one per
-    # partition), never over data.
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("off")
-    )
-    w_local = Window.partitionBy("pid").orderBy("o_orderdate", "o_orderkey")
-    ranked = (
-        parts.withColumn("local_rn", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), "pid")
-        .select(
-            (F.col("local_rn") + F.col("off")).cast("bigint").alias("rn"),
-            "o_orderkey",
-            "o_totalprice",
-        )
-    )
-    return ranked.filter(F.col("rn") % 97 == 0)
 
 
 @register(

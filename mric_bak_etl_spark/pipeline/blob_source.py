@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from mric_bak_etl_spark.catalog import register
+from mric_bak_etl_spark.pipeline.manifest import filter_snapshots, parse_listing_lines
 
 N_PARTITIONS = 4
 ROWS_PER_PARTITION = 75
@@ -91,7 +92,7 @@ def register_blob_listing_source(spark: SparkSession) -> None:
     SELECT CAST(count(*) AS BIGINT) AS n_zips,
            max(name)                AS latest,
            CAST(sum(bytes) AS BIGINT) AS total_bytes
-    FROM parsed WHERE name LIKE '%.zip'
+    FROM parsed WHERE contains(name, '.zip')
     """,
     doc="S12: custom Python DataSource (Spark 4 DataSource API) — the "
     "reference's azcopy listing (src/bak_unload.ps1:22-37) as a real "
@@ -109,12 +110,10 @@ def python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_blob_listing_source(spark)
     listing = spark.read.format("blob_listing").load()
-    parsed = listing.select(
-        F.substring(F.split("value", ";").getItem(0), 7, 1000).alias("name"),
-        F.split("value", ": ").getItem(2).cast("bigint").alias("bytes"),
-    )
-    return parsed.filter(F.col("name").endswith(".zip")).agg(
+    return filter_snapshots(parse_listing_lines(listing)).agg(
         F.count(F.lit(1)).alias("n_zips"),
         F.max("name").alias("latest"),
-        F.sum("bytes").cast("bigint").alias("total_bytes"),
+        F.sum(F.split("value", ": ").getItem(2).cast("bigint")).alias(
+            "total_bytes"
+        ),
     )

@@ -55,15 +55,16 @@ def manifest_from_directory(spark: SparkSession, path: str, glob: str | None = N
 
 
 def parse_listing_lines(listing: DataFrame, value_col: str = "value") -> DataFrame:
-    """R2: parse raw azcopy-style text lines into a ``name`` column.
+    """R2: parse raw azcopy-style text lines into a ``name`` column,
+    added beside the listing's own columns.
 
     Reference parse: per line, take ``split(';')[0]`` then drop the 6-char
     ``INFO: `` prefix (`src/bak_unload.ps1:29-35`). Same two steps,
     codegen'd: split + substring.
     """
     first_field = F.split(F.col(value_col), ";").getItem(0)
-    return listing.select(
-        F.substring(first_field, LISTING_PREFIX_LEN + 1, 2**31 - 1).alias("name")
+    return listing.withColumn(
+        "name", F.substring(first_field, LISTING_PREFIX_LEN + 1, 2**31 - 1)
     )
 
 

@@ -127,115 +127,6 @@ def stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# T9: transformWithStateInPandas — the Spark 4 arbitrary-state API
-# (successor to applyInPandasWithState above: typed state primitives
-# (ValueState/ListState/MapState with per-state TTL), timers, and
-# initial-state bootstrap, all executor-side).
-
-
-class UserTotalsProcessor:
-    """Per-user (n_events, total_value) via a typed ValueState.
-
-    Defined lazily as a StatefulProcessor subclass inside a factory so
-    importing this module never hard-depends on the Spark 4 streaming
-    stateful API surface.
-    """
-
-    def __new__(cls):
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class _Proc(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                # TTL (ttlDurationMs) is the state bound at 100 TB/day —
-                # unbounded key cardinality with no TTL is the OOM path.
-                self._totals = handle.getValueState("totals", "n long, total double")
-
-            def handleInputRows(self, key, rows, timerValues):
-                import pandas as pd
-
-                prev = self._totals.get()
-                n, total = prev if prev is not None else (0, 0.0)
-                for pdf in rows:
-                    n += len(pdf)
-                    total += float(pdf["value"].sum())
-                self._totals.update((n, total))
-                # Raw total; F.round in the consumer (see running_totals).
-                yield pd.DataFrame(
-                    {
-                        "user_id": [key[0]],
-                        "n_events": [n],
-                        "total_value": [total],
-                    }
-                )
-
-            def close(self) -> None:
-                pass
-
-        return _Proc()
-
-
-def transform_with_state_totals(events_stream: DataFrame) -> DataFrame:
-    """Wire the Spark 4 stateful processor over a streaming events frame."""
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=UserTotalsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T9 (NOT catalog-registered): transformWithStateInPandas — Spark 4
-    arbitrary-state v2, the typed successor to t6's applyInPandasWithState
-    (ValueState/ListState/MapState with per-state TTL, timers,
-    initial-state bootstrap; RocksDB-backed state sharded on the key).
-
-    Gated OUT of the catalog: the API's streaming Python driver worker
-    requires google.protobuf, absent from this container (no installs) —
-    verified failing with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE.
-    tests/test_streaming.py::test_transform_with_state_totals runs this
-    end-to-end whenever protobuf IS available, asserting equality with the
-    batch aggregate (same oracle as t6); t6 remains the driver-verified
-    stateful entry.
-    """
-    from mric_bak_etl_spark.streaming.windows import stream_events
-
-    out = transform_with_state_totals(stream_events(spark, sf_dir))
-    ckpt = scratch_dir("t9_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t9_sink")
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(ckpt, "state"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = spark.table("t9_sink")
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        sink.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "n_events",
-            F.round("total_value", 4).alias("total_value"),
-        )
-        .orderBy("user_id")
-    )
-
-
 def make_versioned_merge_sink(base: str, state: dict[str, int], merge):
     """The versioned MERGE sink shared by t10 and t13b: each batch's
     next version is ``merge(batch_df, cur)`` written whole, where

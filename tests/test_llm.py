@@ -1043,6 +1043,99 @@ def test_bpe_load_audit_refuses_planted_artifact(
     assert leftovers == [], f"lost-race staging dirs leaked: {leftovers}"
 
 
+def test_publish_verifies_an_existing_target_against_its_manifest(tmp_path):
+    """The one load check, on the filesystem alone: an intact published
+    dir is returned without a rebuild (Hadoop's ``.crc`` side files are
+    not part of it); a missing manifest, a changed size, a changed
+    parquet footer or an unlisted file is refused."""
+    import os
+    import shutil
+
+    from mric_bak_etl_spark import artifacts
+
+    target = str(tmp_path / "published")
+    part = os.path.join(target, "t", "part-0.parquet")
+    footer = b"footer" + (6).to_bytes(4, "little") + b"PAR1"
+
+    def write(staging):
+        os.makedirs(os.path.join(staging, "t"))
+        with open(os.path.join(staging, "t", "part-0.parquet"), "wb") as fh:
+            fh.write(b"PAR1rows" + footer)
+        with open(os.path.join(staging, "t", ".part-0.parquet.crc"), "wb"):
+            pass
+
+    def rebuild(_staging):
+        raise AssertionError("an intact published dir was rebuilt")
+
+    def rewrite(path, offset, data):
+        with open(path, "r+b") as fh:
+            fh.seek(offset)
+            fh.write(data)
+
+    assert artifacts.publish(target, write) == target
+    assert artifacts.publish(target, rebuild) == target
+    os.remove(os.path.join(target, "t", ".part-0.parquet.crc"))
+    assert artifacts.publish(target, rebuild) == target
+
+    tampers = [
+        lambda: os.remove(os.path.join(target, artifacts.MANIFEST)),
+        lambda: rewrite(part, len(b"PAR1rows") + len(footer), b"!"),
+        lambda: rewrite(part, len(b"PAR1rows"), b"F"),  # same size
+        lambda: open(os.path.join(target, "t", "extra"), "wb").close(),
+    ]
+    for tamper in tampers:
+        shutil.rmtree(target)
+        artifacts.publish(target, write)
+        tamper()
+        with pytest.raises(ValueError, match="violates its audit contract"):
+            artifacts.publish(target, rebuild)
+
+
+@pytest.mark.parametrize(
+    "query, base_fn, subdir",
+    [
+        ("l42b_incremental_crawl_persisted", "_crawl_index_artifact_base", "bands"),
+        ("m14_zip_persisted_manifest", "_archive_artifact_base", ""),
+    ],
+    ids=["l42b", "m14"],
+)
+def test_load_refuses_published_artifact_with_a_halved_part_file(
+    spark, sf_dir, monkeypatch, tmp_path, query, base_fn, subdir
+):
+    """A published index or archive column whose part file lost half its
+    rows after the publish is refused at load. The ``.crc`` side files
+    go first: with them, Hadoop's own checksum fails the read before any
+    engine check runs, and the intact copy must still load without
+    them."""
+    import os
+    import shutil
+    import sys
+
+    import pyarrow.parquet as pq
+
+    from mric_bak_etl_spark.catalog import all_specs
+
+    build = all_specs()[query].builder
+    mod = sys.modules[build.__module__]
+    build(spark, sf_dir)  # publishes the artifact, or reuses it
+    published = os.path.join(getattr(mod, base_fn)(sf_dir), "published")
+    monkeypatch.setattr(mod, base_fn, lambda _sf: str(tmp_path / "art"))
+    target = str(tmp_path / "art" / "published")
+    shutil.copytree(published, target)
+    d = os.path.join(target, subdir)
+    for crc in [f for f in os.listdir(d) if f.endswith(".crc")]:
+        os.remove(os.path.join(d, crc))
+    build(spark, sf_dir)  # the intact copy loads
+
+    parts = [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+    biggest = max(parts, key=lambda p: pq.read_metadata(p).num_rows)
+    table = pq.read_table(biggest)
+    assert table.num_rows >= 2
+    pq.write_table(table.slice(0, table.num_rows // 2), biggest)
+    with pytest.raises(ValueError, match="violates its audit contract"):
+        build(spark, sf_dir)
+
+
 def test_m14_persisted_archive_is_decode_only(spark, sf_dir, monkeypatch):
     """m14's contract (r11 verdict task 3, the l26c shape on media):
     pack once, publish, then every call is decode-only — pinned by

@@ -288,30 +288,6 @@ def test_foreachbatch_idempotent_sink(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out).count() == n_first
 
 
-def test_transform_with_state_totals(spark, sf_dir):
-    # Spark 4 transformWithStateInPandas needs google.protobuf for its
-    # streaming Python driver worker; absent in this container → skip
-    # (the applyInPandasWithState path, t6, covers stateful semantics).
-    pytest.importorskip("google.protobuf")
-    from mric_bak_etl_spark.streaming.stateful import transform_with_state
-
-    got = {
-        (r["user_id"], r["n_events"], r["total_value"])
-        for r in transform_with_state(spark, sf_dir).collect()
-    }
-    want = {
-        (r["user_id"], r["n_events"], r["total_value"])
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_append_mode_emits_only_watermark_closed_windows(spark, tmp_path):
     # Append-mode windowed aggregation: a window is emitted exactly once,
     # and only after the watermark passes its end — the production
